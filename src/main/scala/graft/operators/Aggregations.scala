@@ -198,11 +198,10 @@ object Aggregations extends QModule {
     // over the reconstructed mart — the serving layer's exact input, so
     // the full compose (argmax/argmin with the lowest-numeric-value
     // tie-break, max-draws, last-update) is hash-checked wholesale, not
-    // just its g4/g5 components. The mart is localCheckpoint'd first:
-    // statistic() fans out into three branches (most/least/scalars), and
-    // in production statistic reads the MATERIALIZED mart table — the
-    // reference's precompute-then-serve split — so re-deriving the
-    // lineage three times would misstate the serving cost shape.
+    // just its g4/g5 components. The mart is localCheckpoint'd first: in
+    // production statistic (one aggregate) reads the MATERIALIZED mart
+    // table — the reference's precompute-then-serve split — so timing
+    // the mart's lineage here would misstate the serving cost shape.
     Q("serve_statistic", (s, dir) =>
       graft.pipeline.Lottery.statistic(
         reconstructedMart(s, dir).localCheckpoint()),

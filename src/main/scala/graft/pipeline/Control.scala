@@ -1,12 +1,21 @@
 package graft.pipeline
 
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The reference's `control` database surface (SURVEY §0, §2.1-§2.2):
   * key-value config (S6) and the process_log run log (K5), re-expressed as
-  * a config map + an append-only parquet run log.
+  * a config map + an append-only parquet run log. The log is a local
+  * directory of single-row parquet files written by the driver; its gates
+  * read the directory listing only (see `logStatus`).
   */
 object Control {
 
@@ -63,14 +72,97 @@ object Control {
     StructField("ended_at", TimestampType),
     StructField("message", StringType)))
 
+  /** `processLogSchema` as the parquet schema of one log file: the types
+    * Spark's own writer would pick, timestamps as UTC-adjusted micros. */
+  private val logFileSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional int64 process_id;
+      |  optional int32 source_id;
+      |  optional binary process_code (STRING);
+      |  optional binary status (STRING);
+      |  optional int64 started_at (TIMESTAMP(MICROS,true));
+      |  optional int64 ended_at (TIMESTAMP(MICROS,true));
+      |  optional binary message (STRING);
+      |}""".stripMargin)
+
+  /** One log file's name: `<ended_at millis>-<process_id>-<process_code>-<status>.parquet`.
+    * Everything the gates need is in the name, so they read a listing and
+    * never open a file. */
+  private val logFileName = """(\d+)-(\d+)-(\w+)-(\w+)\.parquet""".r
+
+  private final case class LogEntry(endedMs: Long, processId: Long, code: String,
+                                    status: String) {
+    /** Latest-row order: ended_at, then process_id, then a terminal row
+      * over its own RUNNING row logged in the same millisecond. */
+    def order: (Long, Long, Int) = (endedMs, processId, if (status == "RUNNING") 0 else 1)
+  }
+
+  /** An in-flight id claim: created with CREATE_NEW before the RUNNING row
+    * is written, deleted once that row's file is in place. The leading
+    * `_` hides it from Spark's file listing. */
+  private val claimName = """_claim-(\d+)""".r
+
+  /** One directory listing: the log entries and the claimed ids. Spark's
+    * hidden files (`.`/`_` prefixes: temp files, checksums, claims) are
+    * not rows; any other name that does not parse fails loudly rather than
+    * being skipped by a gate. */
+  private def listLog(logDir: String): (Seq[LogEntry], Seq[Long]) = {
+    val names = Option(new java.io.File(logDir).list()).map(_.toSeq).getOrElse(Nil)
+    val entries = names.filterNot(n => n.startsWith(".") || n.startsWith("_")).map {
+      case logFileName(ms, id, code, status) => LogEntry(ms.toLong, id.toLong, code, status)
+      case other => throw new IllegalStateException(
+        s"process_log $logDir: unrecognised file $other")
+    }
+    (entries, names.collect { case claimName(id) => id.toLong })
+  }
+
   /** Generated-key analog (ETLMain.java:177-178 reads the AUTO_INCREMENT
-    * key back): next process_id = max existing + 1. The log is run
-    * metadata — config-sized — so the scan is trivial; like the
-    * reference's MySQL key this assumes one orchestrator appending. */
-  private def nextProcessId(spark: SparkSession, logDir: String): Long =
-    if (!new java.io.File(logDir).exists()) 1L
-    else spark.read.schema(processLogSchema).parquet(logDir)
-      .agg(coalesce(max(col("process_id")), lit(0L))).collect()(0).getLong(0) + 1
+    * key back): claim max(listed ids, claimed ids) + 1. The claim file is
+    * created with CREATE_NEW, so of two orchestrators racing for one id
+    * exactly one wins; the loser re-lists and tries the next. A winner
+    * also re-lists: an id whose claim was already released has its
+    * RUNNING file in place by then, so it is seen and skipped. Returns
+    * the id and its claim file, which the caller deletes once the RUNNING
+    * file is written (a crash in between leaves a claim that only burns
+    * its id). */
+  private def claimProcessId(logDir: String): (Long, java.nio.file.Path) = {
+    Files.createDirectories(Paths.get(logDir))
+    @scala.annotation.tailrec
+    def attempt(tries: Int): (Long, java.nio.file.Path) = {
+      require(tries < 1000, s"process_log $logDir: no process_id claimed in $tries tries")
+      val (entries, claimed) = listLog(logDir)
+      val id = (entries.map(_.processId) ++ claimed).foldLeft(0L)(math.max) + 1
+      val claim = Paths.get(logDir, s"_claim-$id")
+      val won =
+        try { Files.createFile(claim); true }
+        catch { case _: FileAlreadyExistsException => false }
+      if (won && !listLog(logDir)._1.exists(_.processId == id)) (id, claim)
+      else {
+        if (won) Files.delete(claim)
+        attempt(tries + 1)
+      }
+    }
+    attempt(0)
+  }
+
+  private def micros(ts: java.sql.Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
+
+  /** Write one row as `logDir/name`: parquet written by the driver to a
+    * hidden temp name, then renamed in through the Hadoop FileSystem, which
+    * moves the file's `.crc` with it. A reader never sees a partial file. */
+  private def writeLogFile(spark: SparkSession, logDir: String, name: String,
+                           row: Group): Unit = {
+    val dir = new Path(logDir)
+    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    // one row per file: a dictionary page would only add bytes
+    val writer = ExampleParquetWriter.builder(tmp).withConf(conf)
+      .withType(logFileSchema).withDictionaryEncoding(false).build()
+    try writer.write(row) finally writer.close()
+    val fs = dir.getFileSystem(conf)
+    require(fs.rename(tmp, new Path(dir, name)), s"process_log $logDir: rename to $name failed")
+  }
 
   /** K5/process_log analog: append one status row. The reference INSERTs
     * a RUNNING row, reads back its generated process_id, and later
@@ -78,30 +170,41 @@ object Control {
     * the RUNNING append allocates and RETURNS the process_id, and the
     * terminal SUCCESS/FAIL append passes it back in — same correlation,
     * immutable rows (current status = latest row per process_code, S7's
-    * existence probe below). */
+    * gate below).
+    *
+    * Storage: one single-row parquet file per call, written by the driver
+    * (no Spark job) and named by `logFileName`, so
+    * `spark.read.schema(processLogSchema).parquet(logDir)` reads the whole
+    * log while the gates read only the directory listing. `processCode`
+    * and `status` are word characters (`\w+`): they are part of the name. */
   def logStatus(spark: SparkSession, logDir: String, processCode: String,
                 status: String, message: String,
                 startedAt: java.sql.Timestamp = null,
                 sourceId: Int = 0, processId: Long = -1L): Long = {
-    import spark.implicits._
+    require(processCode.matches("\\w+") && status.matches("\\w+"),
+      s"process_code and status must be word characters: $processCode, $status")
+    val claim = if (processId >= 0) None else Some(claimProcessId(logDir))
+    val id = claim.fold(processId)(_._1)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val started = Option(startedAt).getOrElse(now)
-    val id = if (processId >= 0) processId else nextProcessId(spark, logDir)
-    Seq((id, sourceId, processCode, status, started, now, message))
-      .toDF("process_id", "source_id", "process_code", "status",
-        "started_at", "ended_at", "message")
-      .write.mode("append").parquet(logDir)
+    val row = new SimpleGroupFactory(logFileSchema).newGroup()
+      .append("process_id", id)
+      .append("source_id", sourceId)
+      .append("process_code", processCode)
+      .append("status", status)
+      .append("started_at", micros(Option(startedAt).getOrElse(now)))
+      .append("ended_at", micros(now))
+    Option(message).foreach(row.append("message", _))
+    writeLogFile(spark, logDir, s"${now.getTime}-$id-$processCode-$status.parquet", row)
+    claim.foreach { case (_, path) => Files.delete(path) }
     id
   }
 
   /** S7: stage-dependency gate — latest status of `processCode` is SUCCESS
-    * (StagingController.java:41-67 / ETLMain.java:98-111 gating). */
+    * (StagingController.java:41-67 / ETLMain.java:98-111 gating). Reads
+    * one directory listing; `spark` is unused and kept so the log's
+    * functions share one signature. */
   def lastStatusIsSuccess(spark: SparkSession, logDir: String,
-                          processCode: String): Boolean = {
-    val last = spark.read.schema(processLogSchema).parquet(logDir)
-      .filter(col("process_code") === processCode)
-      .orderBy(col("ended_at").desc, col("process_id").desc)
-      .limit(1).collect()
-    last.nonEmpty && last.head.getAs[String]("status") == "SUCCESS"
-  }
+                          processCode: String): Boolean =
+    listLog(logDir)._1.filter(_.code == processCode).maxByOption(_.order)
+      .exists(_.status == "SUCCESS")
 }

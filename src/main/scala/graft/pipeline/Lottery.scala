@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -117,6 +117,23 @@ object Lottery {
       col("last_appeared_date"))
   }
 
+  /** dim_number for a load into an existing warehouse: `fresh` (a
+    * `dimNumber` recompute) where every number in `kept` (number_value →
+    * number_key, as stored) keeps its key, since the facts appended so far
+    * reference it; new numbers get the keys after the largest kept one, in
+    * numeric order. `dimNumber`'s row_number alone would shift every key
+    * above a new number and re-attribute the old facts (the reference's
+    * AUTO_INCREMENT keys never move either). `kept` is ≤100 entries. */
+  def keepNumberKeys(kept: Map[String, Int], fresh: DataFrame): DataFrame =
+    if (kept.isEmpty) fresh
+    else {
+      val old = try_element_at(typedLit(kept), col("number_value"))
+      val newRank = row_number().over(
+        Window.partitionBy(old.isNull).orderBy(col("number_value").cast("int")))
+      fresh.select(coalesce(old, lit(kept.values.max) + newRank).as("number_key") +:
+        fresh.columns.filter(_ != "number_key").toSeq.map(col): _*)
+    }
+
   /** fact_prize (ETLMain.java:342-416): grain (date_key, number_key);
     * total_draws = transform rows that day (G1, the probability denominator
     * ETLMain.java:363-368); probability = 1/total_draws per draw (X11);
@@ -174,22 +191,28 @@ object Lottery {
 
   /** GET /mart/statistic (MartRepository.java:14-33): the four dashboard
     * scalars. Tie-break = lowest numeric value (the reference JPQL throws
-    * on ties, SURVEY §7.2). */
+    * on ties, SURVEY §7.2).
+    *
+    * One aggregate, no joins. Each arg pick is the `min` of a struct whose
+    * `key` fields are the sort keys, compared in order, nulls first:
+    * `mostNumber` orders by total_occurrences descending with nulls last
+    * (the `isNull` flag), then int(number_value) ascending with nulls
+    * first; `leastNumber` orders by both ascending with nulls first. An
+    * empty mart gives no row (the `rows > 0` filter), not a row of nulls. */
   def statistic(martDf: DataFrame): DataFrame = {
-    val most = martDf
-      .orderBy(col("total_occurrences").desc, col("number_value").cast("int").asc)
-      .select(col("number_value")).limit(1)
-    val least = martDf
-      .orderBy(col("total_occurrences").asc, col("number_value").cast("int").asc)
-      .select(col("number_value")).limit(1)
-    val scalars = martDf.agg(
-      max(col("total_draws")).as("totalOccurrences"),
-      max(col("last_appeared_date")).as("lastUpdate"))
-    scalars
-      .crossJoin(most.withColumnRenamed("number_value", "mostNumber"))
-      .crossJoin(least.withColumnRenamed("number_value", "leastNumber"))
-      .select(col("totalOccurrences"), col("mostNumber"), col("leastNumber"),
-              col("lastUpdate"))
+    val occ = col("total_occurrences")
+    val num = col("number_value")
+    def pick(keys: Column*): Column =
+      min(struct(struct(keys :+ num.cast("int"): _*).as("key"), num.as("value")))
+        .getField("value")
+    martDf.agg(
+        max(col("total_draws")).as("totalOccurrences"),
+        pick(occ.isNull, -occ).as("mostNumber"),
+        pick(occ).as("leastNumber"),
+        max(col("last_appeared_date")).as("lastUpdate"),
+        count(lit(1)).as("rows"))
+      .filter(col("rows") > 0)
+      .drop("rows")
   }
 
   /** Full P2→mart DAG from a crawler-CSV directory. */

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import graft.sources.Upsert
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Orchestration of the full P2→P4+mart chain (SURVEY §3.1 restatement):
@@ -12,6 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * an explicit precondition (so a failed run can be diagnosed and re-run),
   * and every load is idempotent (anti-join upserts), so re-running after a
   * crash is safe — the property the reference's gating exists to protect.
+  *
+  * Each stage is one Spark execution (P4: one per table) and nothing
+  * else: the run log is written by the driver, one small parquet file per
+  * status row, and the gates read only the log's directory listing (see
+  * `Control.logStatus`), so bookkeeping runs no Spark job.
   */
 object Pipeline {
 
@@ -29,6 +37,24 @@ object Pipeline {
     if (new java.io.File(path).exists())
       spark.read.schema(like.schema).parquet(path)
     else like.limit(0)
+
+  /** number_value → number_key of a stored dim_number, read on the driver
+    * (≤100 rows, no Spark job), so the recompute that overwrites the
+    * directory does not read it. Empty when there is none yet. */
+  private def storedNumberKeys(spark: SparkSession, dir: String): Map[String, Int] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    if (!fs.exists(path)) Map.empty
+    else fs.listStatus(path).iterator
+      .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .flatMap { file =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => g.getString("number_value", 0) -> g.getInteger("number_key", 0)).toList
+        finally reader.close()
+      }.toMap
+  }
 
   /** Run the whole chain from a crawler-CSV directory into a parquet
     * warehouse. Dims/facts are loaded idempotently (A1-A3); mart is a full
@@ -84,26 +110,26 @@ object Pipeline {
       "P3 gate failed (LotteryTransform.java:26-40 semantics)")
 
     gate("P4") {
+      // Each append reads the directory it writes to, with no cache in
+      // between: the input file list is fixed when the query is planned,
+      // and the anti-join's stages finish before the job commits its new
+      // files, so a load never sees its own output.
       val tr = spark.read.parquet(lay.transform)
       val dd = Lottery.dimDate(tr)
-      val newDates = Upsert.newRows(readOrEmpty(spark, lay.dimDate, dd), dd,
-        Seq("date_key")).cache()
-      newDates.count()
-      newDates.write.mode("append").parquet(lay.dimDate)
-      newDates.unpersist()
+      Upsert.newRows(readOrEmpty(spark, lay.dimDate, dd), dd, Seq("date_key"))
+        .write.mode("append").parquet(lay.dimDate)
       // dim_number is a full aggregate (last_appeared_date moves) →
-      // deterministic recompute, the K4-update canonicalization
-      val dn = Lottery.dimNumber(tr)
+      // deterministic recompute, the K4-update canonicalization, except
+      // that a number keeps the key the appended facts already carry
+      val dn = Lottery.keepNumberKeys(storedNumberKeys(spark, lay.dimNumber),
+        Lottery.dimNumber(tr))
       dn.write.mode("overwrite").parquet(lay.dimNumber)
       val fp = Lottery.factPrize(tr, dn)
-      // materialize before appending into the directory we just read from
       // fact-sized key set: shuffled anti-join, never broadcast (at scale
       // the existing-facts projection is itself fact-sized)
-      val newFacts = Upsert.newRows(readOrEmpty(spark, lay.factPrize, fp), fp,
-        Seq("date_key", "number_key"), broadcastExisting = false).cache()
-      newFacts.count()
-      newFacts.write.mode("append").parquet(lay.factPrize)
-      newFacts.unpersist()
+      Upsert.newRows(readOrEmpty(spark, lay.factPrize, fp), fp,
+        Seq("date_key", "number_key"), broadcastExisting = false)
+        .write.mode("append").parquet(lay.factPrize)
     }
 
     gate("MART") {

@@ -17,8 +17,9 @@ import org.apache.spark.sql.DataFrame
   * one collect per pipeline run, served from driver memory after.
   * Refreshing = re-running the pipeline and re-registering, exactly the
   * reference's precompute-then-serve split (its controller reads a table
-  * the ETL job rebuilt). Row JSON comes from `df.toJSON` — Spark's own
-  * schema-driven serialization, not hand-rolled rendering.
+  * the ETL job rebuilt). Row JSON comes from `df.toJSON` and its column
+  * form `to_json(struct(*))` — Spark's own schema-driven serialization,
+  * not hand-rolled rendering.
   */
 object Serving {
 
@@ -26,18 +27,17 @@ object Serving {
   def snapshot(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
 
-  /** Keyed snapshot for parameterized lookups: key-column string value →
-    * JSON array of that key's rows. One collect at registration; every
-    * HTTP hit is a driver-side hash-map get (the serving analog of the S5
-    * point lookup — never a distributed query per request). */
-  def keyedSnapshot(df: DataFrame, keyCol: String): Map[String, String] = {
-    import org.apache.spark.sql.functions.col
-    df.select(col(keyCol).cast("string").as("__k"),
-        org.apache.spark.sql.functions.to_json(
-          org.apache.spark.sql.functions.struct(df.columns.toIndexedSeq.map(col): _*)).as("__j"))
+  /** Each row's JSON (the same bytes as its `snapshot` entry), in row
+    * order, with its values of `keyCols` as strings: ONE collect feeds a
+    * DataFrame's whole-table route and all of its keyed lookups. */
+  private def keyedRows(df: DataFrame,
+                        keyCols: Seq[String]): Array[(Map[String, String], String)] = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    df.select(keyCols.map(k => col(k).cast("string")) :+
+        to_json(struct(df.columns.toIndexedSeq.map(col): _*)): _*)
       .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(_.getString(1)).mkString("[", ",", "]") }
+      .map(r => (keyCols.zipWithIndex.map { case (k, i) => k -> r.getString(i) }.toMap,
+        r.getString(keyCols.size)))
   }
 
   /** Start serving `routes` (path → whole-table snapshot) and `lookups`
@@ -46,10 +46,30 @@ object Serving {
     * on `port` (0 = ephemeral; read the bound port off the returned
     * server). Binds loopback by default — an unauthenticated snapshot
     * server has no business on all interfaces; pass an explicit
-    * `bindHost` to expose it deliberately. Caller stops it. */
+    * `bindHost` to expose it deliberately. Caller stops it.
+    *
+    * Snapshots are taken at registration with one collect per distinct
+    * DataFrame (by reference): a route and a lookup over the same mart
+    * share it. Every HTTP hit is then a driver-side map get — the serving
+    * analog of the S5 point lookup, never a distributed query per request.
+    *
+    * The JDK server writes headers and body separately, so with Nagle on
+    * a kept-alive client's next request waits ~40 ms on the peer's delayed
+    * ACK. Run the JVM with `-Dsun.net.httpserver.nodelay=true` to send
+    * with TCP_NODELAY; the JDK reads that property once, when the first
+    * server in the JVM is created. */
   def start(port: Int, routes: Map[String, DataFrame],
             lookups: Map[String, (DataFrame, String)] = Map.empty,
             bindHost: String = "127.0.0.1"): HttpServer = {
+    // one collect per distinct DataFrame (by reference), carrying the key
+    // columns of every lookup over it
+    val snapshots = new java.util.IdentityHashMap[DataFrame, Array[(Map[String, String], String)]]()
+    (routes.values ++ lookups.values.map(_._1)).foreach { df =>
+      if (!snapshots.containsKey(df))
+        snapshots.put(df, keyedRows(df,
+          lookups.values.collect { case (d, k) if d eq df => k }.toSeq.distinct))
+    }
+
     val server = HttpServer.create(new InetSocketAddress(bindHost, port), 0)
 
     def respond(ex: HttpExchange, status: Int, body: Option[Array[Byte]]): Unit =
@@ -64,7 +84,7 @@ object Serving {
       } finally ex.close()
 
     routes.foreach { case (path, df) =>
-      val body = snapshot(df).getBytes(UTF_8)
+      val body = snapshots.get(df).map(_._2).mkString("[", ",", "]").getBytes(UTF_8)
       server.createContext(path, (ex: HttpExchange) => {
         if (ex.getRequestMethod == "GET" && ex.getRequestURI.getPath == path)
           respond(ex, 200, Some(body))
@@ -73,7 +93,8 @@ object Serving {
     }
 
     lookups.foreach { case (path, (df, keyCol)) =>
-      val byKey = keyedSnapshot(df, keyCol)
+      val byKey = snapshots.get(df).groupBy(_._1(keyCol))
+        .map { case (k, rows) => k -> rows.map(_._2).mkString("[", ",", "]") }
       server.createContext(path, (ex: HttpExchange) => {
         // real query-string parsing: split on '&', take key=value pairs —
         // extra or reordered params must not change which key is looked

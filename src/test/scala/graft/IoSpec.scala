@@ -253,6 +253,27 @@ class IoSpec extends SparkSpec {
       p2rows.forall(_.getAs[Int]("source_id") === 2))
   }
 
+  test("K5: concurrent orchestrators on one log never share a process_id") {
+    val logDir = tmp("log") + "/process_log"
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 8).map { i =>
+      new Thread(() => {
+        go.await()
+        ids.add(Control.logStatus(spark, logDir, s"P$i", "RUNNING", "start"))
+      })
+    }
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join())
+    assert(ids.size === 8, "a logStatus call failed")
+    assert(ids.toArray.distinct.length === 8, s"ids collided: $ids")
+    // every row landed under its own id, and no id claim is left behind
+    val log = spark.read.schema(Control.processLogSchema).parquet(logDir)
+    assert(log.select("process_id").distinct().count() === 8)
+    assert(!new java.io.File(logDir).list().exists(_.startsWith("_")))
+  }
+
   test("S6: config scans") {
     import spark.implicits._
     val kv = Seq(("db_host", "x"), ("staging_schema", "stg"))

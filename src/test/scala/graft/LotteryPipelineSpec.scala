@@ -94,6 +94,46 @@ class LotteryPipelineSpec extends SparkSpec {
     assert(r.getDate(3) === d("2025-10-26"))      // lastUpdate
   }
 
+  test("statistic: ties and nulls order as the sort-limit definition does; empty mart → no row") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // the definition statistic must match: argmax/argmin as ORDER BY …
+    // LIMIT 1 (DESC sorts nulls last, ASC nulls first), scalars as max
+    def sortLimit(m: org.apache.spark.sql.DataFrame) = {
+      def first(occ: org.apache.spark.sql.Column) = m
+        .orderBy(occ, col("number_value").cast("int").asc).select("number_value").head(1)
+        .headOption.map(_.getString(0))
+      if (m.isEmpty) Seq.empty
+      else {
+        val s = m.agg(max("total_draws"), max("last_appeared_date")).head()
+        Seq(Seq(s.get(0), first(col("total_occurrences").desc).orNull,
+          first(col("total_occurrences").asc).orNull, s.get(1)))
+      }
+    }
+    def mart(rows: (String, Option[Int])*) = rows.toDF("number_value", "occ")
+      .select(col("number_value"),
+        col("occ").cast("decimal(32,0)").as("total_occurrences"),
+        lit(7).as("total_draws"), lit(d("2025-10-26")).as("last_appeared_date"))
+    val cases = Seq(
+      // tie on the top count → lowest numeric value; "12" > "3" as ints
+      mart("12" -> Some(5), "3" -> Some(5), "40" -> Some(1), "7" -> Some(1)) -> ("3", "7"),
+      // a null count sorts last for most, first for least
+      mart("12" -> Some(5), "1" -> None, "40" -> Some(1)) -> ("12", "1"),
+      // a null number_value wins its tie (ASC nulls first)
+      mart((null, Some(5)), "8" -> Some(5), "2" -> Some(2)) -> (null, "2"),
+      // all counts null: both picks fall to the lowest number
+      mart("5" -> None, "4" -> None) -> ("4", "4"))
+    cases.foreach { case (m, (most, least)) =>
+      val got = orderedRows(Lottery.statistic(m))
+      assert(got === sortLimit(m))
+      assert(got === Seq(Seq(7, most, least, d("2025-10-26"))))
+    }
+    val empty = mart("1" -> Some(1)).limit(0)
+    assert(Lottery.statistic(empty).collect().isEmpty)
+    assert(Lottery.statistic(empty).columns.toSeq ===
+      Seq("totalOccurrences", "mostNumber", "leastNumber", "lastUpdate"))
+  }
+
   test("pipeline is idempotent under re-load (A1-A3 contract)") {
     import graft.sources.Upsert
     val dd = wh.dimDate

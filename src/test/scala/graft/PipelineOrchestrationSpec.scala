@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Control, Pipeline}
+import graft.pipeline.{Control, Lottery, Pipeline}
 import java.nio.file.Files
 
 /** SURVEY §3.1 end-to-end: gated P2→P4+mart orchestration into a parquet
@@ -38,6 +38,46 @@ class PipelineOrchestrationSpec extends SparkSpec {
       assert(rows.map(_.getAs[String]("status")).contains("RUNNING"), id)
       assert(rows.map(_.getAs[Int]("source_id")).distinct.length === 1, id)
     }
+  }
+
+  test("P4 appends a new day into the tables it reads; a re-run appends nothing") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("wh4")
+    val drop = base.resolve("drop")
+    Files.createDirectories(drop)
+    def copyIn(resource: String): Unit =
+      new java.io.File(getClass.getResource(resource).getPath).listFiles()
+        .foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    val root = base.resolve("wh").toString
+    val lay = Pipeline.Layout(root)
+
+    copyIn("/lottery")
+    Pipeline.runAll(spark, drop.toString, root)
+    copyIn("/lottery_next") // a 4th day lands in the drop
+    // 51 is a new number that sorts below 78: 78 keeps its number_key, so
+    // its earlier facts stay 78's and are not appended again under a new key
+    val mart = Pipeline.runAll(spark, drop.toString, root)
+    assert(mart.collect().map(r => r.getAs[String]("number_value") ->
+        r.getAs[java.math.BigDecimal]("total_occurrences").intValue).toMap ===
+      Map("9" -> 5, "33" -> 1, "45" -> 1, "51" -> 1, "78" -> 3))
+
+    // the truth, derived without the warehouse: distinct (day, number)
+    // pairs of the 4 days' transformed rows — 6 from the first 3 days,
+    // 3 from the 4th (09 drawn twice)
+    val pairs = Lottery.transform(Lottery.staging(spark, drop.toString))
+      .select("full_date", "number_value").distinct().count()
+    assert(pairs === 9)
+    def facts = spark.read.parquet(lay.factPrize)
+    assert(spark.read.parquet(lay.dimDate).count() === 4)
+    assert(facts.groupBy("date_key", "number_key").count()
+      .filter(col("count") > 1).count() === 0, "duplicate fact grain")
+    assert(facts.count() === pairs)
+
+    // same files again: nothing new, so nothing appended
+    val before = orderedRows(facts.orderBy("date_key", "number_key"))
+    Pipeline.runAll(spark, drop.toString, root)
+    assert(orderedRows(facts.orderBy("date_key", "number_key")) === before)
+    assert(spark.read.parquet(lay.dimDate).count() === 4)
   }
 
   test("Observation: stage metrics ride the write pass itself — no second count job") {

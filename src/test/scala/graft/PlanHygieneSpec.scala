@@ -538,9 +538,6 @@ class PlanHygieneSpec extends SparkSpec {
     "g29_kll_quantile_bound",
     // 1-row×1-row theta sketch algebra (corpus A sketch × corpus B sketch)
     "g31_theta_overlap_bound",
-    // statistic's three 1-row dashboard scalars composed by cross join
-    // over the checkpointed ≤100-row mart
-    "serve_statistic",
     // findAll payload over the same reconstructed mart: the identical
     // 1-row global-totals broadcast as g7_mart_aggregate
     "serve_mart_all",

@@ -74,4 +74,43 @@ class ServingSpec extends SparkSpec {
         s"server bound ${server.getAddress} — snapshots exposed beyond loopback")
     } finally server.stop(0)
   }
+
+  test("a route and a lookup over one DataFrame share one collect; bodies match snapshot") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val res = Lottery.run(spark, getClass.getResource("/lottery").getPath)
+    val collects = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val server = try {
+      val s = Serving.start(0, Map("/mart/all" -> res.mart, "/mart/statistic" -> res.statistic),
+        lookups = Map("/mart/find" -> (res.mart, "number_value")))
+      org.apache.spark.scheduler.GraftStageInfoAccess
+        .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      s
+    } finally spark.listenerManager.unregister(listener)
+    try {
+      assert(collects.get === 2, "one collect per distinct DataFrame")
+      val port = server.getAddress.getPort
+      val client = HttpClient.newHttpClient()
+      def get(path: String): String =
+        client.send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path")).build(),
+          HttpResponse.BodyHandlers.ofString()).body()
+      val all = get("/mart/all")
+      assert(all === Serving.snapshot(res.mart))
+      assert(get("/mart/statistic") === Serving.snapshot(res.statistic))
+      // each lookup serves exactly its row of the shared snapshot
+      val byNumber = all.drop(1).dropRight(1).split("(?<=\\}),(?=\\{)")
+      assert(byNumber.length === 4)
+      byNumber.foreach { row =>
+        val key = "\"number_value\":\"(\\d+)\"".r.findFirstMatchIn(row).get.group(1)
+        assert(get(s"/mart/find?number_value=$key") === s"[$row]")
+      }
+    } finally server.stop(0)
+  }
 }

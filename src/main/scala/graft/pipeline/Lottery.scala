@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,11 +34,17 @@ object Lottery {
 
   /** P2 staging load (StagingDW/.../CsvLoader.java:8-50): directory CSV scan,
     * header skip, short-row drop (F3), ingest timestamp. Spark's CSV reader
-    * natively scans the directory and tolerates the crawler's UTF-8 BOM. */
+    * natively scans the directory and tolerates the crawler's UTF-8 BOM.
+    * Only `*.csv` files are parsed, the files P1's gate and the reference's
+    * S2 scan accept. A crawler file is ~1 KB, so the parser's read buffer
+    * is 4K chars, not univocity's default 1M per file (the buffer bounds
+    * one read, not a field: longer fields still parse). */
   def staging(spark: SparkSession, csvDir: String): DataFrame =
     spark.read
       .option("header", "true")
       .option("encoding", "UTF-8")
+      .option("pathGlobFilter", "*.csv")
+      .option("inputBufferSize", "4096")
       .schema(crawlSchema)
       .csv(csvDir)
       .na.drop("any", Seq("prize", "number_value", "full_date"))
@@ -117,22 +123,26 @@ object Lottery {
       col("last_appeared_date"))
   }
 
-  /** dim_number for a load into an existing warehouse: `fresh` (a
-    * `dimNumber` recompute) where every number in `kept` (number_value →
-    * number_key, as stored) keeps its key, since the facts appended so far
-    * reference it; new numbers get the keys after the largest kept one, in
-    * numeric order. `dimNumber`'s row_number alone would shift every key
-    * above a new number and re-attribute the old facts (the reference's
-    * AUTO_INCREMENT keys never move either). `kept` is ≤100 entries. */
-  def keepNumberKeys(kept: Map[String, Int], fresh: DataFrame): DataFrame =
-    if (kept.isEmpty) fresh
-    else {
-      val old = try_element_at(typedLit(kept), col("number_value"))
-      val newRank = row_number().over(
-        Window.partitionBy(old.isNull).orderBy(col("number_value").cast("int")))
-      fresh.select(coalesce(old, lit(kept.values.max) + newRank).as("number_key") +:
-        fresh.columns.filter(_ != "number_key").toSeq.map(col): _*)
-    }
+  /** dim_number for a load into an existing warehouse: the collected rows
+    * of a `dimNumber` recompute, where every number in `kept` (number_value
+    * → number_key, as stored) keeps its key, since the facts appended so
+    * far reference it; new numbers get the keys after the largest kept one,
+    * in numeric order. `dimNumber`'s row_number alone would shift every
+    * key above a new number and re-attribute the old facts (the reference's
+    * AUTO_INCREMENT keys never move either). With nothing kept this is
+    * `dimNumber`'s own keying. Plain driver code: both sides are ≤100 rows.
+    * Returns the rows ordered by key. */
+  def keepNumberKeys(kept: Map[String, Int], fresh: Seq[Row]): Seq[Row] = {
+    def number(r: Row): String = r.getAs[String]("number_value")
+    def withKey(r: Row, key: Int): Row =
+      Row.fromSeq(r.toSeq.updated(r.fieldIndex("number_key"), key))
+    val (old, added) = fresh.partition(r => kept.contains(number(r)))
+    val next = kept.values.maxOption.getOrElse(0) + 1
+    (old.map(r => kept(number(r)) -> r) ++
+      added.sortBy(number(_).toInt).zipWithIndex
+        .map { case (r, i) => (next + i) -> r })
+      .sortBy(_._1).map { case (key, r) => withKey(r, key) }
+  }
 
   /** fact_prize (ETLMain.java:342-416): grain (date_key, number_key);
     * total_draws = transform rows that day (G1, the probability denominator

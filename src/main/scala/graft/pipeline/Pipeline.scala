@@ -1,10 +1,19 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Upsert
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** Orchestration of the full P2→P4+mart chain (SURVEY §3.1 restatement):
   * one SparkSession, one lazy DAG per stage, parquet between stages,
@@ -16,10 +25,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and every load is idempotent (anti-join upserts), so re-running after a
   * crash is safe — the property the reference's gating exists to protect.
   *
-  * Each stage is one Spark execution (P4: one per table) and nothing
-  * else: the run log is written by the driver, one small parquet file per
-  * status row, and the gates read only the log's directory listing (see
-  * `Control.logStatus`), so bookkeeping runs no Spark job.
+  * Spark executions per run: one per stage for P2 and P3, one per append
+  * for dim_date and fact_prize, and one collect each for dim_number and
+  * the mart. Those two are ≤100 rows by construction, so the driver
+  * writes them (`replaceTable`) and passes them on as local relations:
+  * fact_prize and the mart join the held dim_number, and the returned
+  * mart is the held mart, which `Serving` snapshots without a Spark job.
+  * Every other re-read of a table the run wrote is given its writer's
+  * schema, so no read runs a schema-inference job. The run log is written
+  * by the driver, one small parquet file per status row, and the gates
+  * read only the log's directory listing (see `Control.logStatus`), so
+  * bookkeeping runs no Spark job either.
   */
 object Pipeline {
 
@@ -33,13 +49,20 @@ object Pipeline {
     val processLog = s"$root/process_log"
   }
 
+  /** Called at each P4 boundary and inside `replaceTable`: "dim_date",
+    * "dim_number.tmp" (temp file written, not moved in), "dim_number.moved"
+    * (moved in, old files not yet deleted), "dim_number", "fact_prize",
+    * and the mart's "mart_two_digit_probability.tmp"/".moved". Tests throw
+    * from it to crash a run there. */
+  private[graft] var crashHook: String => Unit = _ => ()
+
   private def readOrEmpty(spark: SparkSession, path: String, like: DataFrame): DataFrame =
     if (new java.io.File(path).exists())
       spark.read.schema(like.schema).parquet(path)
     else like.limit(0)
 
   /** number_value → number_key of a stored dim_number, read on the driver
-    * (≤100 rows, no Spark job), so the recompute that overwrites the
+    * (≤100 rows, no Spark job), so the recompute that replaces the
     * directory does not read it. Empty when there is none yet. */
   private def storedNumberKeys(spark: SparkSession, dir: String): Map[String, Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -56,16 +79,59 @@ object Pipeline {
       }.toMap
   }
 
+  /** Replace the table at `dir` with `rows` (≤100 by construction), written
+    * on the driver as one parquet file through Spark's own parquet writer:
+    * the confs `ParquetFileFormat.prepareWrite` sets and its
+    * `ParquetWriteSupport`, so types and footer are a Spark write's, and no
+    * Spark job runs. Returns the rows as a local relation.
+    *
+    * Crash-safe: the file is written under a hidden temp name in `dir` and
+    * renamed onto a fixed name, which replaces the old file atomically;
+    * only then are the table's other files deleted (old data files,
+    * checksums, `_SUCCESS`, temp files of a crashed run). So `dir` always
+    * holds a complete table. The old checksum goes before the rename and
+    * the new one comes after it: a file without a checksum is read
+    * unverified, a file with a stale one is not read at all. */
+  private def replaceTable(spark: SparkSession, dir: String, schema: StructType,
+                           rows: Seq[Row]): DataFrame = {
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val table = Paths.get(dir)
+    Files.createDirectories(table)
+    val target = table.resolve(s"part-00000${files.getFileExtension(task)}")
+    val tmp = table.resolve(s".tmp-${java.util.UUID.randomUUID()}-${target.getFileName}")
+    def crc(p: java.nio.file.Path) = p.resolveSibling(s".${p.getFileName}.crc")
+
+    val writer = files.newInstance(tmp.toString, schema, task)
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    crashHook(s"${table.getFileName}.tmp")
+
+    Files.deleteIfExists(crc(target))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    if (Files.exists(crc(tmp))) Files.move(crc(tmp), crc(target), StandardCopyOption.ATOMIC_MOVE)
+    crashHook(s"${table.getFileName}.moved")
+
+    val keep = Set(target, crc(target)).map(_.getFileName.toString)
+    table.toFile.listFiles().filterNot(f => keep(f.getName)).foreach { f =>
+      require(FileUtil.fullyDelete(f), s"$dir: could not delete ${f.getName}")
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
   /** Run the whole chain from a crawler-CSV directory into a parquet
     * warehouse. Dims/facts are loaded idempotently (A1-A3); mart is a full
-    * recompute (it is an aggregate view, SURVEY §2.9). Returns the mart. */
+    * recompute (it is an aggregate view, SURVEY §2.9). Returns the mart, as
+    * a local relation of the rows just written. */
   def runAll(spark: SparkSession, csvDir: String, warehouseRoot: String): DataFrame = {
     val lay = Layout(warehouseRoot)
     // source_id mirrors the reference's processCode = "P" + sourceId
     // convention (ETLMain.java:157-158); MART has no crawl source → 0
     def sourceOf(stage: String): Int =
       if (stage.matches("P\\d")) stage.drop(1).toInt else 0
-    def gate(stage: String)(body: => Unit): Unit = {
+    def gate[T](stage: String)(body: => T): T = {
       val started = new java.sql.Timestamp(System.currentTimeMillis())
       // RUNNING append allocates the process_id; the terminal append
       // reuses it — the reference's generated-key INSERT→UPDATE pair
@@ -73,9 +139,10 @@ object Pipeline {
       val pid = Control.logStatus(spark, lay.processLog, stage, "RUNNING",
         s"$stage start", started, sourceOf(stage))
       try {
-        body
+        val out = body
         Control.logStatus(spark, lay.processLog, stage, "SUCCESS",
           s"$stage done", started, sourceOf(stage), pid)
+        out
       } catch {
         case e: Throwable =>
           Control.logStatus(spark, lay.processLog, stage, "FAIL",
@@ -96,49 +163,60 @@ object Pipeline {
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P1"),
       "P1 gate failed (StagingController.java:41-44 semantics)")
 
-    gate("P2") {
-      Lottery.staging(spark, csvDir).write.mode("overwrite").parquet(lay.staging)
+    // Each stage returns the schema it wrote. A table this run wrote is
+    // read back with that schema, so the read runs no schema-inference
+    // job (a file source reads every column as nullable either way).
+    val stagingSchema = gate("P2") {
+      val stg = Lottery.staging(spark, csvDir)
+      stg.write.mode("overwrite").parquet(lay.staging)
+      stg.schema
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P2"),
       "P2 gate failed (StagingController.java:41-67 semantics)")
 
-    gate("P3") {
-      Lottery.transform(spark.read.parquet(lay.staging))
-        .write.mode("overwrite").parquet(lay.transform)
+    val transformSchema = gate("P3") {
+      val tr = Lottery.transform(spark.read.schema(stagingSchema).parquet(lay.staging))
+      tr.write.mode("overwrite").parquet(lay.transform)
+      tr.schema
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P3"),
       "P3 gate failed (LotteryTransform.java:26-40 semantics)")
 
-    gate("P4") {
+    val (dn, dimDateSchema, factSchema) = gate("P4") {
       // Each append reads the directory it writes to, with no cache in
       // between: the input file list is fixed when the query is planned,
       // and the anti-join's stages finish before the job commits its new
       // files, so a load never sees its own output.
-      val tr = spark.read.parquet(lay.transform)
+      val tr = spark.read.schema(transformSchema).parquet(lay.transform)
       val dd = Lottery.dimDate(tr)
       Upsert.newRows(readOrEmpty(spark, lay.dimDate, dd), dd, Seq("date_key"))
         .write.mode("append").parquet(lay.dimDate)
+      crashHook("dim_date")
       // dim_number is a full aggregate (last_appeared_date moves) →
       // deterministic recompute, the K4-update canonicalization, except
-      // that a number keeps the key the appended facts already carry
-      val dn = Lottery.keepNumberKeys(storedNumberKeys(spark, lay.dimNumber),
-        Lottery.dimNumber(tr))
-      dn.write.mode("overwrite").parquet(lay.dimNumber)
+      // that a number keeps the key the appended facts already carry;
+      // ≤100 rows, so the keys are assigned and the table written on the
+      // driver, and the facts join the rows it holds
+      val fresh = Lottery.dimNumber(tr)
+      val dn = replaceTable(spark, lay.dimNumber, fresh.schema,
+        Lottery.keepNumberKeys(storedNumberKeys(spark, lay.dimNumber), fresh.collect().toSeq))
+      crashHook("dim_number")
       val fp = Lottery.factPrize(tr, dn)
       // fact-sized key set: shuffled anti-join, never broadcast (at scale
       // the existing-facts projection is itself fact-sized)
       Upsert.newRows(readOrEmpty(spark, lay.factPrize, fp), fp,
         Seq("date_key", "number_key"), broadcastExisting = false)
         .write.mode("append").parquet(lay.factPrize)
+      crashHook("fact_prize")
+      (dn, dd.schema, fp.schema)
     }
 
+    // the mart is ≤100 rows (one per two-digit number): collected once,
+    // written by the driver, and returned as the rows it holds
     gate("MART") {
-      Lottery.mart(
-        spark.read.parquet(lay.factPrize),
-        spark.read.parquet(lay.dimNumber),
-        spark.read.parquet(lay.dimDate))
-        .write.mode("overwrite").parquet(lay.mart)
+      val mart = Lottery.mart(spark.read.schema(factSchema).parquet(lay.factPrize), dn,
+        spark.read.schema(dimDateSchema).parquet(lay.dimDate))
+      replaceTable(spark, lay.mart, mart.schema, mart.collect().toSeq)
     }
-    spark.read.parquet(lay.mart)
   }
 }

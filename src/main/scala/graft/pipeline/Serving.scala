@@ -20,6 +20,11 @@ import org.apache.spark.sql.DataFrame
   * the ETL job rebuilt). Row JSON comes from `df.toJSON` and its column
   * form `to_json(struct(*))` — Spark's own schema-driven serialization,
   * not hand-rolled rendering.
+  *
+  * `Pipeline.runAll` returns the mart as a local relation of the rows it
+  * just wrote. The optimizer folds the snapshot's projection into that
+  * relation, so the mart's snapshot runs no Spark job; the statistic is
+  * still one aggregate job, over those driver-held rows.
   */
 object Serving {
 

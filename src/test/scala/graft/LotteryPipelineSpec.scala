@@ -27,6 +27,42 @@ class LotteryPipelineSpec extends SparkSpec {
     assert(wh.staging.columns.head === "prize")
   }
 
+  private def stagedRows(drop: String): Set[Seq[Any]] =
+    rows(Lottery.staging(spark, drop).drop("load_timestamp"))
+
+  test("staging: a field longer than the 4K-char read buffer parses as with the default buffer") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val drop = java.nio.file.Files.createTempDirectory("longfield")
+    val long = "x" * 10000
+    // the long field sits mid-file, so later rows start past a buffer refill
+    java.nio.file.Files.write(drop.resolve("xsmb_01012025.csv"),
+      ("\uFEFFprize,number_value,full_date,created_at\n" +
+        s"Giải Bảy,12,01-01-2025,$long\n" +
+        "Giải Bảy,34,01-01-2025,2025-01-01 18:30:00\n").getBytes(UTF_8))
+    val defaultBuffer = spark.read
+      .option("header", "true").option("encoding", "UTF-8")
+      .schema(Lottery.crawlSchema).csv(drop.toString)
+      .na.drop("any", Seq("prize", "number_value", "full_date"))
+    val got = stagedRows(drop.toString)
+    assert(got === rows(defaultBuffer))
+    assert(got === Set(Seq("Giải Bảy", "12", "01-01-2025", long),
+      Seq("Giải Bảy", "34", "01-01-2025", "2025-01-01 18:30:00")))
+  }
+
+  test("staging parses only *.csv files: a notes.txt in the drop changes nothing") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val drop = java.nio.file.Files.createTempDirectory("globdrop")
+    new java.io.File(dir).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, drop.resolve(f.getName)))
+    val before = stagedRows(drop.toString)
+    assert(before.size === 11) // 12 rows, day1's two identical 09 rows collapse
+    // a well-formed crawler row: parsed, it would add a staging row
+    java.nio.file.Files.write(drop.resolve("notes.txt"),
+      ("prize,number_value,full_date,created_at\n" +
+        "Giải Bảy,99,27-10-2025,2025-10-27 18:30:00\n").getBytes(UTF_8))
+    assert(stagedRows(drop.toString) === before)
+  }
+
   test("transform: filter + derivations + quarantine (F2,F4,F6,X1-X3,X7,X8)") {
     val got = rows(wh.transform.select("number_value", "full_date",
       "range_group", "is_weekend", "is_even"))

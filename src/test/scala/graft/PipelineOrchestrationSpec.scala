@@ -1,7 +1,8 @@
 package graft
 
-import graft.pipeline.{Control, Lottery, Pipeline}
+import graft.pipeline.{Control, Lottery, Pipeline, Serving}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 /** SURVEY §3.1 end-to-end: gated P2→P4+mart orchestration into a parquet
   * warehouse, crash-safe re-runs (idempotent loads), run-log trail. */
@@ -78,6 +79,71 @@ class PipelineOrchestrationSpec extends SparkSpec {
     Pipeline.runAll(spark, drop.toString, root)
     assert(orderedRows(facts.orderBy("date_key", "number_key")) === before)
     assert(spark.read.parquet(lay.dimDate).count() === 4)
+  }
+
+  test("a repeat runAll runs no Spark job outside a SQL execution; serving its mart runs none") {
+    import org.apache.spark.scheduler.{GraftStageInfoAccess, SparkListener, SparkListenerJobStart}
+    val csvDir = getClass.getResource("/lottery").getPath
+    val root = Files.createTempDirectory("whjobs").toString + "/wh"
+    Pipeline.runAll(spark, csvDir, root)
+
+    val jobs, outside = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        // a parquet schema inference, for one, runs its job outside
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          outside.incrementAndGet()
+      }
+    }
+    def counted[T](body: => T): (T, Int, Int) = {
+      GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      jobs.set(0); outside.set(0)
+      val out = body
+      GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      (out, jobs.get, outside.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (mart, runJobs, runOutside) = counted(Pipeline.runAll(spark, csvDir, root))
+      assert(runJobs > 0)
+      assert(runOutside === 0, s"$runOutside of $runJobs jobs ran outside an execution")
+      // the returned mart is the rows MART wrote, held by the driver
+      val (server, serveJobs, _) = counted(Serving.start(0, Map("/mart/all" -> mart),
+        Map("/mart/number" -> (mart, "number_value"))))
+      server.stop(0)
+      assert(serveJobs === 0, "the mart snapshot ran a Spark job")
+      assert(rows(mart) === rows(spark.read.parquet(Pipeline.Layout(root).mart)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("driver-written dim_number and mart are one parquet file each, as Spark would write it") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val csvDir = getClass.getResource("/lottery").getPath
+    val base = Files.createTempDirectory("whfile")
+    val lay = Pipeline.Layout(base.resolve("wh").toString)
+    Pipeline.runAll(spark, csvDir, lay.root)
+    val wh = Lottery.run(spark, csvDir)
+    def dataFiles(dir: String) = new java.io.File(dir).listFiles()
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    def footer(dir: String) = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dataFiles(dir).head.getPath), conf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData)
+      } finally reader.close()
+    }
+    Seq((lay.dimNumber, wh.dimNumber), (lay.mart, wh.mart)).foreach { case (dir, df) =>
+      val sparkWritten = base.resolve(new java.io.File(dir).getName).toString
+      df.coalesce(1).write.parquet(sparkWritten)
+      assert(dataFiles(dir).length === 1, dir)
+      assert(footer(dir) === footer(sparkWritten), dir)
+      assert(spark.read.parquet(dir).schema === spark.read.parquet(sparkWritten).schema)
+      assert(rows(spark.read.parquet(dir)) === rows(df), dir)
+    }
   }
 
   test("Observation: stage metrics ride the write pass itself — no second count job") {

@@ -199,9 +199,10 @@ object Aggregations extends QModule {
     // the full compose (argmax/argmin with the lowest-numeric-value
     // tie-break, max-draws, last-update) is hash-checked wholesale, not
     // just its g4/g5 components. The mart is localCheckpoint'd first: in
-    // production statistic (one aggregate) reads the MATERIALIZED mart
-    // table — the reference's precompute-then-serve split — so timing
-    // the mart's lineage here would misstate the serving cost shape.
+    // production statistic collects the MATERIALIZED mart (≤100 rows) and
+    // computes the scalars on the driver — the reference's
+    // precompute-then-serve split — so timing the mart's lineage here
+    // would misstate the serving cost shape.
     Q("serve_statistic", (s, dir) =>
       graft.pipeline.Lottery.statistic(
         reconstructedMart(s, dir).localCheckpoint()),

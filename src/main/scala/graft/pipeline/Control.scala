@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -148,20 +148,19 @@ object Control {
   private def micros(ts: java.sql.Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
 
-  /** Write one row as `logDir/name`: parquet written by the driver to a
-    * hidden temp name, then renamed in through the Hadoop FileSystem, which
-    * moves the file's `.crc` with it. A reader never sees a partial file. */
+  /** Write one row as `logDir/name`: parquet written by the driver through
+    * java.nio (parquet's `LocalOutputFile`, no Hadoop FileSystem and so no
+    * `.crc`) to a hidden temp name, then moved in with one atomic rename. A
+    * reader never sees a partial file. */
   private def writeLogFile(spark: SparkSession, logDir: String, name: String,
                            row: Group): Unit = {
-    val dir = new Path(logDir)
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}.parquet")
-    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = Paths.get(logDir, s".tmp-${java.util.UUID.randomUUID()}.parquet")
     // one row per file: a dictionary page would only add bytes
-    val writer = ExampleParquetWriter.builder(tmp).withConf(conf)
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+      .withConf(spark.sparkContext.hadoopConfiguration)
       .withType(logFileSchema).withDictionaryEncoding(false).build()
     try writer.write(row) finally writer.close()
-    val fs = dir.getFileSystem(conf)
-    require(fs.rename(tmp, new Path(dir, name)), s"process_log $logDir: rename to $name failed")
+    Files.move(tmp, Paths.get(logDir, name), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** K5/process_log analog: append one status row. The reference INSERTs

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,9 +20,11 @@ import org.apache.spark.sql.types._
   *
   * Scale posture: the whole chain is shuffle-minimal — transform is a pure
   * map stage (no shuffle); dims are tiny aggregates; the fact build shuffles
-  * once on full_date and once on number_value; dim joins are broadcast. At
+  * once on date_key and once on number_key; dim joins are broadcast. At
   * 100 TB the fact write would be `partitionBy(year)` on date; dims stay
-  * broadcast-size by construction (≤100 numbers, 1 row/day).
+  * broadcast-size by construction (≤100 numbers, 1 row/day). `Pipeline`
+  * runs the same functions over each load's new files plus the stored
+  * rows they depend on (see `factPrize`'s `history`).
   */
 object Lottery {
 
@@ -38,17 +42,25 @@ object Lottery {
     * Only `*.csv` files are parsed, the files P1's gate and the reference's
     * S2 scan accept. A crawler file is ~1 KB, so the parser's read buffer
     * is 4K chars, not univocity's default 1M per file (the buffer bounds
-    * one read, not a field: longer fields still parse). */
-  def staging(spark: SparkSession, csvDir: String): DataFrame =
-    spark.read
+    * one read, not a field: longer fields still parse).
+    *
+    * `only` restricts the scan to the files of those names. It is a
+    * `_metadata.file_name` filter over the directory, which prunes at
+    * file level, rather than a list of paths: Spark lists more than 32
+    * explicit paths with a Spark job of its own. */
+  def staging(spark: SparkSession, csvDir: String,
+              only: Option[Seq[String]] = None): DataFrame = {
+    val drop = spark.read
       .option("header", "true")
       .option("encoding", "UTF-8")
       .option("pathGlobFilter", "*.csv")
       .option("inputBufferSize", "4096")
       .schema(crawlSchema)
       .csv(csvDir)
+    only.fold(drop)(names => drop.filter(col("_metadata.file_name").isin(names: _*)))
       .na.drop("any", Seq("prize", "number_value", "full_date"))
       .withColumn("load_timestamp", current_timestamp())
+  }
 
   /** P3 transform (transform_staging/.../LotteryTransform.java:112-159):
     * keep 7th-prize rows (F2), require ≥2 chars (F4), last-two-digits (X1),
@@ -149,8 +161,27 @@ object Lottery {
     * ETLMain.java:363-368); probability = 1/total_draws per draw (X11);
     * days_since_last = full-history per-number gap (W2 canonicalized);
     * occurrence_count = same-day multiplicity (A3 canonicalized: the
-    * reference would double-insert; we dedupe and count). */
-  def factPrize(transformDf: DataFrame, dimNumberDf: DataFrame): DataFrame = {
+    * reference would double-insert; we dedupe and count).
+    *
+    * `history` is the (date_key, number_key) pairs of facts already
+    * stored, for a load of new days into an existing warehouse. The
+    * per-number gap then runs over the history and `transformDf`
+    * together, and only `transformDf`'s pairs that the history lacks are
+    * emitted: the anti-join against the stored facts is a flag in the same
+    * window pass, so one read of the history serves both. The fact grain
+    * is ≤100 rows per draw day (one per two-digit number), so the history
+    * and the new days are windowed in one partition, with no shuffle.
+    *
+    * `total_draws` counts `transformDf`'s rows of a day. So with days
+    * landed in date order, each day in one load, the facts equal those of
+    * one build over everything. A day split across two loads is the
+    * exception: the second load's total_draws counts only its own rows of
+    * that day, and its pairs already stored are not appended again. A day
+    * landed after later days gets its gap from the earlier history, while
+    * the stored fact of the number's next appearance keeps its gap.
+    * `dimNumberDf` must carry every number of `transformDf`. */
+  def factPrize(transformDf: DataFrame, dimNumberDf: DataFrame,
+                history: Option[DataFrame] = None): DataFrame = {
     val perDay = transformDf.select(
       date_format(col("full_date"), "yyyyMMdd").cast("int").as("date_key"),
       col("full_date"),
@@ -162,14 +193,25 @@ object Lottery {
       .groupBy(col("date_key"), col("full_date"), col("number_value"),
                col("total_draws"))
       .agg(count(lit(1)).cast("int").as("occurrence_count"))
-    // W2: previous appearance of the same number, full history.
-    val wNum = Window.partitionBy(col("number_value")).orderBy(col("full_date"))
-    val withGap = counted.withColumn("days_since_last",
-      datediff(col("full_date"), lag(col("full_date"), 1).over(wNum)))
     // J1: surrogate-key lookup — dim is ≤100 rows, always broadcast.
-    withGap
+    val keyed = counted
       .join(broadcast(dimNumberDf.select(col("number_key"), col("number_value"))),
             Seq("number_value"))
+    // W2: previous appearance of the same number, full history: the
+    // stored facts' days ride the same window, and a new pair is kept
+    // only when no stored fact has its (date_key, number_key)
+    val all = history.fold(keyed)(h => keyed.withColumn("stored", lit(false))
+      .unionByName(h.select(col("date_key"), col("number_key"),
+        to_date(col("date_key").cast("string"), "yyyyMMdd").as("full_date"),
+        lit(true).as("stored")), allowMissingColumns = true)
+      .coalesce(1))
+    val wNum = Window.partitionBy(col("number_key")).orderBy(col("full_date"))
+    val withGap = all.withColumn("days_since_last",
+      datediff(col("full_date"), lag(col("full_date"), 1).over(wNum)))
+    val wPair = Window.partitionBy(col("number_key"), col("date_key"))
+    history.fold(withGap)(_ => withGap
+        .withColumn("known", max(col("stored")).over(wPair))
+        .filter(!col("known")))
       .select(col("date_key"), col("number_key"), col("occurrence_count"),
         col("total_draws"),
         (lit(1.0) / col("total_draws")).cast(DecimalType(38, 10)).as("probability_value"),
@@ -203,26 +245,52 @@ object Lottery {
     * scalars. Tie-break = lowest numeric value (the reference JPQL throws
     * on ties, SURVEY §7.2).
     *
-    * One aggregate, no joins. Each arg pick is the `min` of a struct whose
-    * `key` fields are the sort keys, compared in order, nulls first:
-    * `mostNumber` orders by total_occurrences descending with nulls last
-    * (the `isNull` flag), then int(number_value) ascending with nulls
-    * first; `leastNumber` orders by both ascending with nulls first. An
-    * empty mart gives no row (the `rows > 0` filter), not a row of nulls. */
+    * Computed on the driver over the collected mart (≤100 rows, one per
+    * two-digit number) and returned as a local relation, so serving it
+    * runs no Spark job. The picks follow the sort-limit definition:
+    * `mostNumber` orders by total_occurrences descending with nulls last,
+    * `leastNumber` ascending with nulls first, both then by
+    * int(number_value) and number_value ascending with nulls first. The
+    * scalars are maxima that skip nulls. An empty mart gives no row. */
   def statistic(martDf: DataFrame): DataFrame = {
-    val occ = col("total_occurrences")
-    val num = col("number_value")
-    def pick(keys: Column*): Column =
-      min(struct(struct(keys :+ num.cast("int"): _*).as("key"), num.as("value")))
-        .getField("value")
-    martDf.agg(
-        max(col("total_draws")).as("totalOccurrences"),
-        pick(occ.isNull, -occ).as("mostNumber"),
-        pick(occ).as("leastNumber"),
-        max(col("last_appeared_date")).as("lastUpdate"),
-        count(lit(1)).as("rows"))
-      .filter(col("rows") > 0)
-      .drop("rows")
+    val cols = Seq("number_value", "total_occurrences", "total_draws", "last_appeared_date")
+    def typeOf(c: String) = martDf.schema(c).dataType
+    val schema = StructType(Seq(
+      StructField("totalOccurrences", typeOf("total_draws")),
+      StructField("mostNumber", typeOf("number_value")),
+      StructField("leastNumber", typeOf("number_value")),
+      StructField("lastUpdate", typeOf("last_appeared_date"))))
+    val mart = martDf.select(cols.map(col): _*).collect().toSeq
+    // compare nullable values, nulls first
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+    def tie(a: Row, b: Row): Int = {
+      val byInt = cmp(Option(a.getString(0)).flatMap(_.trim.toIntOption).orNull,
+        Option(b.getString(0)).flatMap(_.trim.toIntOption).orNull)
+      if (byInt != 0) byInt else cmp(a.get(0), b.get(0))
+    }
+    def first(order: (Row, Row) => Int): Any = mart.reduce((a, b) => if (order(a, b) <= 0) a else b).get(0)
+    def maxOf(i: Int): Any = mart.map(_.get(i)).foldLeft(null: Any)((m, v) => if (cmp(v, m) > 0) v else m)
+    val out =
+      if (mart.isEmpty) Nil
+      else Seq(Row(maxOf(2),
+        first { (a, b) =>
+          val byOcc = (a.isNullAt(1), b.isNullAt(1)) match {
+            case (false, false) => -cmp(a.get(1), b.get(1))
+            case (x, y) => x.compareTo(y) // nulls last
+          }
+          if (byOcc != 0) byOcc else tie(a, b)
+        },
+        first { (a, b) =>
+          val byOcc = cmp(a.get(1), b.get(1))
+          if (byOcc != 0) byOcc else tie(a, b)
+        },
+        maxOf(3)))
+    martDf.sparkSession.createDataFrame(out.asJava, schema)
   }
 
   /** Full P2→mart DAG from a crawler-CSV directory. */
@@ -232,17 +300,18 @@ object Lottery {
     val dd = dimDate(tr)
     val dn = dimNumber(tr)
     val fp = factPrize(tr, dn)
-    val mt = mart(fp, dn, dd)
-    LotteryWarehouse(stg, tr, dd, dn, fp, mt, statistic(mt))
+    LotteryWarehouse(stg, tr, dd, dn, fp, mart(fp, dn, dd))
   }
 }
 
-/** The materialized-on-demand warehouse surface (all lazy DataFrames). */
+/** The materialized-on-demand warehouse surface (all lazy DataFrames).
+  * `statistic` collects the mart, so it is computed on first use. */
 final case class LotteryWarehouse(
     staging: DataFrame,
     transform: DataFrame,
     dimDate: DataFrame,
     dimNumber: DataFrame,
     factPrize: DataFrame,
-    mart: DataFrame,
-    statistic: DataFrame)
+    mart: DataFrame) {
+  lazy val statistic: DataFrame = Lottery.statistic(mart)
+}

@@ -1,19 +1,28 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.net.URLEncoder
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.Upsert
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileUtil
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Orchestration of the full P2→P4+mart chain (SURVEY §3.1 restatement):
   * one SparkSession, one lazy DAG per stage, parquet between stages,
@@ -25,17 +34,28 @@ import org.apache.spark.sql.types.StructType
   * and every load is idempotent (anti-join upserts), so re-running after a
   * crash is safe — the property the reference's gating exists to protect.
   *
-  * Spark executions per run: one per stage for P2 and P3, one per append
-  * for dim_date and fact_prize, and one collect each for dim_number and
-  * the mart. Those two are ≤100 rows by construction, so the driver
-  * writes them (`replaceTable`) and passes them on as local relations:
-  * fact_prize and the mart join the held dim_number, and the returned
-  * mart is the held mart, which `Serving` snapshots without a Spark job.
-  * Every other re-read of a table the run wrote is given its writer's
-  * schema, so no read runs a schema-inference job. The run log is written
-  * by the driver, one small parquet file per status row, and the gates
-  * read only the log's directory listing (see `Control.logStatus`), so
-  * bookkeeping runs no Spark job either.
+  * A run loads only what is new. The crawler files not yet staged become
+  * one batch, numbered by P2's process_id: P2 stages them into
+  * `staging/batch=<b>`, P3 transforms that batch into `transform/batch=<b>`,
+  * and P4 adds its days, numbers and facts to the star schema. Each stage
+  * commits a batch with a zero-byte marker in `_batches` (`Marks`), so a
+  * run does work in proportion to the new files, not to history. A batch
+  * directory is read by its path, never through its table's root, and a
+  * run that finds nothing new writes nothing before MART.
+  *
+  * Spark executions per run with new files: one write each for P2 and P3,
+  * one collect of both dims and the fact append in P4, and one collect of
+  * the mart. The dims and the mart are small by construction (dim_date one
+  * row per draw day, dim_number and mart ≤100 rows), so the driver holds
+  * them, writes them (`replaceTable`) and passes them on as local
+  * relations: the next load reads the stored dims on the driver, the fact
+  * append and the mart join the held dims, and the returned mart is the
+  * held mart, which `Serving` snapshots without a Spark job. Every re-read
+  * of a table is given its writer's schema, so no read runs a
+  * schema-inference job. The run log is written by the driver, one small
+  * parquet file per status row, and the gates read only the log's
+  * directory listing (see `Control.logStatus`), so bookkeeping runs no
+  * Spark job either.
   */
 object Pipeline {
 
@@ -47,91 +67,198 @@ object Pipeline {
     val factPrize = s"$root/fact_prize"
     val mart = s"$root/mart_two_digit_probability"
     val processLog = s"$root/process_log"
+    /** Batch markers, hidden from Spark's listings by the leading `_`. */
+    val batches = s"$root/_batches"
   }
 
-  /** Called at each P4 boundary and inside `replaceTable`: "dim_date",
-    * "dim_number.tmp" (temp file written, not moved in), "dim_number.moved"
-    * (moved in, old files not yet deleted), "dim_number", "fact_prize",
-    * and the mart's "mart_two_digit_probability.tmp"/".moved". Tests throw
-    * from it to crash a run there. */
+  /** Called at each stage's commit points and inside `replaceTable`:
+    * "staging"/"transform" (a batch written, not committed) and
+    * "staging.committed"/"transform.committed"; "<table>.tmp" (temp file
+    * written, not moved in) and "<table>.moved" (moved in, old files not
+    * yet deleted) for dim_date, dim_number and the mart; "dim_date" and
+    * "dim_number" (replaced); "fact_prize" (facts appended, batch not
+    * marked loaded) and "loaded". Tests throw from it to crash a run
+    * there. */
   private[graft] var crashHook: String => Unit = _ => ()
 
-  private def readOrEmpty(spark: SparkSession, path: String, like: DataFrame): DataFrame =
-    if (new java.io.File(path).exists())
-      spark.read.schema(like.schema).parquet(path)
-    else like.limit(0)
+  private def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
 
-  /** number_value → number_key of a stored dim_number, read on the driver
-    * (≤100 rows, no Spark job), so the recompute that replaces the
-    * directory does not read it. Empty when there is none yet. */
-  private def storedNumberKeys(spark: SparkSession, dir: String): Map[String, Int] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) Map.empty
-    else fs.listStatus(path).iterator
-      .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .flatMap { file =>
-        val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
-        try Iterator.continually(reader.read()).takeWhile(_ != null)
-          .map(g => g.getString("number_value", 0) -> g.getInteger("number_key", 0)).toList
-        finally reader.close()
-      }.toMap
+  /** The batch bookkeeping: one listing of `_batches`. Each marker is a
+    * zero-byte file whose name is all it says, so it adds no byte to the
+    * warehouse and reading it opens no file.
+    *
+    *  - `file-<b>-<identity>`: a crawler file staged in batch `b`, where a
+    *    file's identity is its length, modification time and (encoded)
+    *    name, so a re-crawled file is staged again;
+    *  - `<stage>-<b>` for stage staged, transformed and loaded: batch `b`
+    *    passed that stage. Creating it is the stage's one atomic commit.
+    *
+    * A file marker counts only once its batch is staged: P2 creates the
+    * file markers before it writes the batch, and a run that finds markers
+    * of an unstaged batch deletes them with the batch's staging data. */
+  private final case class Marks(dir: String, files: Seq[(Long, String)],
+                                 done: Map[String, Set[Long]]) {
+    def passed(stage: String): Set[Long] = done.getOrElse(stage, Set.empty)
+
+    /** Batches past `from` and not yet past `to`, in batch order. */
+    def pending(from: String, to: String): Seq[Long] = (passed(from) -- passed(to)).toSeq.sorted
+
+    def mark(stage: String, batch: Long): Marks = {
+      create(s"$stage-$batch")
+      copy(done = done.updated(stage, passed(stage) + batch))
+    }
+
+    def create(name: String): Unit =
+      try Files.createFile(Paths.get(dir, name))
+      catch { case _: FileAlreadyExistsException => }
   }
 
-  /** Replace the table at `dir` with `rows` (≤100 by construction), written
-    * on the driver as one parquet file through Spark's own parquet writer:
+  private val stageMark = """(staged|transformed|loaded)-(\d+)""".r
+  private val fileMark = """file-(\d+)-(.+)""".r
+
+  private def marks(dir: String): Marks = {
+    Files.createDirectories(Paths.get(dir))
+    val names = Option(new java.io.File(dir).list()).toSeq.flatten
+    Marks(dir,
+      names.collect { case fileMark(b, id) => b.toLong -> id },
+      names.collect { case stageMark(stage, b) => stage -> b.toLong }
+        .groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet })
+  }
+
+  /** A crawler file's identity: length, modification time and name. */
+  private def identity(name: String, attrs: BasicFileAttributes): String =
+    s"${attrs.size}-${attrs.lastModifiedTime.toMillis}-${URLEncoder.encode(name, UTF_8)}"
+
+  private def deleteTree(path: String): Unit = {
+    val f = new java.io.File(path)
+    if (f.exists()) require(FileUtil.fullyDelete(f), s"could not delete $path")
+  }
+
+  /** The parquet table at `path` read with `schema`, or an empty relation
+    * of that schema when there is none yet. */
+  private def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (new java.io.File(path).exists()) spark.read.schema(schema).parquet(path)
+    else local(spark, schema, Nil)
+
+  private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private def nullable(schema: StructType): StructType =
+    StructType(schema.map(_.copy(nullable = true)))
+
+  /** The rows of the driver-written table at `dir`, read on the driver (no
+    * Spark job) through java.nio in `schema`'s columns, which are ints,
+    * strings or dates. For the small tables `replaceTable` writes. Empty
+    * when there is none. */
+  private def storedRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
+    val conf = new HadoopParquetConfiguration(spark.sparkContext.hadoopConfiguration)
+    def value(g: Group, f: StructField): Any =
+      if (g.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case IntegerType => g.getInteger(f.name, 0)
+        case StringType => g.getString(f.name, 0)
+        case DateType => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(g.getInteger(f.name, 0)))
+        case t => throw new IllegalArgumentException(s"$dir: no driver read of ${f.name}: $t")
+      }
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filterNot(f => hidden(f.getName)).sortBy(_.getName)
+      .flatMap { file =>
+        val reader = new ParquetReader.Builder[Group](new LocalInputFile(file.toPath), conf) {
+          override def getReadSupport() = new GroupReadSupport()
+        }.build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => new GenericRowWithSchema(schema.map(value(g, _)).toArray, schema): Row).toList
+        finally reader.close()
+      }
+  }
+
+  /** The tables' schemas as read back: each from its function over an
+    * empty input, with every column nullable, as a file source reads it.
+    * Analysis only, so they are derived once and kept. */
+  private final case class Schemas(staging: StructType, transform: StructType,
+                                   date: StructType, number: StructType, fact: StructType)
+
+  @volatile private var derived: Option[Schemas] = None
+
+  private def schemas(spark: SparkSession): Schemas = derived.getOrElse {
+    val staging = Lottery.crawlSchema.add("load_timestamp", TimestampType)
+    val tr = local(spark, nullable(Lottery.transform(local(spark, staging, Nil)).schema), Nil)
+    val s = Schemas(staging, tr.schema, nullable(Lottery.dimDate(tr).schema),
+      nullable(Lottery.dimNumber(tr).schema),
+      nullable(Lottery.factPrize(tr, Lottery.dimNumber(tr)).schema))
+    derived = Some(s)
+    s
+  }
+
+  /** Spark's parquet write support for a file parquet opens itself. */
+  private final class RowWriter(file: LocalOutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override def self(): RowWriter = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
+
+  /** Replace the table at `dir` with `rows` (small by construction), written
+    * on the driver as one parquet file through Spark's own write support:
     * the confs `ParquetFileFormat.prepareWrite` sets and its
     * `ParquetWriteSupport`, so types and footer are a Spark write's, and no
-    * Spark job runs. Returns the rows as a local relation.
+    * Spark job runs. The file goes through java.nio (parquet's
+    * `LocalOutputFile`), not Hadoop's FileSystem, so it has no `.crc`.
+    * Returns the rows as a local relation.
     *
     * Crash-safe: the file is written under a hidden temp name in `dir` and
     * renamed onto a fixed name, which replaces the old file atomically;
     * only then are the table's other files deleted (old data files,
     * checksums, `_SUCCESS`, temp files of a crashed run). So `dir` always
-    * holds a complete table. The old checksum goes before the rename and
-    * the new one comes after it: a file without a checksum is read
-    * unverified, a file with a stale one is not read at all. */
+    * holds a complete table. A checksum left by a Hadoop write of the same
+    * name goes before the rename: a stale one would fail the read. */
   private def replaceTable(spark: SparkSession, dir: String, schema: StructType,
                            rows: Seq[Row]): DataFrame = {
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
     val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val conf = job.getConfiguration
     val table = Paths.get(dir)
     Files.createDirectories(table)
-    val target = table.resolve(s"part-00000${files.getFileExtension(task)}")
+    val target = table.resolve(
+      s"part-00000${files.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID()))}")
     val tmp = table.resolve(s".tmp-${java.util.UUID.randomUUID()}-${target.getFileName}")
-    def crc(p: java.nio.file.Path) = p.resolveSibling(s".${p.getFileName}.crc")
 
-    val writer = files.newInstance(tmp.toString, schema, task)
+    val writer = new RowWriter(new LocalOutputFile(tmp)).withConf(conf)
+      .withCompressionCodec(ParquetOutputFormat.getCompression(conf)).build()
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
     finally writer.close()
     crashHook(s"${table.getFileName}.tmp")
 
-    Files.deleteIfExists(crc(target))
+    Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(crc(tmp))) Files.move(crc(tmp), crc(target), StandardCopyOption.ATOMIC_MOVE)
     crashHook(s"${table.getFileName}.moved")
 
-    val keep = Set(target, crc(target)).map(_.getFileName.toString)
-    table.toFile.listFiles().filterNot(f => keep(f.getName)).foreach { f =>
+    table.toFile.listFiles().filterNot(_.getName == target.getFileName.toString).foreach { f =>
       require(FileUtil.fullyDelete(f), s"$dir: could not delete ${f.getName}")
     }
     spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Run the whole chain from a crawler-CSV directory into a parquet
-    * warehouse. Dims/facts are loaded idempotently (A1-A3); mart is a full
-    * recompute (it is an aggregate view, SURVEY §2.9). Returns the mart, as
-    * a local relation of the rows just written. */
+    * warehouse, loading the files not loaded before. Dims/facts are loaded
+    * idempotently (A1-A3); mart is a full recompute (it is an aggregate
+    * view, SURVEY §2.9). Returns the mart, as a local relation of the rows
+    * just written.
+    *
+    * With files landed in date order, every table equals one build over
+    * the whole drop (staging and transform up to `load_timestamp`, which
+    * records each row's first load); `Lottery.factPrize` documents the
+    * cases that differ. */
   def runAll(spark: SparkSession, csvDir: String, warehouseRoot: String): DataFrame = {
     val lay = Layout(warehouseRoot)
     // source_id mirrors the reference's processCode = "P" + sourceId
     // convention (ETLMain.java:157-158); MART has no crawl source → 0
     def sourceOf(stage: String): Int =
       if (stage.matches("P\\d")) stage.drop(1).toInt else 0
-    def gate[T](stage: String)(body: => T): T = {
+    // the body gets the stage's process_id and returns its value and the
+    // SUCCESS row's message
+    def gate[T](stage: String)(body: Long => (T, String)): T = {
       val started = new java.sql.Timestamp(System.currentTimeMillis())
       // RUNNING append allocates the process_id; the terminal append
       // reuses it — the reference's generated-key INSERT→UPDATE pair
@@ -139,9 +266,9 @@ object Pipeline {
       val pid = Control.logStatus(spark, lay.processLog, stage, "RUNNING",
         s"$stage start", started, sourceOf(stage))
       try {
-        val out = body
+        val (out, message) = body(pid)
         Control.logStatus(spark, lay.processLog, stage, "SUCCESS",
-          s"$stage done", started, sourceOf(stage), pid)
+          s"$stage: $message", started, sourceOf(stage), pid)
         out
       } catch {
         case e: Throwable =>
@@ -154,69 +281,143 @@ object Pipeline {
     // P1 = crawler drop (the CSV directory stands in for the reference's
     // web crawl): validate the drop exists and is non-empty, and write
     // the gate row P2 depends on (StagingController.java:41-67 gates P2
-    // on P1 SUCCESS — without this row the four-stage log story is 3/4)
-    gate("P1") {
-      val drop = new java.io.File(csvDir)
-      require(drop.isDirectory && drop.listFiles().exists(_.getName.endsWith(".csv")),
-        s"P1: no crawler CSVs in $csvDir")
+    // on P1 SUCCESS — without this row the four-stage log story is 3/4).
+    // Its listing, name → identity, is what P2 stages from.
+    val drop = gate("P1") { _ =>
+      val dir = Paths.get(csvDir)
+      val files =
+        if (!Files.isDirectory(dir)) Nil
+        else {
+          val stream = Files.newDirectoryStream(dir, "*.csv")
+          try stream.asScala.toSeq.flatMap { p =>
+            val name = p.getFileName.toString
+            val attrs = Files.readAttributes(p, classOf[BasicFileAttributes])
+            Option.when(!hidden(name) && attrs.isRegularFile)(name -> identity(name, attrs))
+          } finally stream.close()
+        }
+      require(files.nonEmpty, s"P1: no crawler CSVs in $csvDir")
+      (files, s"${files.size} crawler files")
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P1"),
       "P1 gate failed (StagingController.java:41-44 semantics)")
 
-    // Each stage returns the schema it wrote. A table this run wrote is
-    // read back with that schema, so the read runs no schema-inference
-    // job (a file source reads every column as nullable either way).
-    val stagingSchema = gate("P2") {
-      val stg = Lottery.staging(spark, csvDir)
-      stg.write.mode("overwrite").parquet(lay.staging)
-      stg.schema
+    val schema = schemas(spark)
+    val emptyTr = local(spark, schema.transform, Nil)
+    def batchPaths(table: String, batches: Seq[Long]) = batches.map(b => s"$table/batch=$b")
+
+    var mk = marks(lay.batches)
+
+    // P2: the drop's files whose identity no staged batch holds become one
+    // batch. A batch that never committed (a crash between its file
+    // markers and its staged marker) is deleted first, markers included.
+    gate("P2") { pid =>
+      val staged = mk.passed("staged")
+      mk.files.collect { case (b, _) if !staged(b) => b }.distinct.foreach { b =>
+        deleteTree(s"${lay.staging}/batch=$b")
+        mk.files.collect { case (`b`, id) => id }.foreach(id =>
+          Files.delete(Paths.get(lay.batches, s"file-$b-$id")))
+      }
+      mk = mk.copy(files = mk.files.filter { case (b, _) => staged(b) })
+      val known = mk.files.map(_._2).toSet
+      val fresh = drop.filterNot { case (_, id) => known(id) }
+      if (fresh.isEmpty) ((), "nothing new")
+      else {
+        fresh.foreach { case (_, id) => mk.create(s"file-$pid-$id") }
+        deleteTree(s"${lay.staging}/_temporary")
+        // by name, also on a cold build: a file that lands after P1's
+        // listing has no marker, so it must wait for the next run
+        Lottery.staging(spark, csvDir, Some(fresh.map(_._1))).withColumn("batch", lit(pid))
+          .write.partitionBy("batch").mode("append").parquet(lay.staging)
+        crashHook("staging")
+        mk = mk.mark("staged", pid)
+        crashHook("staging.committed")
+        ((), s"batch $pid: staged ${fresh.size} files")
+      }
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P2"),
       "P2 gate failed (StagingController.java:41-67 semantics)")
 
-    val transformSchema = gate("P3") {
-      val tr = Lottery.transform(spark.read.schema(stagingSchema).parquet(lay.staging))
-      tr.write.mode("overwrite").parquet(lay.transform)
-      tr.schema
+    // P3: each staged batch not yet transformed, normally just P2's; a
+    // crashed transform of it is deleted first
+    gate("P3") { _ =>
+      val pending = mk.pending("staged", "transformed")
+      pending.foreach { b =>
+        deleteTree(s"${lay.transform}/batch=$b")
+        deleteTree(s"${lay.transform}/_temporary")
+        Lottery.transform(spark.read.schema(schema.staging).parquet(batchPaths(lay.staging, Seq(b)): _*))
+          .withColumn("batch", lit(b))
+          .write.partitionBy("batch").mode("append").parquet(lay.transform)
+        crashHook("transform")
+        mk = mk.mark("transformed", b)
+        crashHook("transform.committed")
+      }
+      ((), if (pending.isEmpty) "nothing new" else s"transformed batches ${pending.mkString(",")}")
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P3"),
       "P3 gate failed (LotteryTransform.java:26-40 semantics)")
 
-    val (dn, dimDateSchema, factSchema) = gate("P4") {
-      // Each append reads the directory it writes to, with no cache in
-      // between: the input file list is fixed when the query is planned,
-      // and the anti-join's stages finish before the job commits its new
-      // files, so a load never sees its own output.
-      val tr = spark.read.schema(transformSchema).parquet(lay.transform)
-      val dd = Lottery.dimDate(tr)
-      Upsert.newRows(readOrEmpty(spark, lay.dimDate, dd), dd, Seq("date_key"))
-        .write.mode("append").parquet(lay.dimDate)
-      crashHook("dim_date")
-      // dim_number is a full aggregate (last_appeared_date moves) →
-      // deterministic recompute, the K4-update canonicalization, except
-      // that a number keeps the key the appended facts already carry;
-      // ≤100 rows, so the keys are assigned and the table written on the
-      // driver, and the facts join the rows it holds
-      val fresh = Lottery.dimNumber(tr)
-      val dn = replaceTable(spark, lay.dimNumber, fresh.schema,
-        Lottery.keepNumberKeys(storedNumberKeys(spark, lay.dimNumber), fresh.collect().toSeq))
-      crashHook("dim_number")
-      val fp = Lottery.factPrize(tr, dn)
-      // fact-sized key set: shuffled anti-join, never broadcast (at scale
-      // the existing-facts projection is itself fact-sized)
-      Upsert.newRows(readOrEmpty(spark, lay.factPrize, fp), fp,
-        Seq("date_key", "number_key"), broadcastExisting = false)
-        .write.mode("append").parquet(lay.factPrize)
-      crashHook("fact_prize")
-      (dn, dd.schema, fp.schema)
+    // P4: the transformed batches not yet loaded. Both dims are small, so
+    // the stored ones are read on the driver and recomputed over the
+    // batches plus the stored rows, in one collect: dim_date's rows are
+    // its days, dim_number's (number_value, last_appeared_date) are each
+    // number's latest draw so far.
+    val (dn, dd) = gate("P4") { _ =>
+      val pending = mk.pending("transformed", "loaded")
+      // a batch's transform is its Giải Bảy rows (4 per draw day), and the
+      // stored dims are one row per day and per number: one partition
+      // each, so their aggregates and windows run with no shuffle
+      val tr = if (pending.isEmpty) emptyTr
+        else spark.read.schema(schema.transform).parquet(batchPaths(lay.transform, pending): _*)
+          .coalesce(1)
+      val storedDates = storedRows(spark, lay.dimDate, schema.date)
+      val storedNumbers = storedRows(spark, lay.dimNumber, schema.number)
+      val dates = Lottery.dimDate(tr.select("full_date", "is_weekend").unionByName(
+        local(spark, schema.date, storedDates).select("full_date", "is_weekend")).coalesce(1))
+      val numbers = Lottery.dimNumber(
+        tr.select(col("number_value").cast("string").as("number_value"), col("full_date"))
+          .unionByName(local(spark, schema.number, storedNumbers)
+            .select(col("number_value"), col("last_appeared_date").as("full_date"))).coalesce(1))
+      if (pending.isEmpty)
+        ((local(spark, numbers.schema, storedNumbers), local(spark, dates.schema, storedDates)),
+          "nothing new")
+      else {
+        // one collect returns both dims: one struct column each
+        val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
+            lit(null).cast(numbers.schema).as("n"))
+          .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
+            struct(numbers.columns.map(col): _*).as("n")))
+          .collect()
+        val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
+          .sortBy(_.getAs[Int]("date_key"))
+        val dd = replaceTable(spark, lay.dimDate, dates.schema, dateRows)
+        crashHook("dim_date")
+        // a number keeps the key the appended facts already carry
+        val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
+          r.getInt(r.fieldIndex("number_key"))).toMap
+        val dn = replaceTable(spark, lay.dimNumber, numbers.schema,
+          Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq))
+        crashHook("dim_number")
+        // the stored facts are the history of the per-number gap, and the
+        // pairs already stored (a crashed load's) are not appended again;
+        // the fact count rides the write (no second job)
+        val appended = Observation()
+        Lottery.factPrize(tr, dn, Some(readTable(spark, lay.factPrize, schema.fact)))
+          .observe(appended, count(lit(1)).as("facts"))
+          .write.mode("append").parquet(lay.factPrize)
+        crashHook("fact_prize")
+        pending.foreach(b => mk = mk.mark("loaded", b))
+        crashHook("loaded")
+        ((dn, dd), s"loaded batches ${pending.mkString(",")}: " +
+          s"${dateRows.size - storedDates.size} days, ${appended.get("facts")} facts")
+      }
     }
 
     // the mart is ≤100 rows (one per two-digit number): collected once,
     // written by the driver, and returned as the rows it holds
-    gate("MART") {
-      val mart = Lottery.mart(spark.read.schema(factSchema).parquet(lay.factPrize), dn,
-        spark.read.schema(dimDateSchema).parquet(lay.dimDate))
-      replaceTable(spark, lay.mart, mart.schema, mart.collect().toSeq)
+    gate("MART") { _ =>
+      val mart = Lottery.mart(readTable(spark, lay.factPrize, schema.fact), dn, dd)
+      val rows = mart.collect().toSeq
+      (replaceTable(spark, lay.mart, mart.schema, rows), s"${rows.size} numbers")
     }
   }
 }

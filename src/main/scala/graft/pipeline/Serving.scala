@@ -22,9 +22,9 @@ import org.apache.spark.sql.DataFrame
   * not hand-rolled rendering.
   *
   * `Pipeline.runAll` returns the mart as a local relation of the rows it
-  * just wrote. The optimizer folds the snapshot's projection into that
-  * relation, so the mart's snapshot runs no Spark job; the statistic is
-  * still one aggregate job, over those driver-held rows.
+  * just wrote, and `Lottery.statistic` computes its scalars on the driver
+  * into another. The optimizer folds each snapshot's projection into its
+  * relation, so registering the dashboard runs no Spark job.
   */
 object Serving {
 

@@ -18,13 +18,17 @@ import scala.jdk.CollectionConverters._
   *   - Skew: hot-key set, `limit(maxHot)`-capped with an overflow check.
   *   - Control: config kv table (≤100 rows). The process_log is
   *     driver-written and its gates read a directory listing: no collect.
-  *   - Pipeline: dim_number and the mart, one collect each per run, so
+  *   - Pipeline: one collect of both dims (dim_date and dim_number, as
+  *     one union of two struct columns) and one of the mart per run, so
   *     the driver writes them and passes them on as local relations.
-  *     Both are ≤100 rows by construction: dim_number has one row per
-  *     distinct `number_value`, which transform makes the int of a
-  *     number's last two characters (0-99 for the crawler's digit
-  *     strings; -9..99 at most for any input), and the mart has one row
-  *     per dim_number key the facts carry.
+  *     dim_date has one row per draw day (≤366 per year of history);
+  *     dim_number and the mart are ≤100 rows by construction: dim_number
+  *     has one row per distinct `number_value`, which transform makes the
+  *     int of a number's last two characters (0-99 for the crawler's
+  *     digit strings; -9..99 at most for any input), and the mart has one
+  *     row per dim_number key the facts carry.
+  *   - Lottery: `statistic` collects the mart (≤100 rows, as above) and
+  *     computes the four dashboard scalars on the driver.
   *   - Serving: ≤100-row serving snapshots (the API-response edge,
   *     where rows leave Spark by design): `snapshot`, and the one
   *     collect per DataFrame that feeds `start`'s routes and lookups.
@@ -50,6 +54,7 @@ class CollectHygieneSpec extends AnyFunSuite {
   private val pinned = Map(
     "operators/Skew.scala" -> 2,
     "pipeline/Control.scala" -> 1,
+    "pipeline/Lottery.scala" -> 1,
     "pipeline/Pipeline.scala" -> 2,
     "pipeline/Serving.scala" -> 2,
     "sources/Html.scala" -> 1,

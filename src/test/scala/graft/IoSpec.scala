@@ -274,6 +274,21 @@ class IoSpec extends SparkSpec {
     assert(!new java.io.File(logDir).list().exists(_.startsWith("_")))
   }
 
+  test("K5: a logged row reads back unchanged, leaving no temp or checksum file") {
+    val logDir = tmp("log") + "/process_log"
+    val started = java.sql.Timestamp.valueOf("2025-10-26 19:05:09.123456")
+    val id = Control.logStatus(spark, logDir, "P4", "SUCCESS", "loaded batches 7: 1 days, 3 facts",
+      started, sourceId = 4)
+    val row = spark.read.schema(Control.processLogSchema).parquet(logDir).collect().toSeq
+    assert(row.size === 1)
+    val r = row.head
+    assert((r.getLong(0), r.getInt(1), r.getString(2), r.getString(3), r.getTimestamp(4), r.getString(6)) ===
+      ((id, 4, "P4", "SUCCESS", started, "loaded batches 7: 1 days, 3 facts")))
+    assert(!r.getTimestamp(5).before(started))
+    val names = new java.io.File(logDir).list().toSeq
+    assert(names.size === 1 && names.head.endsWith(s"-$id-P4-SUCCESS.parquet"), names)
+  }
+
   test("S6: config scans") {
     import spark.implicits._
     val kv = Seq(("db_host", "x"), ("staging_schema", "stg"))

@@ -7,20 +7,26 @@ import graft.pipeline.Pipeline
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions.col
 
-/** P4's and MART's crash safety, adversarially. A daily load lands a 4th
+/** The daily load's crash safety, adversarially. A daily load lands a 4th
   * day (`lottery_next`: the new number 51 sorts below 78) on the 3-day
   * warehouse of the `lottery` fixture. This spec kills that load at every
-  * boundary (via `Pipeline.crashHook`), including between a driver-written
-  * table's temp file and its move, and asserts per crash point:
+  * boundary (via `Pipeline.crashHook`): on either side of the staging and
+  * transform batch commits, between a driver-written table's temp file
+  * and its move, between the fact append and the batch's loaded mark, and
+  * after it. It asserts per crash point:
   *
   *   1. THE KEYS SURVIVE: the crashed warehouse's dim_number is complete
   *      and every stored number keeps its number_key, since the facts
   *      appended so far reference it (a lost dim_number would re-key from
   *      scratch and re-attribute them).
   *   2. REPLAY CONVERGES: a replayed `runAll` gives the never-crashed
-  *      warehouse: the same dim_number keys, the same facts with no
-  *      duplicate grain, the same mart, and one data file per
-  *      driver-written table, with no temp file left behind.
+  *      warehouse: the same dim_number keys, dim_date, staging and
+  *      transform rows (up to `load_timestamp` and the batch number), the
+  *      same facts with no duplicate grain, the same mart, and one data
+  *      file per driver-written table.
+  *   3. NOTHING UNCOMMITTED IS LEFT: every batch on disk and every file
+  *      marker belongs to a batch that passed all three stages, and no
+  *      temp file or output committer directory remains.
   */
 class PipelineCrashSpec extends SparkSpec {
 
@@ -33,6 +39,14 @@ class PipelineCrashSpec extends SparkSpec {
   private def facts(root: Path): Set[Seq[Any]] = rows(spark.read.parquet(lay(root).factPrize))
 
   private def mart(root: Path): Set[Seq[Any]] = rows(spark.read.parquet(lay(root).mart))
+
+  private def dates(root: Path): Set[Seq[Any]] = rows(spark.read.parquet(lay(root).dimDate))
+
+  /** A batch table's rows with their counts, without the load time and
+    * the batch number (a replay's batch is another process_id). */
+  private def batchRows(dir: String): Map[Seq[Any], Int] =
+    spark.read.parquet(dir).drop("load_timestamp", "batch").collect().map(_.toSeq)
+      .groupBy(identity).map { case (r, rs) => r -> rs.length }
 
   /** The 4-day drop, and the 3-day warehouse every crash starts from. */
   private lazy val (drop, base): (String, Path) = {
@@ -54,21 +68,55 @@ class PipelineCrashSpec extends SparkSpec {
     root
   }
 
-  /** Never-crashed reference: keys, facts and mart after the 4th day. */
-  private lazy val reference: (Map[String, Int], Set[Seq[Any]], Set[Seq[Any]]) = {
+  /** Never-crashed reference after the 4th day. */
+  private final case class Warehouse(keys: Map[String, Int], facts: Set[Seq[Any]],
+                                     mart: Set[Seq[Any]], dates: Set[Seq[Any]],
+                                     staging: Map[Seq[Any], Int], transform: Map[Seq[Any], Int])
+
+  private def warehouse(root: Path) = Warehouse(keys(root), facts(root), mart(root),
+    dates(root), batchRows(lay(root).staging), batchRows(lay(root).transform))
+
+  private lazy val reference: Warehouse = {
     val root = copyOfBase("crashref")
     Pipeline.runAll(spark, drop, root.toString)
-    (keys(root), facts(root), mart(root))
+    warehouse(root)
   }
 
-  private val crashPoints = Seq("dim_date", "dim_number.tmp", "dim_number.moved",
-    "dim_number", "fact_prize",
-    "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved")
+  private val crashPoints = Seq("staging", "staging.committed",
+    "transform", "transform.committed", "dim_date.tmp", "dim_date.moved",
+    "dim_date", "dim_number.tmp", "dim_number.moved", "dim_number", "fact_prize",
+    "loaded", "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved")
+
+  /** Everything on disk belongs to a committed batch: staging and
+    * transform hold only batches that passed all stages, every file
+    * marker's batch did, and no temp file or `_temporary` is left. */
+  private def assertNothingUncommitted(root: Path, cp: String): Unit = {
+    val names = new File(lay(root).batches).list().toSeq
+    def passed(stage: String) = names.collect {
+      case n if n.startsWith(s"$stage-") => n.stripPrefix(s"$stage-").toLong }.toSet
+    val staged = passed("staged")
+    assert(staged.nonEmpty && passed("transformed") === staged && passed("loaded") === staged,
+      s"uncommitted batch after a crash at $cp: ${names.sorted}")
+    names.filter(_.startsWith("file-")).foreach { n =>
+      assert(staged(n.split('-')(1).toLong), s"marker $n of an uncommitted batch after $cp")
+    }
+    Seq(lay(root).staging, lay(root).transform).foreach { dir =>
+      val entries = new File(dir).list().toSeq
+      assert(!entries.contains("_temporary"), s"$dir: ${entries.sorted}")
+      assert(entries.filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).toSet
+        === staged, s"$dir: ${entries.sorted} after a crash at $cp")
+    }
+    Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart).foreach { dir =>
+      val names = new File(dir).listFiles().map(_.getName).toSeq
+      assert(names.count(n => !n.startsWith(".")) === 1, s"$dir: ${names.sorted}")
+      assert(!names.exists(_.startsWith(".tmp-")), s"$dir: ${names.sorted}")
+    }
+  }
 
   for (cp <- crashPoints)
     test(s"crash at '$cp': number keys survive, replay converges") {
-      val (refKeys, refFacts, refMart) = reference
-      assert(refKeys("51") === 5 && refKeys("78") === 4, "reference keys")
+      val ref = reference
+      assert(ref.keys("51") === 5 && ref.keys("78") === 4, "reference keys")
       val root = copyOfBase(s"crash_$cp")
       val stored = keys(root)
       try {
@@ -85,17 +133,17 @@ class PipelineCrashSpec extends SparkSpec {
 
       // (2) replay converges to the never-crashed warehouse
       val served = Pipeline.runAll(spark, drop, root.toString)
-      assert(keys(root) === refKeys, s"keys diverged after a crash at $cp")
       val factDf = spark.read.parquet(lay(root).factPrize)
       assert(factDf.groupBy("date_key", "number_key").count()
         .filter(col("count") > 1).count() === 0, s"duplicate fact grain after a crash at $cp")
-      assert(facts(root) === refFacts, s"facts diverged after a crash at $cp")
-      assert(mart(root) === refMart, s"mart diverged after a crash at $cp")
-      assert(rows(served) === refMart)
-      Seq(lay(root).dimNumber, lay(root).mart).foreach { dir =>
-        val names = new File(dir).listFiles().map(_.getName).toSeq
-        assert(names.count(n => !n.startsWith(".")) === 1, s"$dir: ${names.sorted}")
-        assert(!names.exists(_.startsWith(".tmp-")), s"$dir: ${names.sorted}")
-      }
+      val got = warehouse(root)
+      assert(got.keys === ref.keys, s"keys diverged after a crash at $cp")
+      assert(got.facts === ref.facts, s"facts diverged after a crash at $cp")
+      assert(got.mart === ref.mart, s"mart diverged after a crash at $cp")
+      assert(got.dates === ref.dates, s"dim_date diverged after a crash at $cp")
+      assert(got.staging === ref.staging, s"staging diverged after a crash at $cp")
+      assert(got.transform === ref.transform, s"transform diverged after a crash at $cp")
+      assert(rows(served) === ref.mart)
+      assertNothingUncommitted(root, cp)
     }
 }

@@ -4,9 +4,54 @@ import graft.pipeline.{Control, Lottery, Pipeline, Serving}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 /** SURVEY §3.1 end-to-end: gated P2→P4+mart orchestration into a parquet
   * warehouse, crash-safe re-runs (idempotent loads), run-log trail. */
 class PipelineOrchestrationSpec extends SparkSpec {
+
+  /** Write one crawler file for `day` with one Giải Bảy row per number. */
+  private def writeDay(drop: java.nio.file.Path, day: java.time.LocalDate,
+                       numbers: Seq[String]): java.nio.file.Path = {
+    val d = day.format(java.time.format.DateTimeFormatter.ofPattern("dd-MM-yyyy"))
+    Files.write(drop.resolve(s"xsmb_${d.replace("-", "")}.csv"),
+      ("\uFEFFprize,number_value,full_date,created_at\n" +
+        numbers.map(n => s"Giải Bảy,$n,$d,${day}T19:05:00.000Z\n").mkString)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private def fixtureFiles(resource: String): Seq[java.io.File] =
+    new java.io.File(getClass.getResource(resource).getPath).listFiles().toSeq.sortBy(_.getName)
+
+  /** A table's rows with their counts. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  /** Every table of a warehouse, comparable across warehouses: staging and
+    * transform without `load_timestamp` and the batch number; the fact
+    * and dim_number rows with the surrogate number_key resolved to its
+    * number_value (keys follow arrival order). */
+  private def tables(root: String): Map[String, Map[Seq[Any], Int]] = {
+    val lay = Pipeline.Layout(root)
+    val dn = spark.read.parquet(lay.dimNumber)
+    Map(
+      "staging" -> bag(spark.read.parquet(lay.staging).drop("load_timestamp", "batch")),
+      "transform" -> bag(spark.read.parquet(lay.transform).drop("load_timestamp", "batch")),
+      "dim_date" -> bag(spark.read.parquet(lay.dimDate)),
+      "dim_number" -> bag(dn.drop("number_key")),
+      "fact_prize" -> bag(spark.read.parquet(lay.factPrize).join(dn.select("number_key", "number_value"),
+        "number_key").drop("number_key")),
+      "mart" -> bag(spark.read.parquet(lay.mart)))
+  }
+
+  /** SUCCESS messages of the latest run of each stage. */
+  private def messages(root: String): Map[String, String] = {
+    import org.apache.spark.sql.functions.col
+    spark.read.schema(Control.processLogSchema).parquet(Pipeline.Layout(root).processLog)
+      .filter(col("status") === "SUCCESS").collect()
+      .groupBy(_.getAs[String]("process_code"))
+      .map { case (code, rs) => code -> rs.maxBy(_.getAs[Long]("process_id")).getAs[String]("message") }
+  }
 
   test("runAll builds the warehouse, re-run is a no-op, log trail complete") {
     val csvDir = getClass.getResource("/lottery").getPath
@@ -86,6 +131,11 @@ class PipelineOrchestrationSpec extends SparkSpec {
     val csvDir = getClass.getResource("/lottery").getPath
     val root = Files.createTempDirectory("whjobs").toString + "/wh"
     Pipeline.runAll(spark, csvDir, root)
+    // a first load of more than 32 files: Spark lists more than 32 paths
+    // with a job of its own, so no stage may read files path by path
+    val bigDrop = Files.createTempDirectory("whjobs40")
+    (1 to 40).foreach(i => writeDay(bigDrop, java.time.LocalDate.of(2025, 1, 1).plusDays(i),
+      Seq(f"${i % 100}%02d", f"${(i * 7) % 100}%02d")))
 
     val jobs, outside = new AtomicInteger()
     val listener = new SparkListener {
@@ -105,6 +155,9 @@ class PipelineOrchestrationSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
+      val (_, bigJobs, bigOutside) = counted(
+        Pipeline.runAll(spark, bigDrop.toString, bigDrop.resolveSibling("whjobs40-wh").toString))
+      assert(bigOutside === 0, s"$bigOutside of $bigJobs jobs of a 40-file load ran outside an execution")
       val (mart, runJobs, runOutside) = counted(Pipeline.runAll(spark, csvDir, root))
       assert(runJobs > 0)
       assert(runOutside === 0, s"$runOutside of $runJobs jobs ran outside an execution")
@@ -144,6 +197,137 @@ class PipelineOrchestrationSpec extends SparkSpec {
       assert(spark.read.parquet(dir).schema === spark.read.parquet(sparkWritten).schema)
       assert(rows(spark.read.parquet(dir)) === rows(df), dir)
     }
+  }
+
+  test("fixture days landed one at a time equal one cold build, table by table") {
+    val days = fixtureFiles("/lottery") ++ fixtureFiles("/lottery_next")
+    val base = Files.createTempDirectory("whdaily")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val daily = base.resolve("daily").toString
+    days.foreach { f =>
+      Files.copy(f.toPath, drop.resolve(f.getName))
+      Pipeline.runAll(spark, drop.toString, daily)
+    }
+    val cold = base.resolve("cold").toString
+    Pipeline.runAll(spark, drop.toString, cold)
+    val (got, want) = (tables(daily), tables(cold))
+    want.keys.foreach(t => assert(got(t) === want(t), t))
+    // four batches, one per landing; the cold build is one
+    assert(new java.io.File(Pipeline.Layout(daily).staging).list().count(_.startsWith("batch=")) === 4)
+  }
+
+  test("a late, older day gets the cold build's facts for that day; no stored fact changes") {
+    val days = fixtureFiles("/lottery") ++ fixtureFiles("/lottery_next")
+    val late = days.find(_.getName == "xsmb_25102025.csv").get
+    val base = Files.createTempDirectory("whlate")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    days.filterNot(_ == late).foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    def facts = spark.read.parquet(Pipeline.Layout(root).factPrize)
+      .join(spark.read.parquet(Pipeline.Layout(root).dimNumber).select("number_key", "number_value"),
+        "number_key").drop("number_key")
+    val before = bag(facts)
+    Files.copy(late.toPath, drop.resolve(late.getName))
+    Pipeline.runAll(spark, drop.toString, root)
+    val after = bag(facts)
+    val cold = base.resolve("cold").toString
+    Pipeline.runAll(spark, drop.toString, cold)
+    def ofDay(b: Map[Seq[Any], Int]) = b.filter(_._1.head == 20251025)
+    assert(ofDay(after).nonEmpty)
+    assert(ofDay(after) === ofDay(bag(spark.read.parquet(Pipeline.Layout(cold).factPrize)
+      .join(spark.read.parquet(Pipeline.Layout(cold).dimNumber).select("number_key", "number_value"),
+        "number_key").drop("number_key"))))
+    assert(after -- ofDay(after).keys === before, "a stored fact changed")
+  }
+
+  test("a rewritten crawler file is staged again and appends no duplicate fact grain") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("whrewrite")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    val lay = Pipeline.Layout(root)
+    fixtureFiles("/lottery").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    def facts = spark.read.parquet(lay.factPrize)
+    def noDuplicateGrain() = assert(facts.groupBy("date_key", "number_key").count()
+      .filter(col("count") > 1).count() === 0, "duplicate fact grain")
+    val stagedRows = spark.read.parquet(lay.staging).count()
+
+    // the same bytes with a new modification time
+    val day = drop.resolve("xsmb_26102025.csv").toFile
+    assert(day.setLastModified(day.lastModified() - 60000))
+    Pipeline.runAll(spark, drop.toString, root)
+    assert(messages(root)("P2").endsWith("staged 1 files"), messages(root)("P2"))
+    assert(spark.read.parquet(lay.staging).count() === stagedRows + 1)
+    noDuplicateGrain()
+    assert(facts.count() === 6)
+
+    // a new length: one more row for that day
+    Files.write(day.toPath, "Giải Bảy,45,26-10-2025,2025-10-26T19:05:09.456Z\n"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8), java.nio.file.StandardOpenOption.APPEND)
+    Pipeline.runAll(spark, drop.toString, root)
+    noDuplicateGrain()
+    assert(facts.count() === 7)
+    assert(facts.filter(col("date_key") === 20251026).count() === 2)
+  }
+
+  test("a run with nothing new writes no file before MART and runs no Spark job before it") {
+    import org.apache.spark.scheduler.{GraftStageInfoAccess, SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val csvDir = getClass.getResource("/lottery").getPath
+    val root = Files.createTempDirectory("whidle").toString + "/wh"
+    val lay = Pipeline.Layout(root)
+    Pipeline.runAll(spark, csvDir, root)
+    def files(): Map[String, (Long, Long)] = Seq(lay.staging, lay.transform, lay.dimDate,
+        lay.dimNumber, lay.factPrize, lay.batches).flatMap { dir =>
+      Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala.toSeq
+        .map(p => p.toString -> (p.toFile.lastModified(), p.toFile.length()))
+    }.toMap
+    val before = files()
+
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobStarts.add(e.time)
+    }
+    GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.runAll(spark, csvDir, root)
+      GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(files() === before)
+    val martStart = spark.read.schema(Control.processLogSchema).parquet(lay.processLog)
+      .filter(col("process_code") === "MART" && col("status") === "RUNNING")
+      .agg(org.apache.spark.sql.functions.max("started_at")).head().getTimestamp(0).getTime
+    assert(!jobStarts.isEmpty, "MART runs its collect")
+    jobStarts.asScala.foreach(t => assert(t >= martStart, s"a job started at $t, before MART at $martStart"))
+    Seq("P2", "P3", "P4").foreach(st => assert(messages(root)(st) === s"$st: nothing new", st))
+  }
+
+  test("each stage's SUCCESS row says what it did") {
+    val base = Files.createTempDirectory("whmsg")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    fixtureFiles("/lottery").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    val cold = messages(root)
+    val batch = """P2: batch (\d+): staged 3 files""".r
+    val b = cold("P2") match { case batch(id) => id; case m => fail(m) }
+    assert(cold("P3") === s"P3: transformed batches $b")
+    assert(cold("P4") === s"P4: loaded batches $b: 3 days, 6 facts")
+
+    fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    val daily = messages(root)
+    val b2 = daily("P2") match { case batch(_) => fail("3 files"); case m => m }
+    assert(b2.matches("""P2: batch \d+: staged 1 files"""), b2)
+    val id = b2.split(' ')(2).stripSuffix(":")
+    assert(id.toLong > b.toLong)
+    assert(daily("P3") === s"P3: transformed batches $id")
+    // the 4th day: 09 (twice), 51 and 78 → 3 facts
+    assert(daily("P4") === s"P4: loaded batches $id: 1 days, 3 facts")
+    assert(daily("MART") === "MART: 5 numbers")
   }
 
   test("Observation: stage metrics ride the write pass itself — no second count job") {

@@ -47,7 +47,9 @@ object Lottery {
     * `only` restricts the scan to the files of those names. It is a
     * `_metadata.file_name` filter over the directory, which prunes at
     * file level, rather than a list of paths: Spark lists more than 32
-    * explicit paths with a Spark job of its own. */
+    * explicit paths with a Spark job of its own. The filter is left out
+    * when the directory's listing holds no other file (a first load), as
+    * it costs each row an evaluation. */
   def staging(spark: SparkSession, csvDir: String,
               only: Option[Seq[String]] = None): DataFrame = {
     val drop = spark.read
@@ -57,7 +59,9 @@ object Lottery {
       .option("inputBufferSize", "4096")
       .schema(crawlSchema)
       .csv(csvDir)
-    only.fold(drop)(names => drop.filter(col("_metadata.file_name").isin(names: _*)))
+    def listed = drop.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getName)
+    only.filterNot(names => listed.forall(names.toSet))
+      .fold(drop)(names => drop.filter(col("_metadata.file_name").isin(names: _*)))
       .na.drop("any", Seq("prize", "number_value", "full_date"))
       .withColumn("load_timestamp", current_timestamp())
   }
@@ -179,6 +183,9 @@ object Lottery {
     * that day, and its pairs already stored are not appended again. A day
     * landed after later days gets its gap from the earlier history, while
     * the stored fact of the number's next appearance keeps its gap.
+    * `transformDf` must hold each day's rows once: a day in two of
+    * `Pipeline`'s batches (a re-crawled file) is loaded one batch at a
+    * time, so the later batch's pairs meet the earlier one's stored facts.
     * `dimNumberDf` must carry every number of `transformDf`. */
   def factPrize(transformDf: DataFrame, dimNumberDf: DataFrame,
                 history: Option[DataFrame] = None): DataFrame = {
@@ -221,24 +228,27 @@ object Lottery {
   /** mart_two_digit_probability (SURVEY §2.9 G7 reconstruction from
     * Backend/.../entity/Mart.java:14-34): per number — total occurrences,
     * global distinct-draw-day denominator, DECIMAL(38,4) probability,
-    * last appearance and recency vs the latest draw date. */
-  def mart(factDf: DataFrame, dimNumberDf: DataFrame, dimDateDf: DataFrame): DataFrame = {
-    val totals = dimDateDf.agg(
-      countDistinct(col("date_key")).cast("int").as("total_draws"),
-      max(col("full_date")).as("global_last"))
+    * last appearance and recency vs the latest draw date.
+    *
+    * The two draw-day totals come from `dimDateRows`, dim_date's rows (one
+    * per draw day, ≤366 per year of history), which the caller holds. They
+    * enter the plan as literals, so the mart aggregates only the facts. */
+  def mart(factDf: DataFrame, dimNumberDf: DataFrame, dimDateRows: Seq[Row]): DataFrame = {
+    val totalDraws = dimDateRows.map(_.getAs[Int]("date_key")).distinct.size
+    val globalLast = dimDateRows.map(_.getAs[java.sql.Date]("full_date")).maxByOption(_.getTime)
+      .fold(lit(null).cast(DateType))(lit)
     factDf
       .groupBy(col("number_key"))
       .agg(sum(col("occurrence_count")).cast(DecimalType(32, 0)).as("total_occurrences"))
       .join(broadcast(dimNumberDf), Seq("number_key"))
-      .crossJoin(broadcast(totals))
       .select(
         col("number_value"),
         col("total_occurrences"),
-        col("total_draws"),
-        (col("total_occurrences").cast(DecimalType(20, 10)) / col("total_draws"))
+        lit(totalDraws).as("total_draws"),
+        (col("total_occurrences").cast(DecimalType(20, 10)) / totalDraws)
           .cast(DecimalType(38, 4)).as("probability"),
         col("last_appeared_date"),
-        datediff(col("global_last"), col("last_appeared_date")).as("days_since_last"))
+        datediff(globalLast, col("last_appeared_date")).as("days_since_last"))
   }
 
   /** GET /mart/statistic (MartRepository.java:14-33): the four dashboard
@@ -300,18 +310,19 @@ object Lottery {
     val dd = dimDate(tr)
     val dn = dimNumber(tr)
     val fp = factPrize(tr, dn)
-    LotteryWarehouse(stg, tr, dd, dn, fp, mart(fp, dn, dd))
+    LotteryWarehouse(stg, tr, dd, dn, fp)
   }
 }
 
 /** The materialized-on-demand warehouse surface (all lazy DataFrames).
-  * `statistic` collects the mart, so it is computed on first use. */
+  * `mart` collects dim_date (one row per draw day) and `statistic` the
+  * mart, so each is computed on first use. */
 final case class LotteryWarehouse(
     staging: DataFrame,
     transform: DataFrame,
     dimDate: DataFrame,
     dimNumber: DataFrame,
-    factPrize: DataFrame,
-    mart: DataFrame) {
+    factPrize: DataFrame) {
+  lazy val mart: DataFrame = Lottery.mart(factPrize, dimNumber, dimDate.collect().toSeq)
   lazy val statistic: DataFrame = Lottery.statistic(mart)
 }

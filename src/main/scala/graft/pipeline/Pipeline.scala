@@ -37,25 +37,27 @@ import org.apache.spark.sql.types._
   * A run loads only what is new. The crawler files not yet staged become
   * one batch, numbered by P2's process_id: P2 stages them into
   * `staging/batch=<b>`, P3 transforms that batch into `transform/batch=<b>`,
-  * and P4 adds its days, numbers and facts to the star schema. Each stage
-  * commits a batch with a zero-byte marker in `_batches` (`Marks`), so a
-  * run does work in proportion to the new files, not to history. A batch
-  * directory is read by its path, never through its table's root, and a
-  * run that finds nothing new writes nothing before MART.
+  * and P4 adds its days, numbers and facts to the star schema. P3 and P4
+  * also take the batches a crashed run left pending, one at a time in
+  * batch order. Each stage commits a batch with a zero-byte marker in
+  * `_batches` (`Marks`), so a run does work in proportion to the new
+  * files, not to history. A batch directory is read by its path, never
+  * through its table's root, and a run that finds nothing new writes
+  * nothing before MART.
   *
   * Spark executions per run with new files: one write each for P2 and P3,
   * one collect of both dims and the fact append in P4, and one collect of
   * the mart. The dims and the mart are small by construction (dim_date one
   * row per draw day, dim_number and mart ≤100 rows), so the driver holds
-  * them, writes them (`replaceTable`) and passes them on as local
-  * relations: the next load reads the stored dims on the driver, the fact
-  * append and the mart join the held dims, and the returned mart is the
-  * held mart, which `Serving` snapshots without a Spark job. Every re-read
-  * of a table is given its writer's schema, so no read runs a
-  * schema-inference job. The run log is written by the driver, one small
-  * parquet file per status row, and the gates read only the log's
-  * directory listing (see `Control.logStatus`), so bookkeeping runs no
-  * Spark job either.
+  * them, writes them (`replaceTable`) and passes them on: the next load
+  * reads the stored dims on the driver, the fact append and the mart join
+  * the held dim_number, the mart takes its draw-day totals from the held
+  * dim_date rows, and the returned mart is the held mart, which `Serving`
+  * snapshots without a Spark job. Every re-read of a table is given its
+  * declared schema (`Schemas`), so no read runs a schema-inference job.
+  * The run log is written by the driver, one small parquet file per
+  * status row, and the gates read only the log's directory listing (see
+  * `Control.logStatus`), so bookkeeping runs no Spark job either.
   */
 object Pipeline {
 
@@ -143,9 +145,6 @@ object Pipeline {
   private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  private def nullable(schema: StructType): StructType =
-    StructType(schema.map(_.copy(nullable = true)))
-
   /** The rows of the driver-written table at `dir`, read on the driver (no
     * Spark job) through java.nio in `schema`'s columns, which are ints,
     * strings or dates. For the small tables `replaceTable` writes. Empty
@@ -172,22 +171,25 @@ object Pipeline {
       }
   }
 
-  /** The tables' schemas as read back: each from its function over an
-    * empty input, with every column nullable, as a file source reads it.
-    * Analysis only, so they are derived once and kept. */
-  private final case class Schemas(staging: StructType, transform: StructType,
-                                   date: StructType, number: StructType, fact: StructType)
-
-  @volatile private var derived: Option[Schemas] = None
-
-  private def schemas(spark: SparkSession): Schemas = derived.getOrElse {
-    val staging = Lottery.crawlSchema.add("load_timestamp", TimestampType)
-    val tr = local(spark, nullable(Lottery.transform(local(spark, staging, Nil)).schema), Nil)
-    val s = Schemas(staging, tr.schema, nullable(Lottery.dimDate(tr).schema),
-      nullable(Lottery.dimNumber(tr).schema),
-      nullable(Lottery.factPrize(tr, Lottery.dimNumber(tr)).schema))
-    derived = Some(s)
-    s
+  /** The tables' schemas as a file source reads them back (every column
+    * nullable), declared so that a re-read runs no schema inference and a
+    * run analyses no plan to learn them. Each is its stage function's
+    * output schema (`PipelineOrchestrationSpec` checks it). */
+  private[graft] object Schemas {
+    private def of(fields: (String, DataType)*) =
+      StructType(fields.map { case (name, t) => StructField(name, t) })
+    val staging: StructType = Lottery.crawlSchema.add("load_timestamp", TimestampType)
+    val transform: StructType = of("number_value" -> IntegerType, "full_date" -> DateType,
+      "range_group" -> StringType, "is_weekend" -> IntegerType, "is_even" -> IntegerType,
+      "load_timestamp" -> TimestampType)
+    val date: StructType = of("date_key" -> IntegerType, "full_date" -> DateType,
+      "day_of_month" -> IntegerType, "month_of_year" -> IntegerType, "year_value" -> IntegerType,
+      "year_month_value" -> StringType, "day_name" -> StringType, "is_weekend" -> IntegerType)
+    val number: StructType = of("number_key" -> IntegerType, "number_value" -> StringType,
+      "is_even" -> IntegerType, "last_digit" -> IntegerType, "last_appeared_date" -> DateType)
+    val fact: StructType = of("date_key" -> IntegerType, "number_key" -> IntegerType,
+      "occurrence_count" -> IntegerType, "total_draws" -> IntegerType,
+      "probability_value" -> DecimalType(38, 10), "days_since_last" -> IntegerType)
   }
 
   /** Spark's parquet write support for a file parquet opens itself. */
@@ -301,9 +303,7 @@ object Pipeline {
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P1"),
       "P1 gate failed (StagingController.java:41-44 semantics)")
 
-    val schema = schemas(spark)
-    val emptyTr = local(spark, schema.transform, Nil)
-    def batchPaths(table: String, batches: Seq[Long]) = batches.map(b => s"$table/batch=$b")
+    val emptyTr = local(spark, Schemas.transform, Nil)
 
     var mk = marks(lay.batches)
 
@@ -344,7 +344,7 @@ object Pipeline {
       pending.foreach { b =>
         deleteTree(s"${lay.transform}/batch=$b")
         deleteTree(s"${lay.transform}/_temporary")
-        Lottery.transform(spark.read.schema(schema.staging).parquet(batchPaths(lay.staging, Seq(b)): _*))
+        Lottery.transform(spark.read.schema(Schemas.staging).parquet(s"${lay.staging}/batch=$b"))
           .withColumn("batch", lit(b))
           .write.partitionBy("batch").mode("append").parquet(lay.transform)
         crashHook("transform")
@@ -356,66 +356,80 @@ object Pipeline {
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P3"),
       "P3 gate failed (LotteryTransform.java:26-40 semantics)")
 
-    // P4: the transformed batches not yet loaded. Both dims are small, so
-    // the stored ones are read on the driver and recomputed over the
-    // batches plus the stored rows, in one collect: dim_date's rows are
-    // its days, dim_number's (number_value, last_appeared_date) are each
-    // number's latest draw so far.
-    val (dn, dd) = gate("P4") { _ =>
-      val pending = mk.pending("transformed", "loaded")
+    // P4: the transformed batches not yet loaded, one at a time in batch
+    // order, so a day that a later batch stages again (a re-crawled file)
+    // meets the earlier batch's stored facts, as it does when the two
+    // batches load on separate runs. Both dims are small, so the stored
+    // ones are read on the driver and recomputed over the batch plus the
+    // stored rows, in one collect: dim_date's rows are its days,
+    // dim_number's (number_value, last_appeared_date) are each number's
+    // latest draw so far. Returns dim_number as a local relation,
+    // dim_date's rows, the days added and the facts appended; with no
+    // batch, the stored dims.
+    def load(batch: Option[Long]): (DataFrame, Seq[Row], Int, Long) = {
       // a batch's transform is its Giải Bảy rows (4 per draw day), and the
       // stored dims are one row per day and per number: one partition
       // each, so their aggregates and windows run with no shuffle
-      val tr = if (pending.isEmpty) emptyTr
-        else spark.read.schema(schema.transform).parquet(batchPaths(lay.transform, pending): _*)
-          .coalesce(1)
-      val storedDates = storedRows(spark, lay.dimDate, schema.date)
-      val storedNumbers = storedRows(spark, lay.dimNumber, schema.number)
+      val tr = batch.fold(emptyTr)(b =>
+        spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b").coalesce(1))
+      val storedDates = storedRows(spark, lay.dimDate, Schemas.date)
+      val storedNumbers = storedRows(spark, lay.dimNumber, Schemas.number)
       val dates = Lottery.dimDate(tr.select("full_date", "is_weekend").unionByName(
-        local(spark, schema.date, storedDates).select("full_date", "is_weekend")).coalesce(1))
+        local(spark, Schemas.date, storedDates).select("full_date", "is_weekend")).coalesce(1))
       val numbers = Lottery.dimNumber(
         tr.select(col("number_value").cast("string").as("number_value"), col("full_date"))
-          .unionByName(local(spark, schema.number, storedNumbers)
+          .unionByName(local(spark, Schemas.number, storedNumbers)
             .select(col("number_value"), col("last_appeared_date").as("full_date"))).coalesce(1))
-      if (pending.isEmpty)
-        ((local(spark, numbers.schema, storedNumbers), local(spark, dates.schema, storedDates)),
-          "nothing new")
-      else {
-        // one collect returns both dims: one struct column each
-        val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
-            lit(null).cast(numbers.schema).as("n"))
-          .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
-            struct(numbers.columns.map(col): _*).as("n")))
-          .collect()
-        val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
-          .sortBy(_.getAs[Int]("date_key"))
-        val dd = replaceTable(spark, lay.dimDate, dates.schema, dateRows)
-        crashHook("dim_date")
-        // a number keeps the key the appended facts already carry
-        val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
-          r.getInt(r.fieldIndex("number_key"))).toMap
-        val dn = replaceTable(spark, lay.dimNumber, numbers.schema,
-          Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq))
-        crashHook("dim_number")
-        // the stored facts are the history of the per-number gap, and the
-        // pairs already stored (a crashed load's) are not appended again;
-        // the fact count rides the write (no second job)
-        val appended = Observation()
-        Lottery.factPrize(tr, dn, Some(readTable(spark, lay.factPrize, schema.fact)))
-          .observe(appended, count(lit(1)).as("facts"))
-          .write.mode("append").parquet(lay.factPrize)
-        crashHook("fact_prize")
-        pending.foreach(b => mk = mk.mark("loaded", b))
-        crashHook("loaded")
-        ((dn, dd), s"loaded batches ${pending.mkString(",")}: " +
-          s"${dateRows.size - storedDates.size} days, ${appended.get("facts")} facts")
+      batch match {
+        case None =>
+          (local(spark, numbers.schema, storedNumbers), storedDates, 0, 0L)
+        case Some(b) =>
+          // one collect returns both dims: one struct column each
+          val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
+              lit(null).cast(numbers.schema).as("n"))
+            .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
+              struct(numbers.columns.map(col): _*).as("n")))
+            .collect()
+          val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
+            .sortBy(_.getAs[Int]("date_key"))
+          replaceTable(spark, lay.dimDate, dates.schema, dateRows)
+          crashHook("dim_date")
+          // a number keeps the key the appended facts already carry
+          val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
+            r.getInt(r.fieldIndex("number_key"))).toMap
+          val dn = replaceTable(spark, lay.dimNumber, numbers.schema,
+            Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq))
+          crashHook("dim_number")
+          // the stored facts are the history of the per-number gap, and the
+          // pairs already stored (a crashed load's) are not appended again;
+          // the fact count rides the write (no second job)
+          val appended = Observation()
+          Lottery.factPrize(tr, dn, Some(readTable(spark, lay.factPrize, Schemas.fact)))
+            .observe(appended, count(lit(1)).as("facts"))
+            .write.mode("append").parquet(lay.factPrize)
+          crashHook("fact_prize")
+          mk = mk.mark("loaded", b)
+          crashHook("loaded")
+          (dn, dateRows, dateRows.size - storedDates.size, appended.get("facts").asInstanceOf[Long])
+      }
+    }
+    val (dn, dateRows) = gate("P4") { _ =>
+      val pending = mk.pending("transformed", "loaded")
+      if (pending.isEmpty) {
+        val (dn, dateRows, _, _) = load(None)
+        ((dn, dateRows), "nothing new")
+      } else {
+        val loads = pending.map(b => load(Some(b)))
+        val (dn, dateRows, _, _) = loads.last
+        ((dn, dateRows), s"loaded batches ${pending.mkString(",")}: " +
+          s"${loads.map(_._3).sum} days, ${loads.map(_._4).sum} facts")
       }
     }
 
     // the mart is ≤100 rows (one per two-digit number): collected once,
     // written by the driver, and returned as the rows it holds
     gate("MART") { _ =>
-      val mart = Lottery.mart(readTable(spark, lay.factPrize, schema.fact), dn, dd)
+      val mart = Lottery.mart(readTable(spark, lay.factPrize, Schemas.fact), dn, dateRows)
       val rows = mart.collect().toSeq
       (replaceTable(spark, lay.mart, mart.schema, rows), s"${rows.size} numbers")
     }

@@ -10,21 +10,17 @@ import org.apache.spark.sql.functions._
   * :291-327, A3 fact :348-356) as declarative anti-joins.
   *
   * Scale posture: `existing` is only the *key projection*, never the full
-  * table; when the key set is dimension-sized it is broadcast so the
-  * incoming fact stream never shuffles. For fact-sized key sets Catalyst
-  * falls back to a shuffled left-anti — still one pass.
+  * table, and it is broadcast, so the incoming stream never shuffles. The
+  * callers' key sets are dimension-sized.
   */
 object Upsert {
 
   /** Rows of `incoming` whose key is absent from `existing` (K3's
     * INSERT-IGNORE / guarded-insert semantics), intra-batch deduped first
     * (the reference's A3 quirk canonicalized, SURVEY §7.2). */
-  def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-              broadcastExisting: Boolean = true): DataFrame = {
-    val existingKeys = existing.select(keys.map(existing.col): _*)
-    val probe = if (broadcastExisting) broadcast(existingKeys) else existingKeys
-    incoming.dropDuplicates(keys).join(probe, keys, "left_anti")
-  }
+  def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    incoming.dropDuplicates(keys)
+      .join(broadcast(existing.select(keys.map(existing.col): _*)), keys, "left_anti")
 
   /** Append-only upsert: union of existing rows and genuinely-new incoming
     * rows — `load(load(t, b), b) == load(t, b)` (SURVEY §5.2 idempotence). */

@@ -1,7 +1,8 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 import graft.pipeline.Pipeline
 import org.apache.commons.io.FileUtils
@@ -27,6 +28,13 @@ import org.apache.spark.sql.functions.col
   *   3. NOTHING UNCOMMITTED IS LEFT: every batch on disk and every file
   *      marker belongs to a batch that passed all three stages, and no
   *      temp file or output committer directory remains.
+  *
+  * A second sweep re-crawls the 4th day's file (a new modification time)
+  * between a crash after its batch's staging commit and the replay, so
+  * the replay stages it again and finds two batches pending. The replay
+  * must equal the never-crashed run that loads the day and then stages
+  * the re-crawled file: the day's facts are appended once, not counted
+  * twice.
   */
 class PipelineCrashSpec extends SparkSpec {
 
@@ -112,6 +120,47 @@ class PipelineCrashSpec extends SparkSpec {
       assert(!names.exists(_.startsWith(".tmp-")), s"$dir: ${names.sorted}")
     }
   }
+
+  /** A copy of the 4-day drop, modification times kept. */
+  private def copyOfDrop(name: String): Path = {
+    val dir = Files.createTempDirectory(name).resolve("drop")
+    Files.createDirectories(dir)
+    new File(drop).listFiles().foreach(f =>
+      Files.copy(f.toPath, dir.resolve(f.getName), StandardCopyOption.COPY_ATTRIBUTES))
+    dir
+  }
+
+  /** The crawler writes the 4th day's file again: same rows, a new
+    * modification time, so it is a new file to P2. */
+  private def recrawl(dropDir: Path): Unit =
+    Files.setLastModifiedTime(dropDir.resolve("xsmb_27102025.csv"), FileTime.fromMillis(1761600000000L))
+
+  /** Never-crashed: the 4th day loads, then its re-crawled file is staged
+    * again as a batch of its own. */
+  private lazy val recrawledReference: Warehouse = {
+    val (root, dropDir) = (copyOfBase("recrawlref"), copyOfDrop("recrawlref"))
+    Pipeline.runAll(spark, dropDir.toString, root.toString)
+    recrawl(dropDir)
+    Pipeline.runAll(spark, dropDir.toString, root.toString)
+    assert(new File(lay(root).staging).list().count(_.startsWith("batch=")) === 3)
+    warehouse(root)
+  }
+
+  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize"))
+    test(s"crash at '$cp', then a re-crawl of the crashed batch's file: replay converges") {
+      val ref = recrawledReference
+      val (root, dropDir) = (copyOfBase(s"recrawl_$cp"), copyOfDrop(s"recrawl_$cp"))
+      try {
+        Pipeline.crashHook = step => if (step == cp) throw new RuntimeException(s"injected@$cp")
+        intercept[RuntimeException](Pipeline.runAll(spark, dropDir.toString, root.toString))
+      } finally Pipeline.crashHook = _ => ()
+      recrawl(dropDir)
+      Pipeline.runAll(spark, dropDir.toString, root.toString)
+      val got = warehouse(root)
+      assert(got.facts === ref.facts, s"facts diverged after a crash at $cp and a re-crawl")
+      assert(got === ref, s"warehouse diverged after a crash at $cp and a re-crawl")
+      assertNothingUncommitted(root, cp)
+    }
 
   for (cp <- crashPoints)
     test(s"crash at '$cp': number keys survive, replay converges") {

@@ -199,6 +199,20 @@ class PipelineOrchestrationSpec extends SparkSpec {
     }
   }
 
+  test("the declared read schemas are the stage functions' output schemas, read back nullable") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    def nullable(s: StructType) = StructType(s.map(_.copy(nullable = true)))
+    val stg = spark.createDataFrame(java.util.List.of[Row](), Pipeline.Schemas.staging)
+    val tr = Lottery.transform(stg)
+    assert(nullable(tr.schema) === Pipeline.Schemas.transform)
+    assert(nullable(Lottery.dimDate(tr).schema) === Pipeline.Schemas.date)
+    assert(nullable(Lottery.dimNumber(tr).schema) === Pipeline.Schemas.number)
+    assert(nullable(Lottery.factPrize(tr, Lottery.dimNumber(tr)).schema) === Pipeline.Schemas.fact)
+    assert(nullable(Lottery.staging(spark, getClass.getResource("/lottery").getPath).schema)
+      === Pipeline.Schemas.staging)
+  }
+
   test("fixture days landed one at a time equal one cold build, table by table") {
     val days = fixtureFiles("/lottery") ++ fixtureFiles("/lottery_next")
     val base = Files.createTempDirectory("whdaily")

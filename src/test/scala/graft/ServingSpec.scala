@@ -79,8 +79,8 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val res = Lottery.run(spark, getClass.getResource("/lottery").getPath)
-    // the statistic collects the mart when first used; computed here, so
-    // only Serving.start's own collects are counted
+    // the statistic collects the mart, and the mart dim_date, when first
+    // used; computed here, so only Serving.start's own collects are counted
     val statistic = res.statistic
     val collects = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new QueryExecutionListener {

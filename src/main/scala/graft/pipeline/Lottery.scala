@@ -3,6 +3,7 @@ package graft.pipeline
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,7 +25,8 @@ import org.apache.spark.sql.types._
   * 100 TB the fact write would be `partitionBy(year)` on date; dims stay
   * broadcast-size by construction (≤100 numbers, 1 row/day). `Pipeline`
   * runs the same functions over each load's new files plus the stored
-  * rows they depend on (see `factPrize`'s `history`).
+  * rows they depend on (see `factPrize`'s `history` and `mart`'s
+  * `totals`).
   */
 object Lottery {
 
@@ -147,11 +149,11 @@ object Lottery {
     * key above a new number and re-attribute the old facts (the reference's
     * AUTO_INCREMENT keys never move either). With nothing kept this is
     * `dimNumber`'s own keying. Plain driver code: both sides are ≤100 rows.
-    * Returns the rows ordered by key. */
+    * Returns the rows ordered by key, in `fresh`'s schema. */
   def keepNumberKeys(kept: Map[String, Int], fresh: Seq[Row]): Seq[Row] = {
     def number(r: Row): String = r.getAs[String]("number_value")
     def withKey(r: Row, key: Int): Row =
-      Row.fromSeq(r.toSeq.updated(r.fieldIndex("number_key"), key))
+      new GenericRowWithSchema(r.toSeq.updated(r.fieldIndex("number_key"), key).toArray, r.schema)
     val (old, added) = fresh.partition(r => kept.contains(number(r)))
     val next = kept.values.maxOption.getOrElse(0) + 1
     (old.map(r => kept(number(r)) -> r) ++
@@ -167,14 +169,18 @@ object Lottery {
     * occurrence_count = same-day multiplicity (A3 canonicalized: the
     * reference would double-insert; we dedupe and count).
     *
-    * `history` is the (date_key, number_key) pairs of facts already
-    * stored, for a load of new days into an existing warehouse. The
-    * per-number gap then runs over the history and `transformDf`
-    * together, and only `transformDf`'s pairs that the history lacks are
-    * emitted: the anti-join against the stored facts is a flag in the same
-    * window pass, so one read of the history serves both. The fact grain
-    * is ≤100 rows per draw day (one per two-digit number), so the history
-    * and the new days are windowed in one partition, with no shuffle.
+    * `history` is (date_key, number_key) pairs for a load of new days into
+    * an existing warehouse: the facts already stored, or, when every day of
+    * `transformDf` is later than every stored day, one row per stored
+    * number at its last appearance (dim_number's `last_appeared_date`),
+    * which is all the gap needs then. The per-number gap runs over the
+    * history and `transformDf` together, and only `transformDf`'s pairs
+    * that the history lacks are emitted: the anti-join against the stored
+    * facts is a flag in the same window pass, so one read of the history
+    * serves both (over last appearances, which all precede the new days,
+    * the flag is never set). The fact grain is ≤100 rows per draw day (one
+    * per two-digit number), so the history and the new days are windowed
+    * in one partition, with no shuffle.
     *
     * `total_draws` counts `transformDf`'s rows of a day. So with days
     * landed in date order, each day in one load, the facts equal those of
@@ -225,30 +231,55 @@ object Lottery {
         col("days_since_last"))
   }
 
+  /** Each number's `total_occurrences` (number_key → the sum of its facts'
+    * occurrence_count, as DECIMAL(32,0)): the mart's one aggregate over the
+    * facts, collected (≤100 rows, one per number_key). */
+  def occurrences(factDf: DataFrame): Map[Int, java.math.BigDecimal] =
+    factDf.groupBy(col("number_key"))
+      .agg(sum(col("occurrence_count")).cast(DecimalType(32, 0)).as("total_occurrences"))
+      .collect().map(r => r.getInt(0) -> r.getDecimal(1)).toMap
+
+  /** mart_two_digit_probability's columns, as `mart` fills them. */
+  val martSchema: StructType = StructType(Seq(
+    StructField("number_value", StringType),
+    StructField("total_occurrences", DecimalType(32, 0)),
+    StructField("total_draws", IntegerType, nullable = false),
+    StructField("probability", DecimalType(38, 4)),
+    StructField("last_appeared_date", DateType),
+    StructField("days_since_last", IntegerType)))
+
+  /** A mart probability: `total / draws` rounded half-up to DECIMAL(38,4).
+    * Equal to Spark's `(total cast DECIMAL(20,10) / draws) cast
+    * DECIMAL(38,4)`: Spark first rounds the quotient half-up to 21
+    * places, and no quotient of two integers below 10¹⁶ lies within
+    * 10⁻²¹ of a rounding boundary without being on it. */
+  private[graft] def probability(total: java.math.BigDecimal, draws: Int): java.math.BigDecimal =
+    total.divide(java.math.BigDecimal.valueOf(draws.toLong), 4, java.math.RoundingMode.HALF_UP)
+
   /** mart_two_digit_probability (SURVEY §2.9 G7 reconstruction from
     * Backend/.../entity/Mart.java:14-34): per number — total occurrences,
     * global distinct-draw-day denominator, DECIMAL(38,4) probability,
     * last appearance and recency vs the latest draw date.
     *
-    * The two draw-day totals come from `dimDateRows`, dim_date's rows (one
-    * per draw day, ≤366 per year of history), which the caller holds. They
-    * enter the plan as literals, so the mart aggregates only the facts. */
-  def mart(factDf: DataFrame, dimNumberDf: DataFrame, dimDateRows: Seq[Row]): DataFrame = {
+    * Plain driver arithmetic over rows the caller holds, in `martSchema`:
+    * `totals` is number_key → total_occurrences (`occurrences`, or a
+    * stored mart's totals plus a batch's rows per number), and a number
+    * gets a mart row when it has a total, in `dimNumberRows`' order. The
+    * two draw-day totals come from `dimDateRows`, dim_date's rows (one per
+    * draw day, ≤366 per year of history). */
+  def mart(totals: Map[Int, java.math.BigDecimal], dimNumberRows: Seq[Row],
+           dimDateRows: Seq[Row]): Seq[Row] = {
     val totalDraws = dimDateRows.map(_.getAs[Int]("date_key")).distinct.size
-    val globalLast = dimDateRows.map(_.getAs[java.sql.Date]("full_date")).maxByOption(_.getTime)
-      .fold(lit(null).cast(DateType))(lit)
-    factDf
-      .groupBy(col("number_key"))
-      .agg(sum(col("occurrence_count")).cast(DecimalType(32, 0)).as("total_occurrences"))
-      .join(broadcast(dimNumberDf), Seq("number_key"))
-      .select(
-        col("number_value"),
-        col("total_occurrences"),
-        lit(totalDraws).as("total_draws"),
-        (col("total_occurrences").cast(DecimalType(20, 10)) / totalDraws)
-          .cast(DecimalType(38, 4)).as("probability"),
-        col("last_appeared_date"),
-        datediff(globalLast, col("last_appeared_date")).as("days_since_last"))
+    val globalLast = dimDateRows.map(_.getAs[java.sql.Date]("full_date").toLocalDate).maxOption
+    dimNumberRows.flatMap { n =>
+      totals.get(n.getAs[Int]("number_key")).map { total =>
+        val seen = Option(n.getAs[java.sql.Date]("last_appeared_date"))
+        val recency = for (last <- globalLast; s <- seen)
+          yield Int.box(java.time.temporal.ChronoUnit.DAYS.between(s.toLocalDate, last).toInt)
+        Row(n.getAs[String]("number_value"), total, totalDraws,
+          probability(total, totalDraws), seen.orNull, recency.orNull)
+      }
+    }
   }
 
   /** GET /mart/statistic (MartRepository.java:14-33): the four dashboard
@@ -315,14 +346,17 @@ object Lottery {
 }
 
 /** The materialized-on-demand warehouse surface (all lazy DataFrames).
-  * `mart` collects dim_date (one row per draw day) and `statistic` the
-  * mart, so each is computed on first use. */
+  * `mart` collects the per-number totals, dim_number (≤100 rows each) and
+  * dim_date (one row per draw day), and `statistic` the mart, so each is
+  * computed on first use. */
 final case class LotteryWarehouse(
     staging: DataFrame,
     transform: DataFrame,
     dimDate: DataFrame,
     dimNumber: DataFrame,
     factPrize: DataFrame) {
-  lazy val mart: DataFrame = Lottery.mart(factPrize, dimNumber, dimDate.collect().toSeq)
+  lazy val mart: DataFrame = factPrize.sparkSession.createDataFrame(
+    Lottery.mart(Lottery.occurrences(factPrize), dimNumber.collect().toSeq,
+      dimDate.collect().toSeq).asJava, Lottery.martSchema)
   lazy val statistic: DataFrame = Lottery.statistic(mart)
 }

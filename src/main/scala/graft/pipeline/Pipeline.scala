@@ -43,19 +43,28 @@ import org.apache.spark.sql.types._
   * `_batches` (`Marks`), so a run does work in proportion to the new
   * files, not to history. A batch directory is read by its path, never
   * through its table's root, and a run that finds nothing new writes
-  * nothing before MART.
+  * nothing.
   *
   * Spark executions per run with new files: one write each for P2 and P3,
-  * one collect of both dims and the fact append in P4, and one collect of
-  * the mart. The dims and the mart are small by construction (dim_date one
-  * row per draw day, dim_number and mart ≤100 rows), so the driver holds
-  * them, writes them (`replaceTable`) and passes them on: the next load
-  * reads the stored dims on the driver, the fact append and the mart join
-  * the held dim_number, the mart takes its draw-day totals from the held
-  * dim_date rows, and the returned mart is the held mart, which `Serving`
-  * snapshots without a Spark job. Every re-read of a table is given its
-  * declared schema (`Schemas`), so no read runs a schema-inference job.
-  * The run log is written by the driver, one small parquet file per
+  * and in P4 one collect of both dims and the fact append. MART runs none when every new batch is in order:
+  * every day of the batch is later than every day stored before it, as a
+  * daily crawl's is. Such a batch reads no stored fact: its per-number
+  * gap continues from the held dim_number's last appearances, and the
+  * mart's totals are the stored mart's plus the batch's rows per number.
+  * A late or re-crawled day takes the stored facts as its gap history,
+  * and MART then recomputes the totals from all the facts; so it does for
+  * any loaded batch the stored mart may not count (`marted-` marks). A
+  * run with nothing new runs no Spark job: MART returns the stored mart.
+  *
+  * The dims and the mart are small by construction (dim_date one row per
+  * draw day, dim_number and mart ≤100 rows), so the driver holds them,
+  * writes them (`replaceTable`) and passes them on: the next load reads
+  * the stored dims on the driver, the fact append joins the held
+  * dim_number, the mart is computed on the driver from held rows
+  * (`Lottery.mart`), and the returned mart is the held mart, which
+  * `Serving` snapshots without a Spark job. Every re-read of a table is
+  * given its declared schema (`Schemas`), so no read runs a
+  * schema-inference job. The run log is written by the driver, one small parquet file per
   * status row, and the gates read only the log's directory listing (see
   * `Control.logStatus`), so bookkeeping runs no Spark job either.
   */
@@ -79,8 +88,8 @@ object Pipeline {
     * written, not moved in) and "<table>.moved" (moved in, old files not
     * yet deleted) for dim_date, dim_number and the mart; "dim_date" and
     * "dim_number" (replaced); "fact_prize" (facts appended, batch not
-    * marked loaded) and "loaded". Tests throw from it to crash a run
-    * there. */
+    * marked loaded), "loaded" and "marted" (the mart replaced, its
+    * batches not marked). Tests throw from it to crash a run there. */
   private[graft] var crashHook: String => Unit = _ => ()
 
   private def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
@@ -93,7 +102,9 @@ object Pipeline {
     *    file's identity is its length, modification time and (encoded)
     *    name, so a re-crawled file is staged again;
     *  - `<stage>-<b>` for stage staged, transformed and loaded: batch `b`
-    *    passed that stage. Creating it is the stage's one atomic commit.
+    *    passed that stage. Creating it is the stage's one atomic commit;
+    *  - `marted-<b>`: the stored mart counts batch `b`'s facts. MART
+    *    creates it after it replaces the mart, for every loaded batch.
     *
     * A file marker counts only once its batch is staged: P2 creates the
     * file markers before it writes the batch, and a run that finds markers
@@ -115,7 +126,7 @@ object Pipeline {
       catch { case _: FileAlreadyExistsException => }
   }
 
-  private val stageMark = """(staged|transformed|loaded)-(\d+)""".r
+  private val stageMark = """(staged|transformed|loaded|marted)-(\d+)""".r
   private val fileMark = """file-(\d+)-(.+)""".r
 
   private def marks(dir: String): Marks = {
@@ -147,9 +158,11 @@ object Pipeline {
 
   /** The rows of the driver-written table at `dir`, read on the driver (no
     * Spark job) through java.nio in `schema`'s columns, which are ints,
-    * strings or dates. For the small tables `replaceTable` writes. Empty
-    * when there is none. */
-  private def storedRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
+    * strings, dates or decimals of more than 18 digits (which Spark writes
+    * as fixed-length byte arrays). For the small tables `replaceTable`
+    * writes and a batch's transform (4 rows per draw day). Empty when
+    * there is none. */
+  private[graft] def storedRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
     val conf = new HadoopParquetConfiguration(spark.sparkContext.hadoopConfiguration)
     def value(g: Group, f: StructField): Any =
       if (g.getFieldRepetitionCount(f.name) == 0) null
@@ -157,6 +170,8 @@ object Pipeline {
         case IntegerType => g.getInteger(f.name, 0)
         case StringType => g.getString(f.name, 0)
         case DateType => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(g.getInteger(f.name, 0)))
+        case t: DecimalType if t.precision > Decimal.MAX_LONG_DIGITS =>
+          new java.math.BigDecimal(new java.math.BigInteger(g.getBinary(f.name, 0).getBytes), t.scale)
         case t => throw new IllegalArgumentException(s"$dir: no driver read of ${f.name}: $t")
       }
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
@@ -182,6 +197,9 @@ object Pipeline {
     val transform: StructType = of("number_value" -> IntegerType, "full_date" -> DateType,
       "range_group" -> StringType, "is_weekend" -> IntegerType, "is_even" -> IntegerType,
       "load_timestamp" -> TimestampType)
+    /** The transform columns P4 reads on the driver: each draw's number
+      * and day. */
+    val draws: StructType = of("number_value" -> IntegerType, "full_date" -> DateType)
     val date: StructType = of("date_key" -> IntegerType, "full_date" -> DateType,
       "day_of_month" -> IntegerType, "month_of_year" -> IntegerType, "year_value" -> IntegerType,
       "year_month_value" -> StringType, "day_name" -> StringType, "is_weekend" -> IntegerType)
@@ -242,11 +260,17 @@ object Pipeline {
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** One batch's load: dim_number's and dim_date's rows after it, the days
+    * it added, the facts it appended and, when it was in order, its
+    * transform rows per number_value. */
+  private final case class Load(numbers: Seq[Row], dates: Seq[Row], days: Int, facts: Long,
+                                inOrderRows: Option[Map[String, Long]])
+
   /** Run the whole chain from a crawler-CSV directory into a parquet
     * warehouse, loading the files not loaded before. Dims/facts are loaded
-    * idempotently (A1-A3); mart is a full recompute (it is an aggregate
-    * view, SURVEY §2.9). Returns the mart, as a local relation of the rows
-    * just written.
+    * idempotently (A1-A3); the mart is an aggregate view (SURVEY §2.9),
+    * maintained from the batches in order and otherwise recomputed.
+    * Returns the mart, as a local relation of the rows it holds.
     *
     * With files landed in date order, every table equals one build over
     * the whole drop (staging and transform up to `load_timestamp`, which
@@ -302,8 +326,6 @@ object Pipeline {
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P1"),
       "P1 gate failed (StagingController.java:41-44 semantics)")
-
-    val emptyTr = local(spark, Schemas.transform, Nil)
 
     var mk = marks(lay.batches)
 
@@ -363,15 +385,19 @@ object Pipeline {
     // ones are read on the driver and recomputed over the batch plus the
     // stored rows, in one collect: dim_date's rows are its days,
     // dim_number's (number_value, last_appeared_date) are each number's
-    // latest draw so far. Returns dim_number as a local relation,
-    // dim_date's rows, the days added and the facts appended; with no
-    // batch, the stored dims.
-    def load(batch: Option[Long]): (DataFrame, Seq[Row], Int, Long) = {
+    // latest draw so far. The batch's own rows are read on the driver as
+    // well: their days decide whether the batch is in order, and they are
+    // counted per number for the mart.
+    //
+    // A load writes dim_date, then dim_number, then the facts, and keeps
+    // that order: once any of a batch's state is stored, the stored
+    // dim_date holds the batch's days, so a replay of the batch is never
+    // in order and takes the fact history.
+    def load(b: Long): Load = {
       // a batch's transform is its Giải Bảy rows (4 per draw day), and the
       // stored dims are one row per day and per number: one partition
       // each, so their aggregates and windows run with no shuffle
-      val tr = batch.fold(emptyTr)(b =>
-        spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b").coalesce(1))
+      val tr = spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b").coalesce(1)
       val storedDates = storedRows(spark, lay.dimDate, Schemas.date)
       val storedNumbers = storedRows(spark, lay.dimNumber, Schemas.number)
       val dates = Lottery.dimDate(tr.select("full_date", "is_weekend").unionByName(
@@ -380,58 +406,93 @@ object Pipeline {
         tr.select(col("number_value").cast("string").as("number_value"), col("full_date"))
           .unionByName(local(spark, Schemas.number, storedNumbers)
             .select(col("number_value"), col("last_appeared_date").as("full_date"))).coalesce(1))
-      batch match {
-        case None =>
-          (local(spark, numbers.schema, storedNumbers), storedDates, 0, 0L)
-        case Some(b) =>
-          // one collect returns both dims: one struct column each
-          val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
-              lit(null).cast(numbers.schema).as("n"))
-            .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
-              struct(numbers.columns.map(col): _*).as("n")))
-            .collect()
-          val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
-            .sortBy(_.getAs[Int]("date_key"))
-          replaceTable(spark, lay.dimDate, dates.schema, dateRows)
-          crashHook("dim_date")
-          // a number keeps the key the appended facts already carry
-          val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
-            r.getInt(r.fieldIndex("number_key"))).toMap
-          val dn = replaceTable(spark, lay.dimNumber, numbers.schema,
-            Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq))
-          crashHook("dim_number")
-          // the stored facts are the history of the per-number gap, and the
-          // pairs already stored (a crashed load's) are not appended again;
-          // the fact count rides the write (no second job)
-          val appended = Observation()
-          Lottery.factPrize(tr, dn, Some(readTable(spark, lay.factPrize, Schemas.fact)))
-            .observe(appended, count(lit(1)).as("facts"))
-            .write.mode("append").parquet(lay.factPrize)
-          crashHook("fact_prize")
-          mk = mk.mark("loaded", b)
-          crashHook("loaded")
-          (dn, dateRows, dateRows.size - storedDates.size, appended.get("facts").asInstanceOf[Long])
-      }
+      // one collect returns both dims: one struct column each
+      val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
+          lit(null).cast(numbers.schema).as("n"))
+        .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
+          struct(numbers.columns.map(col): _*).as("n")))
+        .collect()
+      val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
+      // in order: every batch day is later than every stored day (a batch
+      // day equal to a stored one would vanish in dim_date's union). A
+      // third branch in the collect above would add generated classes to
+      // a daily run's ~80, at the edge of Spark's 100-entry codegen cache
+      val batchRows = storedRows(spark, s"${lay.transform}/batch=$b", Schemas.draws)
+      val storedLast = storedDates.map(_.getAs[java.sql.Date]("full_date").toLocalDate).maxOption
+      val inOrder = batchRows.forall(r =>
+        storedLast.forall(r.getAs[java.sql.Date]("full_date").toLocalDate.isAfter))
+
+      replaceTable(spark, lay.dimDate, dates.schema, dateRows.sortBy(_.getAs[Int]("date_key")))
+      crashHook("dim_date")
+      // a number keeps the key the appended facts already carry
+      val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
+        r.getInt(r.fieldIndex("number_key"))).toMap
+      val numberRows = Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq)
+      val dn = replaceTable(spark, lay.dimNumber, numbers.schema, numberRows)
+      crashHook("dim_number")
+      // the history of the per-number gap: in order, each stored number's
+      // last appearance; otherwise the stored facts, whose pairs already
+      // stored (a crashed load's, a re-crawled day's) are not appended
+      // again. The fact count rides the write (no second job)
+      val history =
+        if (inOrder) local(spark, Schemas.number, storedNumbers).select(
+          date_format(col("last_appeared_date"), "yyyyMMdd").cast("int").as("date_key"),
+          col("number_key"))
+        else readTable(spark, lay.factPrize, Schemas.fact)
+      val appended = Observation()
+      Lottery.factPrize(tr, dn, Some(history))
+        .observe(appended, count(lit(1)).as("facts"))
+        .write.mode("append").parquet(lay.factPrize)
+      crashHook("fact_prize")
+      mk = mk.mark("loaded", b)
+      crashHook("loaded")
+      Load(numberRows, dateRows, dateRows.size - storedDates.size,
+        appended.get("facts").asInstanceOf[Long],
+        Option.when(inOrder)(batchRows.groupMapReduce(_.getInt(0).toString)(_ => 1L)(_ + _)))
     }
-    val (dn, dateRows) = gate("P4") { _ =>
+    val loads = gate("P4") { _ =>
       val pending = mk.pending("transformed", "loaded")
-      if (pending.isEmpty) {
-        val (dn, dateRows, _, _) = load(None)
-        ((dn, dateRows), "nothing new")
-      } else {
-        val loads = pending.map(b => load(Some(b)))
-        val (dn, dateRows, _, _) = loads.last
-        ((dn, dateRows), s"loaded batches ${pending.mkString(",")}: " +
-          s"${loads.map(_._3).sum} days, ${loads.map(_._4).sum} facts")
-      }
+      val loads = pending.map(b => b -> load(b))
+      (loads, if (pending.isEmpty) "nothing new" else s"loaded batches ${pending.mkString(",")}: " +
+        s"${loads.map(_._2.days).sum} days, ${loads.map(_._2.facts).sum} facts")
     }
 
-    // the mart is ≤100 rows (one per two-digit number): collected once,
-    // written by the driver, and returned as the rows it holds
+    // the mart is ≤100 rows (one per two-digit number): computed on the
+    // driver, written by it, and returned as the rows it holds. When every
+    // batch it lacks was loaded in order by this run, its totals are the
+    // stored ones plus those batches' rows per number, and no fact is
+    // read; any other state (a batch loaded from the fact history, or by a
+    // crashed run, or a warehouse with no `marted-` marks) recomputes them
+    // from all the facts. With nothing unmarted it is the stored mart.
     gate("MART") { _ =>
-      val mart = Lottery.mart(readTable(spark, lay.factPrize, Schemas.fact), dn, dateRows)
-      val rows = mart.collect().toSeq
-      (replaceTable(spark, lay.mart, mart.schema, rows), s"${rows.size} numbers")
+      val unmarted = mk.pending("loaded", "marted")
+      if (unmarted.isEmpty)
+        (local(spark, Lottery.martSchema, storedRows(spark, lay.mart, Lottery.martSchema)), "nothing new")
+      else {
+        val (numberRows, dateRows) = loads.lastOption.fold(
+          (storedRows(spark, lay.dimNumber, Schemas.number), storedRows(spark, lay.dimDate, Schemas.date)))(
+          l => (l._2.numbers, l._2.dates))
+        val folded = loads.collect { case (b, Load(_, _, _, _, Some(rows))) => b -> rows }.toMap
+        // unmarted, all loaded in order now: the stored mart counts every
+        // batch loaded before (and there is one, or there was none)
+        val totals =
+          if (unmarted.toSet == folded.keySet &&
+              (new java.io.File(lay.mart).exists() || mk.passed("marted").isEmpty)) {
+            val stored = storedRows(spark, lay.mart, Lottery.martSchema)
+              .map(r => r.getString(0) -> r.getDecimal(1)).toMap
+            val added = folded.values.toSeq.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+            numberRows.flatMap { n =>
+              val v = n.getAs[String]("number_value")
+              (stored.get(v) ++ added.get(v).map(java.math.BigDecimal.valueOf)).reduceOption(_ add _)
+                .map(n.getAs[Int]("number_key") -> _)
+            }.toMap
+          } else Lottery.occurrences(readTable(spark, lay.factPrize, Schemas.fact))
+        val rows = Lottery.mart(totals, numberRows, dateRows)
+        val mart = replaceTable(spark, lay.mart, Lottery.martSchema, rows)
+        crashHook("marted")
+        unmarted.foreach(b => mk = mk.mark("marted", b))
+        (mart, s"${rows.size} numbers")
+      }
     }
   }
 }

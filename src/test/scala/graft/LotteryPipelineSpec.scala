@@ -122,6 +122,29 @@ class LotteryPipelineSpec extends SparkSpec {
     assert(got("78") === ((2, 3, 0.6667, "2025-10-26", 0)))
   }
 
+  test("mart probability: the driver's arithmetic equals Spark's decimal expression") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DecimalType
+    import spark.implicits._
+    // totals 0–5,000 over a spread of draws, draws 1–4,000 over a spread
+    // of totals, and every pair whose quotient lies halfway between two
+    // 4-place decimals (the .xxxx5 cases)
+    val byTotal = for (t <- 0 to 5000; d <- Seq(1, 2, 3, 7, 160, 365, 730, 999, 3999, 4000)) yield (t, d)
+    val byDraws = for (d <- 1 to 4000; t <- Seq(0, 1, 2, 3, 5, 7, 11, 1234, 4999, 5000)) yield (t, d)
+    val halfway = for (d <- 1 to 4000; t <- 0 to 5000
+                       if 20000L * t % d == 0 && 20000L * t / d % 2 == 1) yield (t, d)
+    assert(halfway.size > 1000)
+    // the mart's former Spark expression, over a DECIMAL(32,0) total
+    val want = (byTotal ++ byDraws ++ halfway).distinct.toDF("t", "d")
+      .select(col("t"), col("d"), (col("t").cast(DecimalType(32, 0)).cast(DecimalType(20, 10)) / col("d"))
+        .cast(DecimalType(38, 4)).as("p"))
+      .collect()
+    val wrong = want.filter { r =>
+      Lottery.probability(new java.math.BigDecimal(r.getInt(0)), r.getInt(1)) != r.getDecimal(2)
+    }
+    assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+  }
+
   test("statistic: the four dashboard scalars with pinned tie-break (G4,G5)") {
     val r = wh.statistic.collect().head
     assert(r.getInt(0) === 3)                     // totalOccurrences = max draws

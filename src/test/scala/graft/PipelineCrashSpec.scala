@@ -26,8 +26,13 @@ import org.apache.spark.sql.functions.col
   *      same facts with no duplicate grain, the same mart, and one data
   *      file per driver-written table.
   *   3. NOTHING UNCOMMITTED IS LEFT: every batch on disk and every file
-  *      marker belongs to a batch that passed all three stages, and no
-  *      temp file or output committer directory remains.
+  *      marker belongs to a batch that passed all three stages, the mart
+  *      counts every loaded batch, and no temp file or output committer
+  *      directory remains.
+  *
+  * The mart is maintained from the batches it counts (`marted-` marks),
+  * so a crash between the mart's replace and its marks is a point too,
+  * and a warehouse with no such marks must recompute its mart.
   *
   * A second sweep re-crawls the 4th day's file (a new modification time)
   * between a crash after its batch's staging commit and the replay, so
@@ -93,18 +98,19 @@ class PipelineCrashSpec extends SparkSpec {
   private val crashPoints = Seq("staging", "staging.committed",
     "transform", "transform.committed", "dim_date.tmp", "dim_date.moved",
     "dim_date", "dim_number.tmp", "dim_number.moved", "dim_number", "fact_prize",
-    "loaded", "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved")
+    "loaded", "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved", "marted")
 
   /** Everything on disk belongs to a committed batch: staging and
-    * transform hold only batches that passed all stages, every file
-    * marker's batch did, and no temp file or `_temporary` is left. */
+    * transform hold only batches that passed all stages, the mart counts
+    * every loaded batch, every file marker's batch passed all stages, and
+    * no temp file or `_temporary` is left. */
   private def assertNothingUncommitted(root: Path, cp: String): Unit = {
     val names = new File(lay(root).batches).list().toSeq
     def passed(stage: String) = names.collect {
       case n if n.startsWith(s"$stage-") => n.stripPrefix(s"$stage-").toLong }.toSet
     val staged = passed("staged")
-    assert(staged.nonEmpty && passed("transformed") === staged && passed("loaded") === staged,
-      s"uncommitted batch after a crash at $cp: ${names.sorted}")
+    assert(staged.nonEmpty && passed("transformed") === staged && passed("loaded") === staged &&
+      passed("marted") === passed("loaded"), s"uncommitted batch after a crash at $cp: ${names.sorted}")
     names.filter(_.startsWith("file-")).foreach { n =>
       assert(staged(n.split('-')(1).toLong), s"marker $n of an uncommitted batch after $cp")
     }
@@ -146,7 +152,8 @@ class PipelineCrashSpec extends SparkSpec {
     warehouse(root)
   }
 
-  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize"))
+  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize",
+      "mart_two_digit_probability.moved"))
     test(s"crash at '$cp', then a re-crawl of the crashed batch's file: replay converges") {
       val ref = recrawledReference
       val (root, dropDir) = (copyOfBase(s"recrawl_$cp"), copyOfDrop(s"recrawl_$cp"))
@@ -161,6 +168,24 @@ class PipelineCrashSpec extends SparkSpec {
       assert(got === ref, s"warehouse diverged after a crash at $cp and a re-crawl")
       assertNothingUncommitted(root, cp)
     }
+
+  test("a warehouse with no marted marks recomputes its mart in full when the next day lands") {
+    val ref = reference
+    val root = copyOfBase("unmarted")
+    new File(lay(root).batches).listFiles().filter(_.getName.startsWith("marted-"))
+      .foreach(f => Files.delete(f.toPath))
+    // a stored mart the next run must not build on: every total doubled
+    val stale = Files.createTempDirectory("stalemart").resolve("mart")
+    spark.read.parquet(lay(root).mart)
+      .withColumn("total_occurrences", (col("total_occurrences") * 2).cast("decimal(32,0)"))
+      .coalesce(1).write.parquet(stale.toString)
+    FileUtils.deleteDirectory(new File(lay(root).mart))
+    FileUtils.copyDirectory(stale.toFile, new File(lay(root).mart))
+    val served = Pipeline.runAll(spark, drop, root.toString)
+    assert(warehouse(root) === ref)
+    assert(rows(served) === ref.mart)
+    assertNothingUncommitted(root, "no marted marks")
+  }
 
   for (cp <- crashPoints)
     test(s"crash at '$cp': number keys survive, replay converges") {

@@ -44,6 +44,43 @@ class PipelineOrchestrationSpec extends SparkSpec {
       "mart" -> bag(spark.read.parquet(lay.mart)))
   }
 
+  /** The SQL executions of `body` that ran a Spark job, in start order,
+    * each as the files its leaf scans read. */
+  private def jobExecutionReads(body: => Any): Seq[Seq[String]] = {
+    import org.apache.spark.scheduler.{GraftStageInfoAccess, SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.GraftSqlExecutionAccess
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    val withJobs = new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]()
+    val reads = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => withJobs.add(id.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          Option(GraftSqlExecutionAccess.queryExecution(end)).foreach(qe =>
+            reads.put(end.executionId, qe.analyzed.collect {
+              case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.inputFiles.toSeq
+            }.flatten))
+        case _ =>
+      }
+    }
+    GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    withJobs.asScala.toSeq.map { id =>
+      assert(reads.containsKey(id), s"execution $id ran a job but reported no plan")
+      reads.get(id)
+    }
+  }
+
+  private def readsFacts(files: Seq[String]) = files.exists(_.contains("/fact_prize/"))
+
   /** SUCCESS messages of the latest run of each stage. */
   private def messages(root: String): Map[String, String] = {
     import org.apache.spark.sql.functions.col
@@ -128,9 +165,13 @@ class PipelineOrchestrationSpec extends SparkSpec {
 
   test("a repeat runAll runs no Spark job outside a SQL execution; serving its mart runs none") {
     import org.apache.spark.scheduler.{GraftStageInfoAccess, SparkListener, SparkListenerJobStart}
-    val csvDir = getClass.getResource("/lottery").getPath
-    val root = Files.createTempDirectory("whjobs").toString + "/wh"
+    val base = Files.createTempDirectory("whjobs")
+    val csvDir = Files.createDirectories(base.resolve("drop")).toString
+    val root = base.resolve("wh").toString
+    fixtureFiles("/lottery").foreach(f => Files.copy(f.toPath, java.nio.file.Paths.get(csvDir, f.getName)))
     Pipeline.runAll(spark, csvDir, root)
+    // the repeat run lands a 4th day: a run with nothing new runs no job
+    fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, java.nio.file.Paths.get(csvDir, f.getName)))
     // a first load of more than 32 files: Spark lists more than 32 paths
     // with a job of its own, so no stage may read files path by path
     val bigDrop = Files.createTempDirectory("whjobs40")
@@ -286,15 +327,92 @@ class PipelineOrchestrationSpec extends SparkSpec {
     assert(facts.filter(col("date_key") === 20251026).count() === 2)
   }
 
+  test("an in-order daily runAll runs 4 job-running executions and none reads fact_prize") {
+    val base = Files.createTempDirectory("whinorder")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    fixtureFiles("/lottery").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    val execs = jobExecutionReads(Pipeline.runAll(spark, drop.toString, root))
+    // the P2 and P3 writes, P4's dims collect and its fact append; MART runs none
+    assert(execs.size === 4, execs)
+    assert(!execs.exists(readsFacts), execs)
+  }
+
+  test("a late day takes the fact history: the fact append and MART's recompute read fact_prize") {
+    val days = fixtureFiles("/lottery") ++ fixtureFiles("/lottery_next")
+    val late = days.find(_.getName == "xsmb_25102025.csv").get
+    val base = Files.createTempDirectory("whlatereads")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    days.filterNot(_ == late).foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    Files.copy(late.toPath, drop.resolve(late.getName))
+    val execs = jobExecutionReads(Pipeline.runAll(spark, drop.toString, root))
+    // one fact_prize scan each: the fact append's, beside the batch, and
+    // then MART's full recompute of the totals
+    assert(execs.filter(readsFacts).map(_.exists(_.contains("/transform/"))) === Seq(true, false), execs)
+  }
+
+  test("an in-order day's P4 and MART read as many files on a 60-day warehouse as on a 3-day one") {
+    def landed(name: String, history: Seq[Seq[java.nio.file.Path => Unit]]): Int = {
+      val base = Files.createTempDirectory(name)
+      val drop = Files.createDirectories(base.resolve("drop"))
+      val root = base.resolve("wh").toString
+      history.foreach { run =>
+        run.foreach(_(drop))
+        Pipeline.runAll(spark, drop.toString, root)
+      }
+      fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+      // P4 and MART are the executions that read the warehouse past staging
+      jobExecutionReads(Pipeline.runAll(spark, drop.toString, root)).flatten
+        .count(f => f.contains(s"$root/") && !f.contains("/staging/"))
+    }
+    val fixture = fixtureFiles("/lottery").map(f => (d: java.nio.file.Path) =>
+      { Files.copy(f.toPath, d.resolve(f.getName)); () })
+    // 57 generated days before the fixture's, in two runs, then the
+    // fixture: fact_prize holds three files
+    val generated = (1 to 57).map(i => (d: java.nio.file.Path) => {
+      writeDay(d, java.time.LocalDate.of(2025, 10, 22).minusDays(57 - i),
+        Seq(f"${i % 100}%02d", f"${(i * 37) % 100}%02d", f"${(i * 11) % 100}%02d", "09")); ()
+    })
+    val small = landed("whsmall", Seq(fixture))
+    val big = landed("whbig", Seq(generated.take(30), generated.drop(30), fixture))
+    assert(small > 0 && big === small)
+  }
+
+  test("storedRows reads dim_date, dim_number and the mart as spark.read does, nulls included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def dec(s: String) = new java.math.BigDecimal(s)
+    def check(name: String, schema: StructType, rows: Seq[Row]): Unit = {
+      val dir = Files.createTempDirectory("stored").resolve(name).toString
+      spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(dir)
+      assert(Pipeline.storedRows(spark, dir, schema).map(_.toSeq) ===
+        spark.read.schema(schema).parquet(dir).collect().toSeq.map(_.toSeq), name)
+    }
+    check("dim_date", Pipeline.Schemas.date, Seq(
+      Row(20251023, d("2025-10-23"), 23, 10, 2025, "2025-10", "Thứ 5", 0),
+      Row(null, null, null, null, null, null, null, null)))
+    check("dim_number", Pipeline.Schemas.number, Seq(
+      Row(1, "9", 0, 9, d("2025-10-25")), Row(null, null, null, null, null)))
+    check("mart", Lottery.martSchema, Seq(
+      Row("9", dec("3"), 3, dec("1.0000"), d("2025-10-25"), 1),
+      Row("78", dec("99999999999999999999999999999999"), 7, dec("-1234567890123456789012345678901.2345"),
+        d("1970-01-01"), -5),
+      Row(null, null, 0, null, null, null)))
+  }
+
   test("a run with nothing new writes no file before MART and runs no Spark job before it") {
     import org.apache.spark.scheduler.{GraftStageInfoAccess, SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.functions.col
     val csvDir = getClass.getResource("/lottery").getPath
     val root = Files.createTempDirectory("whidle").toString + "/wh"
     val lay = Pipeline.Layout(root)
     Pipeline.runAll(spark, csvDir, root)
     def files(): Map[String, (Long, Long)] = Seq(lay.staging, lay.transform, lay.dimDate,
-        lay.dimNumber, lay.factPrize, lay.batches).flatMap { dir =>
+        lay.dimNumber, lay.factPrize, lay.mart, lay.batches).flatMap { dir =>
       Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala.toSeq
         .map(p => p.toString -> (p.toFile.lastModified(), p.toFile.length()))
     }.toMap
@@ -306,17 +424,16 @@ class PipelineOrchestrationSpec extends SparkSpec {
     }
     GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
     spark.sparkContext.addSparkListener(listener)
-    try {
-      Pipeline.runAll(spark, csvDir, root)
+    val mart = try {
+      val mart = Pipeline.runAll(spark, csvDir, root)
       GraftStageInfoAccess.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      mart
     } finally spark.sparkContext.removeSparkListener(listener)
+    // MART too: it returns the stored mart, read on the driver
     assert(files() === before)
-    val martStart = spark.read.schema(Control.processLogSchema).parquet(lay.processLog)
-      .filter(col("process_code") === "MART" && col("status") === "RUNNING")
-      .agg(org.apache.spark.sql.functions.max("started_at")).head().getTimestamp(0).getTime
-    assert(!jobStarts.isEmpty, "MART runs its collect")
-    jobStarts.asScala.foreach(t => assert(t >= martStart, s"a job started at $t, before MART at $martStart"))
-    Seq("P2", "P3", "P4").foreach(st => assert(messages(root)(st) === s"$st: nothing new", st))
+    assert(jobStarts.isEmpty, s"${jobStarts.size} Spark jobs ran")
+    Seq("P2", "P3", "P4", "MART").foreach(st => assert(messages(root)(st) === s"$st: nothing new", st))
+    assert(rows(mart) === rows(spark.read.parquet(lay.mart)))
   }
 
   test("each stage's SUCCESS row says what it did") {

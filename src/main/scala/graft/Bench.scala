@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query suite on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"value":N,"unit":"sec","queries":{...}}.
   *
@@ -110,32 +108,9 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val (loadStart, waitedSec) = waitForIdle(cpus.toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // Parameterized (env) sketch-tier knob, DEFAULT UNSET so the
-    // driver's bench stays config-identical across rounds: the
-    // ObjectHashAggregate sort-fallback threshold (groups per task
-    // before the hash agg degrades to sort-based). Sizing bound for a
-    // production value (guide §5): a theta Union buffer peaks at
-    // ~2·4096 longs = 64 KB, so threshold T holds ≤ T·64 KB per task —
-    // T=1024 = 64 MB/task, ~0.5 GB/executor at 8 slots, inside a
-    // 4-8 GB executor's execution fraction; the sketch tier's group
-    // cardinality (nation × quarter ledger cells) is schema-bounded
-    // ~1e3, so T=1024 keeps the partial agg hash-shaped at every SF
-    // while the default 128 falls back to sort on EVERY map task above
-    // 128 cells. Measured full-suite at sf0.1 (OPTIMIZATION_r16.md
-    // §g32): within host noise, hence not baked as a default.
-    sys.env.get("SPARK_GRAFT_OBJHASH_FALLBACK").foreach(v =>
-      builder.config(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v))
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val (loadStart, waitedSec) = waitForIdle(cpus)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // trailing args restrict the suite (solo adjudication series: run one
     // query with the whole JVM to itself); the driver passes none
@@ -240,7 +215,7 @@ object Bench {
       case Right(_)  => ("sf_mismatch", -1.0, "{}", Nil)
       case Left(why) => ("unreadable: " + why, -1.0, "{}", Nil)
     }
-    val quality = recordQuality(flaggedPairs, loadStart, cpus.toInt)
+    val quality = recordQuality(flaggedPairs, loadStart, cpus)
     val loadEnd = loadAvg()
     val tail = s""""errors":$errs,"baseline":"$baseStatus","record_quality":"$quality","suite_median_ratio":${num(medianRatio)},"regressions":$regs,"loadavg_start":${num(loadStart)},"loadavg_wait_sec":$waitedSec,"loadavg_end":${num(loadEnd)},"sf":"$sfDir"}"""
     // The r12 driver record came back "parsed": null — the line had grown

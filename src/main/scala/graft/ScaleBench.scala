@@ -12,9 +12,9 @@ import graft.ext.{CorpusPipeline, Dedup}
   * label propagation, two-level prefix-sum packing) — this main turns the
   * argument into MEASURED curves at 1×/4×/16× the sf0.1 documents table.
   *
-  * Corpus scaling is deterministic and seedless (the ×factor replication
-  * pattern of AssignBench): copy k of the corpus carries a copy tag token
-  * (`c<k>x`) injected after every 3rd token, so
+  * Corpus scaling is deterministic and seedless (×factor replication):
+  * copy k of the corpus carries a copy tag token (`c<k>x`) injected
+  * after every 3rd token, so
   *   - every 5-token shingle window spans at least one tag → cross-copy
   *     shingle overlap is ZERO: copies are fresh document populations and
   *     true near-dup structure grows LINEARLY with the factor (the shape
@@ -363,14 +363,7 @@ object ScaleBench {
         .toSeq.map(_.toInt)
       if (fs.nonEmpty) fs else Seq(1, 4, 16)
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("WARN")
     def num(v: Double): String = Fmt.num(v, 3)
 

@@ -284,7 +284,7 @@ object Similarity {
     * table feeds BOTH the assignment broadcast and the probe cross-join,
     * so a lazy DataFrame would re-execute its full lineage twice per
     * query. `ivfTrainedCentroids` returns it checkpointed; train once
-    * and pass that handle (the production posture — Recall.scala,
+    * and pass that handle (the production posture — AnnRecallFloorSpec,
     * ExtensionSpec). */
   def ivfTrainedTopK(embeddings: DataFrame, queryVecId: Long, k: Int,
                      nlist: Int = 0, nprobe: Int = 0,
@@ -298,7 +298,7 @@ object Similarity {
     // probe cross-join; ivfTrainedCentroids returns it already
     // localCheckpoint'd (its training loop materializes per round), so no
     // re-checkpoint here — in particular a caller-passed precomputed
-    // `centroids` (train once, the production posture; Recall.scala,
+    // `centroids` (train once, the production posture; AnnRecallFloorSpec,
     // ExtensionSpec) is used as-is instead of being re-materialized per
     // query as it was in r5.
     val cent = centroids.getOrElse(ivfTrainedCentroids(embeddings, nl))
@@ -446,7 +446,7 @@ object Similarity {
     // `grouped` is the train-once handle (ivfSuperGroups output,
     // materialized) — the group build is index-parameter-sized but pays
     // Lloyd rounds; a serving/build loop computes it once per epoch, not
-    // per assignment pass (AssignBench sweep measures the difference)
+    // per assignment pass (PERF.md §assignment-budget)
     val packed = grouped.getOrElse(ivfSuperGroups(centroids, g))
       .agg(collect_list(struct(col("gid"), col("gce6"), col("members")))
         .as("grps"))
@@ -467,7 +467,7 @@ object Similarity {
     * on vec_id (the r5 form shuffled n×nlist rows through a row_number
     * window — a 16×-corpus shuffle at 100 TB), and no interpreted lambda
     * dispatch (the intermediate HOF form, kept below as `ivfAssignHof`,
-    * was map-only but 4.7× the CPU — AssignBench). Ranking uses the
+    * was map-only but 4.7× the CPU — PERF.md §ANN). Ranking uses the
     * e9-quantized cosine so the argmax is engine-independent; ties to
     * the lower centroid id. */
   def ivfAssign(embeddings: DataFrame, centroids: DataFrame,
@@ -583,21 +583,17 @@ object Similarity {
     *    whose output is ≈ queries · nprobe · n/nlist candidate rows (the
     *    IVF contract), exact e9-cosine re-rank, per-query rank<=k
     *    (WindowGroupLimit bounds the only remaining exchange). The probe
-    *    side is broadcast-hinted (`broadcastProbes`, default true): the
-    *    panel shapes this engine serves (decontamination/leakage scans,
-    *    ≤ corpus/20 rows of (query_id, q, nprobe lists)) are
-    *    broadcast-sized by contract; a caller batch-joining a panel too
-    *    big to broadcast passes false and the planner shuffle-joins on
-    *    centroid_id as before. At 100 TB the index is partitioned by
-    *    centroid_id on storage (see `ivfTrainedAssign`) so each probed
-    *    list is a pruned read.
+    *    side is broadcast-hinted: the panel shapes this engine serves
+    *    (decontamination/leakage scans, ≤ corpus/20 rows of (query_id,
+    *    q, nprobe lists)) are broadcast-sized by contract. At 100 TB the
+    *    index is partitioned by centroid_id on storage (see
+    *    `ivfTrainedAssign`) so each probed list is a pruned read.
     *
     * All ranking compares e9-quantized cosines with id tie-breaks, so
     * the result is deterministic and oracle-replayable like the
     * single-query path. */
   def ivfAnnJoin(embeddings: DataFrame, queryMod: Long, k: Int,
-                 nlist: Int = 0, nprobe: Int = 0,
-                 broadcastProbes: Boolean = true): DataFrame = {
+                 nlist: Int = 0, nprobe: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (nl, counted) =
       if (nlist > 0) (nlist, -1L)
@@ -612,13 +608,12 @@ object Similarity {
     // == (sim_e9 desc, centroid_id asc), keep the first np ids
     val hofSim = s"CAST(floor(${dotHofStr("c.centroid", "q")} / c.cnorm / qnorm" +
       " * 1e9 + 0.5) AS BIGINT)"
-    val probes0 = queries.crossJoin(broadcast(packedCents(centroids)))
+    val probes = broadcast(queries.crossJoin(broadcast(packedCents(centroids)))
       .withColumn("qnorm", norm("q"))
       .select(col("query_id"), col("q"), explode(expr(
         s"""slice(transform(array_sort(transform(cents, c -> named_struct(
            |  'nsim', -($hofSim), 'cid', c.centroid_id))), s -> s.cid),
-           |  1, $np)""".stripMargin)).as("centroid_id"))
-    val probes = if (broadcastProbes) broadcast(probes0) else probes0
+           |  1, $np)""".stripMargin)).as("centroid_id")))
     val wK = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_e9").desc, col("vec_id").asc)
     assigned.join(probes, Seq("centroid_id"))
@@ -696,26 +691,13 @@ object Similarity {
     * reads, PQ shrinks WHAT a read costs; at scale you run both (the codes
     * table replaces the vector table in the probe scan and only the
     * re-rank candidates fetch full vectors). Geometry is MEASURED, not
-    * guessed (graft.PqSweep, sf0.1): (m=8,k=16) 0.54, (m=8,k=32) 0.64,
+    * guessed (PERF.md §ANN, sf0.1): (m=8,k=16) 0.54, (m=8,k=32) 0.64,
     * (m=16,k=16) 0.73, (m=16,k=32) 0.90 recall@10 at refine=8 — finer
     * subspaces beat more codes per subspace at equal code bytes. */
   val pqDim = 64
   val pqM = 16
   val pqKsub = 32
   val pqKmeansIters = 2
-
-  /** (vec_id, ne6): e6 copy of the UNIT-normalIZED vector, engine-exact.
-    * The norm² is an exact BIGINT (sum of e6 squares), so both engines feed
-    * the SAME integer into one correctly-rounded IEEE sqrt and one divide
-    * per element — no cross-engine fold-order ulp can exist. Normalizing
-    * matters because on the unit sphere squared-L2 order ≡ cosine order
-    * (L2² = 2 − 2·cos), which is what lets the PQ ADC scan rank by an
-    * integer L2 table and still approximate the cosine truth (unnormalized
-    * ADC measured recall@10 0.40–0.54; normalized 0.7+ — Recall.scala).
-    * The 1e-12 floor only guards an all-zero vector against NaN codes. */
-  /** Dev-harness view of pqNormed (graft.EncodeProbe stage timing). */
-  private[graft] def pqNormedProbe(embeddings: DataFrame): DataFrame =
-    pqNormed(embeddings)
 
   /** Under-partitioned-source guard for the vector tier's CPU-heavy map
     * stages (encode/assignment, ~nlist·dim or m·ksub·dim ops per row):
@@ -731,10 +713,19 @@ object Similarity {
     * (the static-knob pattern of Dedup.shingles / CorpusPipeline
     * .qualityGate); measured basis for spreading at all: the ×64 PQ
     * encode was 1.8 s spread vs 37 s on one inherited partition
-    * (graft.EncodeProbe; PERF.md §ANN). */
+    * (PERF.md §ANN). */
   private def spreadParts(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
+  /** (vec_id, ne6): e6 copy of the UNIT-normalIZED vector, engine-exact.
+    * The norm² is an exact BIGINT (sum of e6 squares), so both engines feed
+    * the SAME integer into one correctly-rounded IEEE sqrt and one divide
+    * per element — no cross-engine fold-order ulp can exist. Normalizing
+    * matters because on the unit sphere squared-L2 order ≡ cosine order
+    * (L2² = 2 − 2·cos), which is what lets the PQ ADC scan rank by an
+    * integer L2 table and still approximate the cosine truth (unnormalized
+    * ADC measured recall@10 0.40–0.54; normalized 0.7+ — PERF.md §ANN).
+    * The 1e-12 floor only guards an all-zero vector against NaN codes. */
   private def pqNormed(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), e6Vec("embedding").as("ve6"))
       .withColumn("nrm", expr(
@@ -755,25 +746,6 @@ object Similarity {
         .as(Seq("m", "sub")))
   }
 
-  /** HOF baseline of the per-slice nearest-code assignment: exact integer
-    * squared-L2 argmin against the broadcast per-subspace codebook, ties
-    * to the lower code. Kept ONLY as the spec cross-check proving the
-    * native `PqNearestCodes` expression's distance and tie-break parity
-    * (the shipped training/encode paths below use the native form — the
-    * HOF is CodegenFallback, measured 195 s to encode 128k vectors,
-    * PERF.md §ANN). */
-  private[graft] def pqAssignHof(subs: DataFrame, cb: DataFrame): DataFrame = {
-    val packed = cb.groupBy(col("m"))
-      .agg(collect_list(struct(col("code"), col("ce6"))).as("cbs"))
-    subs.join(broadcast(packed), Seq("m"))
-      .withColumn("code", expr(
-        """-array_max(transform(cbs, c -> named_struct(
-          |  'negd', -aggregate(zip_with(sub, c.ce6, (x, y) -> (x - y) * (x - y)),
-          |                     CAST(0 AS BIGINT), (acc, v) -> acc + v),
-          |  'ncode', -c.code))).ncode""".stripMargin))
-      .drop("cbs")
-  }
-
   /** One packed broadcast row of the whole codebook — the build side of
     * every native-assignment stage (training, encode). */
   private def pqPacked(cb: DataFrame): DataFrame =
@@ -783,8 +755,7 @@ object Similarity {
     * native-codegen argmin per vector (`PqNearestCodes` — no per-subspace
     * row fan-out during the argmin, no interpreted lambda dispatch), then
     * an m-way explode of the already-assigned codes for the recenter
-    * aggregate. Same output contract as `pqAssignHof(pqSubs(...), cb)`
-    * minus vec_id (the recenter never needs it). */
+    * aggregate: (m, code, sub) per slice, ties to the lower code. */
   private def pqAssignedSubs(normed: DataFrame, cb: DataFrame, m: Int): DataFrame = {
     val ds = pqDim / m
     normed.crossJoin(broadcast(pqPacked(cb)))

@@ -178,36 +178,23 @@ object TextAnalysis extends QModule {
     * drop for production (rank order is already explicit in the rk
     * column).
     *
-    * `dfByWindow` picks between two value-identical df shapes (df =
-    * count of (doc,token) rows per token either way):
-    *  - true (default, r15): count-over-window on the tf exchange — the
-    *    token shuffle happens ONCE (the former separate dfreq aggregate
-    *    + tf⋈dfreq join shuffled tf by token twice; guide §2.4). SKEW
-    *    BOUND (r15 advice): a whole-partition window has no partial
-    *    aggregation, so a hot token's tf rows (a stopword occurs in
-    *    nearly every doc) buffer on ONE task — work linear in that
-    *    token's df, cost ≈ one task scanning ≤ n_docs rows. Acceptable
-    *    while df ≤ ~10^8 (minutes of one-task scan); the corpus tiers
-    *    that matter here pre-strip stopwords or cap df upstream (the
-    *    shingle tier's maxDf posture).
-    *  - false (the at-scale/hot-key-safe variant, guide §2.5): the
-    *    dfreq aggregate + broadcast join — partial map-side counts mean
-    *    no task ever holds a hot token's rows, at the price of a second
-    *    full tf shuffle when dfreq outgrows broadcast. Pick it when the
-    *    corpus has uncapped stopword-like tokens at 100 TB. */
-  def tfidfTopK(docs: org.apache.spark.sql.DataFrame,
-                dfByWindow: Boolean = true): org.apache.spark.sql.DataFrame = {
+    * df (count of (doc,token) rows per token) is a count-over-window on
+    * the tf exchange, so the token shuffle happens ONCE (a separate
+    * dfreq aggregate + tf⋈dfreq join would shuffle tf by token twice;
+    * guide §2.4). SKEW BOUND: a whole-partition window has no partial
+    * aggregation, so a hot token's tf rows (a stopword occurs in nearly
+    * every doc) buffer on ONE task — work linear in that token's df,
+    * cost ≈ one task scanning ≤ n_docs rows. Acceptable while df ≤
+    * ~10^8 (minutes of one-task scan); the corpus tiers that matter here
+    * pre-strip stopwords or cap df upstream (the shingle tier's maxDf
+    * posture). */
+  def tfidfTopK(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
     val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("token"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
-    val withDf =
-      if (dfByWindow) tf.withColumn("df", count(lit(1)).over(wDf))
-      else tf.join(
-        broadcast(tf.groupBy(col("token")).agg(count(lit(1)).as("df"))),
-        Seq("token"))
-    val scored = withDf
+    val scored = tf.withColumn("df", count(lit(1)).over(wDf))
       .crossJoin(broadcast(total))
       .withColumn("tfidf_e6",
         floor(col("tf") * (col("n_docs").cast("double") / col("df")) * 1e6 + 0.5)

@@ -63,7 +63,8 @@ object Graph extends QModule {
     // EVERY iteration for a value that never changes across rounds
     // (guide §2.4: two operations keyed the same way share one exchange).
     // Two entry shapes, identical values (count of edges per src; deg
-    // is built FROM edges so the inner join drops no rows either way).
+    // is built FROM edges so the inner join drops no rows either way;
+    // GraphSpec's gr1 core case runs both).
     // r16 A/B verdict — WHICH WINS DEPENDS ON WHETHER edges0 IS
     // MATERIALIZED, so both stay, keyed by the caller's knowledge:
     //  - degByWindow = true (default — the bench row's shape): one

@@ -65,9 +65,6 @@ private[graft] final class LoopCkpt(s: SparkSession, reliable: Boolean) {
   /** Checkpoint a round table; deletes the superseded previous round. */
   def round(df: DataFrame): DataFrame = ckpt(df, pinned = false)
 
-  /** Current on-disk round file, exposed for the lifecycle spec. */
-  private[graft] def liveRoundPath: Option[String] =
-    liveRound.map(_.toString)
   private[graft] def rootPath: Option[String] = root.map(_.toString)
 
   private def ckpt(df: DataFrame, pinned: Boolean): DataFrame =

@@ -46,15 +46,17 @@ import org.apache.spark.sql.types._
   * nothing.
   *
   * Spark executions per run with new files: one write each for P2 and P3,
-  * and in P4 one collect of both dims and the fact append. MART runs none when every new batch is in order:
-  * every day of the batch is later than every day stored before it, as a
-  * daily crawl's is. Such a batch reads no stored fact: its per-number
-  * gap continues from the held dim_number's last appearances, and the
-  * mart's totals are the stored mart's plus the batch's rows per number.
-  * A late or re-crawled day takes the stored facts as its gap history,
-  * and MART then recomputes the totals from all the facts; so it does for
-  * any loaded batch the stored mart may not count (`marted-` marks). A
-  * run with nothing new runs no Spark job: MART returns the stored mart.
+  * and in P4 one collect of both dims and the fact append. A batch in
+  * order (every day of it later than every day stored before it, as a
+  * daily crawl's is) reads no stored fact: its per-number gap continues
+  * from the held dim_number's last appearances. A late day takes the
+  * stored facts as its gap history. MART runs none when no day of any
+  * new batch was stored before: every row of such a batch is a new fact,
+  * so the mart's totals are the stored mart's plus the batch's rows per
+  * number. A re-crawled day makes MART recompute the totals from all the
+  * facts; so does any loaded batch the stored mart may not count
+  * (`marted-` marks). A run with nothing new runs no Spark job: MART
+  * returns the stored mart.
   *
   * The dims and the mart are small by construction (dim_date one row per
   * draw day, dim_number and mart ≤100 rows), so the driver holds them,
@@ -261,15 +263,15 @@ object Pipeline {
   }
 
   /** One batch's load: dim_number's and dim_date's rows after it, the days
-    * it added, the facts it appended and, when it was in order, its
-    * transform rows per number_value. */
+    * it added, the facts it appended and, when none of its days was stored
+    * before, its transform rows per number_value. */
   private final case class Load(numbers: Seq[Row], dates: Seq[Row], days: Int, facts: Long,
-                                inOrderRows: Option[Map[String, Long]])
+                                newDayRows: Option[Map[String, Long]])
 
   /** Run the whole chain from a crawler-CSV directory into a parquet
     * warehouse, loading the files not loaded before. Dims/facts are loaded
     * idempotently (A1-A3); the mart is an aggregate view (SURVEY §2.9),
-    * maintained from the batches in order and otherwise recomputed.
+    * maintained from the batches of new days and otherwise recomputed.
     * Returns the mart, as a local relation of the rows it holds.
     *
     * With files landed in date order, every table equals one build over
@@ -386,13 +388,14 @@ object Pipeline {
     // stored rows, in one collect: dim_date's rows are its days,
     // dim_number's (number_value, last_appeared_date) are each number's
     // latest draw so far. The batch's own rows are read on the driver as
-    // well: their days decide whether the batch is in order, and they are
-    // counted per number for the mart.
+    // well: their days decide whether the batch is in order and whether
+    // any of them was stored, and they are counted per number for the mart.
     //
     // A load writes dim_date, then dim_number, then the facts, and keeps
     // that order: once any of a batch's state is stored, the stored
     // dim_date holds the batch's days, so a replay of the batch is never
-    // in order and takes the fact history.
+    // in order (it takes the fact history) and its days are not new (MART
+    // recomputes).
     def load(b: Long): Load = {
       // a batch's transform is its Giải Bảy rows (4 per draw day), and the
       // stored dims are one row per day and per number: one partition
@@ -414,13 +417,17 @@ object Pipeline {
         .collect()
       val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
       // in order: every batch day is later than every stored day (a batch
-      // day equal to a stored one would vanish in dim_date's union). A
-      // third branch in the collect above would add generated classes to
-      // a daily run's ~80, at the edge of Spark's 100-entry codegen cache
+      // day equal to a stored one would vanish in dim_date's union); new
+      // days: no batch day is a stored one, so no stored fact shares a
+      // pair with the batch. A third branch in the collect above would add
+      // generated classes to a daily run's ~80, at the edge of Spark's
+      // 100-entry codegen cache
       val batchRows = storedRows(spark, s"${lay.transform}/batch=$b", Schemas.draws)
-      val storedLast = storedDates.map(_.getAs[java.sql.Date]("full_date").toLocalDate).maxOption
-      val inOrder = batchRows.forall(r =>
-        storedLast.forall(r.getAs[java.sql.Date]("full_date").toLocalDate.isAfter))
+      def day(r: Row) = r.getAs[java.sql.Date]("full_date").toLocalDate
+      val storedDays = storedDates.map(day).toSet
+      val batchDays = batchRows.map(day)
+      val inOrder = storedDays.maxOption.forall(last => batchDays.forall(_.isAfter(last)))
+      val newDays = !batchDays.exists(storedDays)
 
       replaceTable(spark, lay.dimDate, dates.schema, dateRows.sortBy(_.getAs[Int]("date_key")))
       crashHook("dim_date")
@@ -448,7 +455,7 @@ object Pipeline {
       crashHook("loaded")
       Load(numberRows, dateRows, dateRows.size - storedDates.size,
         appended.get("facts").asInstanceOf[Long],
-        Option.when(inOrder)(batchRows.groupMapReduce(_.getInt(0).toString)(_ => 1L)(_ + _)))
+        Option.when(newDays)(batchRows.groupMapReduce(_.getInt(0).toString)(_ => 1L)(_ + _)))
     }
     val loads = gate("P4") { _ =>
       val pending = mk.pending("transformed", "loaded")
@@ -459,11 +466,12 @@ object Pipeline {
 
     // the mart is ≤100 rows (one per two-digit number): computed on the
     // driver, written by it, and returned as the rows it holds. When every
-    // batch it lacks was loaded in order by this run, its totals are the
-    // stored ones plus those batches' rows per number, and no fact is
-    // read; any other state (a batch loaded from the fact history, or by a
-    // crashed run, or a warehouse with no `marted-` marks) recomputes them
-    // from all the facts. With nothing unmarted it is the stored mart.
+    // batch it lacks was loaded by this run with no day stored before, its
+    // totals are the stored ones plus those batches' rows per number, and
+    // no fact is read; any other state (a batch with a day stored before,
+    // or loaded by a crashed run, or a warehouse with no `marted-` marks)
+    // recomputes them from all the facts. With nothing unmarted it is the
+    // stored mart.
     gate("MART") { _ =>
       val unmarted = mk.pending("loaded", "marted")
       if (unmarted.isEmpty)
@@ -473,8 +481,8 @@ object Pipeline {
           (storedRows(spark, lay.dimNumber, Schemas.number), storedRows(spark, lay.dimDate, Schemas.date)))(
           l => (l._2.numbers, l._2.dates))
         val folded = loads.collect { case (b, Load(_, _, _, _, Some(rows))) => b -> rows }.toMap
-        // unmarted, all loaded in order now: the stored mart counts every
-        // batch loaded before (and there is one, or there was none)
+        // unmarted, all loaded with new days now: the stored mart counts
+        // every batch loaded before (and there is one, or there was none)
         val totals =
           if (unmarted.toSet == folded.keySet &&
               (new java.io.File(lay.mart).exists() || mk.passed("marted").isEmpty)) {

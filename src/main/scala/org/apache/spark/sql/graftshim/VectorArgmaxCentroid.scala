@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * form is `array_max(transform(cents, c -> struct(dot(...), -id)))` —
   * higher-order functions are CodegenFallback, so every vector pays
   * nlist × dim interpreted lambda dispatches plus nlist struct
-  * allocations. Measured on 2M cached vectors (graft.AssignBench): the
+  * allocations. Measured on 2M cached vectors (PERF.md §ANN): the
   * HOF argmax runs 16.1 s where the r5 crossJoin+window shape ran 3.4 s
   * — map-only but 4.7× the CPU. These expressions keep the map-only
   * plan shape (no ×nlist fan-out, no Exchange on vec_id) AND run the

@@ -45,17 +45,22 @@ import scala.jdk.CollectionConverters._
   *     index parameters, not corpus).
   *   - TextAnalysis: per-language guard rows (≤ language count).
   *
-  * Measurement mains (Bench/ScaleBench/StreamBench/PqSweep/Recall and
-  * the Fuzz/Verify drivers) are exempt: collecting results to print is
-  * their job and none of them ships in a query plan. Adding a collect to
-  * an engine file fails this spec; the fix is either to distribute the
-  * path (preferred) or to extend the pin with the boundedness argument
-  * in this scaladoc. */
+  * Measurement mains (Bench/ScaleBench/StreamBench and the Fuzz/Verify
+  * drivers) are exempt: collecting results to print is their job and
+  * none of them ships in a query plan. Adding a collect to an engine
+  * file fails this spec; the fix is either to distribute the path
+  * (preferred) or to extend the pin with the boundedness argument in
+  * this scaladoc.
+  *
+  * Session hygiene rides the same scan: `graft.Session.local` is the
+  * only `SparkSession.builder` in src/main, so the mains' confs cannot
+  * drift apart again, and no type in src/main carries a round-numbered
+  * name (`…R16`): a dev harness either gets a durable name and a caller
+  * or a test, or it goes. */
 class CollectHygieneSpec extends AnyFunSuite {
 
   private val exemptMains = Set("Bench.scala", "ScaleBench.scala",
-    "StreamBench.scala", "PqSweep.scala", "Recall.scala", "Fuzz.scala",
-    "Verify.scala")
+    "StreamBench.scala", "Fuzz.scala", "Verify.scala")
 
   private val pinned = Map(
     "operators/Skew.scala" -> 2,
@@ -94,6 +99,25 @@ class CollectHygieneSpec extends AnyFunSuite {
         s"  now:    ${counts.toSeq.sorted}\n" +
         s"  pinned: ${pinned.toSeq.sorted}\n" +
         "Distribute the new path, or re-audit and extend the pin + scaladoc.")
+  }
+
+  test("one session factory builds every SparkSession; no round-numbered type names") {
+    val main = Paths.get("src/main")
+    val sources = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.nonEmpty)
+    def rel(p: Path) = main.relativize(p).toString.replace('\\', '/')
+    val builders = sources
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(rel)
+    assert(builders == Seq("scala/graft/Session.scala"),
+      s"SparkSession.builder outside graft.Session: ${builders.mkString(", ")}")
+    val roundNamed = sources.flatMap { p =>
+      """\b(?:object|class|trait)\s+(\w*R\d+)\b""".r
+        .findAllMatchIn(Files.readString(p)).map(m => s"${rel(p)}: ${m.group(1)}")
+    }
+    assert(roundNamed.isEmpty,
+      s"round-numbered type names in src/main: ${roundNamed.mkString(", ")}")
   }
 
   test("AnnIndex's only collect is the serving probe's bounded candidate fetch (ingest stays distributed)") {

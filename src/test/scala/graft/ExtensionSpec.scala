@@ -194,7 +194,7 @@ class ExtensionSpec extends SparkSpec {
     info(f"recall@10 stride=$stride%.2f trained=$trained%.2f")
     // the trained quantizer must BEAT the stride init at equal nprobe
     // (3 Lloyd rounds measure 0.695-0.75 vs stride's 0.64-0.70 across
-    // the SFs — Recall.scala / PERF.md §ANN), with a floor well above
+    // the SFs — PERF.md §ANN), with a floor well above
     // the LSH path's
     assert(trained >= 0.65, f"trained IVF recall $trained%.2f < 0.65")
     // small slack against top-10 list-boundary churn across SFs (the
@@ -227,7 +227,7 @@ class ExtensionSpec extends SparkSpec {
     // widened pool's top-k would need k higher-cosine items, which would
     // contradict its membership in the truth set). The assertion is
     // therefore pointwise and deterministic, not a flaky average.
-    // Measured averages (Recall.scala, PERF.md §ANN): 6+2 neighbor
+    // Measured averages (PERF.md §ANN): 6+2 neighbor
     // probes lift 0.75→0.80 / 0.695→0.77 / 0.70→0.735 across the SFs;
     // plain nprobe=8 matches-or-beats it at the same scan fraction, so
     // the shipped default stays query-dot-ranked lists only.
@@ -263,7 +263,7 @@ class ExtensionSpec extends SparkSpec {
       codebooks = Some(cb), codes = Some(codes)).collect().toSeq
     assert(inline === handle,
       "precomputed codebook/codes result diverged from the inline path")
-    // recall floor at the shipped geometry (PqSweep measured 0.73-0.90
+    // recall floor at the shipped geometry (PERF.md §ANN: 0.73-0.90
     // across refine 4-8 at sf0.1; sf0.01 similar — floor set with margin
     // against top-10 boundary churn)
     val rec = (0L until 20L).map { q =>

@@ -35,9 +35,13 @@ class GraphSpec extends SparkSpec {
       4L -> Seq(1L))
     val edges = adj.toSeq.flatMap { case (u, vs) => vs.map(u -> _) }
       .toDF("src", "dst")
-    val got = Graph.pagerankFixedPoint(edges, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == referencePagerank(adj, 4))
+    // both out-degree shapes: the window (default) and the aggregate +
+    // join that ScaleBench's graph mode runs at scale
+    for (degByWindow <- Seq(true, false)) {
+      val got = Graph.pagerankFixedPoint(edges, iters = 4, degByWindow = degByWindow)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == referencePagerank(adj, 4), s"degByWindow = $degByWindow")
+    }
   }
 
   test("gr1: ranks respect the base floor and symmetric nodes tie") {

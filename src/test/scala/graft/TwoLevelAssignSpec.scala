@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *     point over a HOF top-c);
   *   - the group table partitions the centroid set exactly.
   * The measured cost curve (exact vs pruned multiplies at growing nlist)
-  * lives in AssignBench / PERF.md §assignment-budget. */
+  * lives in PERF.md §assignment-budget. */
 class TwoLevelAssignSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"

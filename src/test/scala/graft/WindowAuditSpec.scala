@@ -1,11 +1,14 @@
 package graft
 
-/** Scale-safety census pin (r15 verdict item 4): an UNPARTITIONED window
+import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+
+/** Scale-safety census pin: an UNPARTITIONED window
   * (`WindowExec` with empty partitionSpec) moves every input row to ONE
   * task — correct at any sf, a scale-killer at 100 TB if an operator
   * composes real data onto it. This spec walks the physical plan of
-  * EVERY declared query and pins the exact census AuditR16 reports, so
-  * a future operator cannot silently introduce a new single-task window:
+  * EVERY declared query and pins the exact census, so a future operator
+  * cannot silently introduce a new single-task window:
   *
   *  - limit-BOUNDED global windows (fine at any scale — the one task
   *    sees O(k) rows): w4 (TakeOrderedAndProject below the row_number
@@ -22,18 +25,33 @@ package graft
   *
   * Everything else (224 queries): zero global windows. Plan construction
   * only — nothing is executed, so the walk covers the pre-AQE physical
-  * plan exactly as AuditR16 does.
+  * plan.
   */
 class WindowAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** (bounded, unbounded) global-window counts of one physical plan: a
+    * global window is bounded when a limit operator sits in its subtree
+    * (a global WindowGroupLimit, a TakeOrderedAndProject or a
+    * Global/CollectLimit), so its one task sees O(k) rows, not the data. */
+  private def globalWindows(plan: SparkPlan): (Int, Int) = {
+    val ws = plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+    val bounded = ws.count(w => w.child.collectFirst {
+      case g: WindowGroupLimitExec if g.partitionSpec.isEmpty => g
+      case t: TakeOrderedAndProjectExec => t
+      case l: GlobalLimitExec => l
+      case c: CollectLimitExec => c
+    }.isDefined)
+    (bounded, ws.size - bounded)
+  }
 
   test("unpartitioned windows: only the pinned bounded/calendar census") {
     val boundedPin = Set("w4_row_number_topk", "q15_top_supplier",
       "t_rarity_score")
     val calendarPin = Set("w7_moving_avg", "w12_wma5")
     val got = SparkEntry.all.flatMap { q =>
-      val (b, u) = AuditR16.globalWindows(
+      val (b, u) = globalWindows(
         q.fn(spark, dir).queryExecution.sparkPlan)
       if (u > 0) Some(q.name -> "UNBOUNDED")
       else if (b > 0) Some(q.name -> "bounded")

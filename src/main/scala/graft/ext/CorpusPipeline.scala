@@ -45,12 +45,10 @@ object CorpusPipeline {
     * — each consumer replays only a block read + codegen filter. On a
     * real cluster a persisted stage table / reliable checkpoint plays
     * this role (same plan, durable). */
-  private[graft] def qualityGate(docs: DataFrame,
-                                 spread: Boolean = true): DataFrame = {
+  private[graft] def qualityGate(docs: DataFrame): DataFrame = {
     // the regex/tokenize scan below is the pipeline's CPU-heaviest map —
     // spread an under-partitioned (single-file) source first so it runs
     // on all cores, not one. r15: the repartition is UNCONDITIONAL
-    // (pass spread=false for an input that is already well-partitioned)
     // instead of the Tables.spread runtime probe: probing partition
     // count via df.rdd plans the subtree on every query construction,
     // and under AQE it MATERIALIZES any shuffle stages in the subtree —
@@ -66,9 +64,7 @@ object CorpusPipeline {
     // and the gate is a lazy broadcast-probe filter each consumer replays
     // for the cost of a block read (no regex). On a cluster the persisted
     // stage table holds the scored scan, same plan.
-    val q = (if (spread)
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      else docs)
+    val q = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .withColumn("n_tok", size(tokens(col("text"))))
       .select(col("doc_id"), col("lang"), col("text"), col("n_tok"),
         (hits(col("text"), enPat).cast("double") / col("n_tok")).as("r"))

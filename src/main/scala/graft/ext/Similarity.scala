@@ -238,12 +238,11 @@ object Similarity {
     * The convergence probe collects the ≤ nlist-row centroid table —
     * driver-side by nature (nlist is small by design), never the vectors. */
   def ivfTrainedCentroids(embeddings: DataFrame, nlist: Int = 0,
-                          iters: Int = ivfKmeansIters,
-                          spread: Boolean = true): DataFrame = {
+                          iters: Int = ivfKmeansIters): DataFrame = {
     val (nl, counted) =
       if (nlist > 0) (nlist, -1L)
       else { val n = embeddings.count(); (autoNlist(n), n) }
-    val base = (if (spread) spreadParts(embeddings) else embeddings)
+    val base = spreadParts(embeddings)
       .select(col("vec_id"), e6Vec("embedding").as("ve6"))
     def recenter(cent: DataFrame): DataFrame =
       assignByDot(base, cent)
@@ -354,9 +353,8 @@ object Similarity {
     * (partitionBy centroid_id, so a probe reads only its lists), never a
     * per-query recompute. Assignment itself is the map-only broadcast
     * argmax of `assignByDot`. */
-  def ivfTrainedAssign(embeddings: DataFrame, centroids: DataFrame,
-                       spread: Boolean = true): DataFrame =
-    assignByDot((if (spread) spreadParts(embeddings) else embeddings)
+  def ivfTrainedAssign(embeddings: DataFrame, centroids: DataFrame): DataFrame =
+    assignByDot(spreadParts(embeddings)
       .select(col("vec_id"), col("embedding"),
         e6Vec("embedding").as("ve6")), centroids)
 
@@ -470,9 +468,8 @@ object Similarity {
     * was map-only but 4.7× the CPU — PERF.md §ANN). Ranking uses the
     * e9-quantized cosine so the argmax is engine-independent; ties to
     * the lower centroid id. */
-  def ivfAssign(embeddings: DataFrame, centroids: DataFrame,
-                spread: Boolean = true): DataFrame =
-    (if (spread) spreadParts(embeddings) else embeddings)
+  def ivfAssign(embeddings: DataFrame, centroids: DataFrame): DataFrame =
+    spreadParts(embeddings)
       .crossJoin(broadcast(packedCents(centroids)))
       .select(col("vec_id"), col("embedding"),
         graft.functions.VectorFunctions.vecArgmaxCosE9(col("embedding"),
@@ -708,10 +705,7 @@ object Similarity {
     * MATERIALIZES any shuffle stages inside it (the silent
     * double-execution class r15 eliminated from CorpusPipeline/Dedup);
     * every current caller is a raw scan the probe resolved to
-    * "repartition" anyway. Production callers with an already
-    * well-partitioned corpus pass `spread = false` at the entry points
-    * (the static-knob pattern of Dedup.shingles / CorpusPipeline
-    * .qualityGate); measured basis for spreading at all: the ×64 PQ
+    * "repartition" anyway. Measured basis for spreading at all: the ×64 PQ
     * encode was 1.8 s spread vs 37 s on one inherited partition
     * (PERF.md §ANN). */
   private def spreadParts(df: DataFrame): DataFrame =

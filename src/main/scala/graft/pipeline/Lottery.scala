@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.time.LocalDate
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -17,16 +19,17 @@ import org.apache.spark.sql.types._
   *  - fact grain (date_key, number_key) with intra-batch dedupe,
   *    occurrence_count carrying the day's multiplicity;
   *  - argmax/argmin tie-break = lowest numeric value;
-  *  - deterministic surrogate keys (row_number, not AUTO_INCREMENT).
+  *  - deterministic surrogate keys (numeric order, not AUTO_INCREMENT).
   *
   * Scale posture: the whole chain is shuffle-minimal — transform is a pure
-  * map stage (no shuffle); dims are tiny aggregates; the fact build shuffles
-  * once on date_key and once on number_key; dim joins are broadcast. At
-  * 100 TB the fact write would be `partitionBy(year)` on date; dims stay
-  * broadcast-size by construction (≤100 numbers, 1 row/day). `Pipeline`
-  * runs the same functions over each load's new files plus the stored
-  * rows they depend on (see `factPrize`'s `history` and `mart`'s
-  * `totals`).
+  * map stage (no shuffle); the fact build shuffles once on date_key and
+  * once on number_key; dim joins are broadcast. The dims are small by
+  * construction (≤100 numbers, 1 row per draw day), so they are built on
+  * the driver (`dimDateRows`, `dimNumberRows`) from each draw's number
+  * and day, ≤100 distinct pairs per draw day. At 100 TB the fact write
+  * would be `partitionBy(year)` on date. `Pipeline` runs the same
+  * functions over each load's new files plus the stored rows they depend
+  * on (see `factPrize`'s `history` and `mart`'s `totals`).
   */
 object Lottery {
 
@@ -91,75 +94,64 @@ object Lottery {
       .filter(col("number_value").isNotNull && col("full_date").isNotNull)
   }
 
-  /** Vietnamese day name (ETLMain.java:275-285): Mon..Sat = "Thứ 2".."Thứ 7",
-    * Sun = "Chủ nhật". Spark dayofweek is 1=Sunday..7=Saturday. */
-  def vietDayName(d: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(dayofweek(d) === 1, "Chủ nhật")
-      .otherwise(concat(lit("Thứ "), dayofweek(d).cast("string")))
+  /** dim_date's columns, as `dimDateRows` fills them. */
+  val dimDateSchema: StructType = StructType(Seq(
+    StructField("date_key", IntegerType),
+    StructField("full_date", DateType),
+    StructField("day_of_month", IntegerType),
+    StructField("month_of_year", IntegerType),
+    StructField("year_value", IntegerType),
+    StructField("year_month_value", StringType),
+    StructField("day_name", StringType),
+    StructField("is_weekend", IntegerType)))
 
-  /** dim_date (ETLMain.java:233-285): one row per distinct draw date;
-    * date_key = yyyyMMdd int (X4), calendar parts (X5), Viet day name (X6). */
-  def dimDate(transformDf: DataFrame): DataFrame = {
-    val d = col("full_date")
-    transformDf.select(d, col("is_weekend")).distinct()
-      .select(
-        date_format(d, "yyyyMMdd").cast("int").as("date_key"),
-        d.as("full_date"),
-        dayofmonth(d).as("day_of_month"),
-        month(d).as("month_of_year"),
-        year(d).as("year_value"),
-        date_format(d, "yyyy-MM").as("year_month_value"),
-        vietDayName(d).as("day_name"),
-        col("is_weekend"))
-  }
+  /** dim_date (ETLMain.java:233-285): one row per distinct draw day,
+    * ordered by date_key = yyyyMMdd int (X4), with the calendar parts
+    * (X5), the Vietnamese day name (X6: Mon..Sat = "Thứ 2".."Thứ 7",
+    * Sun = "Chủ nhật", ETLMain.java:275-285) and the weekend flag (X7).
+    * Plain driver code: one row per day. */
+  def dimDateRows(days: Iterable[LocalDate]): Seq[Row] =
+    days.toSeq.distinct.sortBy(_.toEpochDay).map { d =>
+      val dayOfWeek = d.getDayOfWeek.getValue % 7 + 1 // 1 = Sunday .. 7 = Saturday
+      new GenericRowWithSchema(Array(
+        d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth,
+        java.sql.Date.valueOf(d), d.getDayOfMonth, d.getMonthValue, d.getYear,
+        f"${d.getYear}%04d-${d.getMonthValue}%02d",
+        if (dayOfWeek == 1) "Chủ nhật" else s"Thứ $dayOfWeek",
+        if (dayOfWeek == 1 || dayOfWeek == 7) 1 else 0), dimDateSchema)
+    }
 
-  /** dim_number (ETLMain.java:288-340,419-429): one row per normalized
-    * number string (X10: int round-trip strips leading zeros), parity (X8),
-    * last_digit (X9), last appearance (G6/W3 recompute — Spark has no point
-    * updates, so the whole dim is a deterministic aggregate). Surrogate key
-    * = row_number ordered by numeric value (SURVEY §7.2: deterministic,
-    * unlike the reference's insertion-order AUTO_INCREMENT).
+  /** dim_number's columns, as `dimNumberRows` fills them: the key, parity
+    * and last digit are never null. */
+  val dimNumberSchema: StructType = StructType(Seq(
+    StructField("number_key", IntegerType, nullable = false),
+    StructField("number_value", StringType),
+    StructField("is_even", IntegerType, nullable = false),
+    StructField("last_digit", IntegerType, nullable = false),
+    StructField("last_appeared_date", DateType)))
+
+  /** dim_number (ETLMain.java:288-340,419-429): one row per number of
+    * `lastSeen` (number → its latest draw day, G6/W3), ordered by
+    * number_key, with the number as a string (X10: the int round-trip
+    * strips leading zeros), parity (X8) and last_digit (X9, negative for a
+    * negative number).
     *
-    * The UNPARTITIONED Window.orderBy below funnels the dim through one
-    * task — acceptable HERE ONLY because the two-digit domain bounds this
-    * dim at ≤100 rows BY CONSTRUCTION (the groupBy key is a 0-99 number
-    * string), so the "single sort task" holds ≤100 rows at any corpus
-    * size. Do NOT copy this pattern to an unbounded dimension: there the
-    * surrogate key needs zipWithIndex-style per-partition offsets or a
-    * hash/natural key (the packShards two-level prefix-sum pattern). */
-  def dimNumber(transformDf: DataFrame): DataFrame = {
-    val norm = col("number_value").cast("string") // transform already int
-    val byNum = transformDf
-      .groupBy(norm.as("number_value"))
-      .agg(max(col("full_date")).as("last_appeared_date"))
-    val w = Window.orderBy(col("number_value").cast("int"))
-    byNum.select(
-      row_number().over(w).as("number_key"),
-      col("number_value"),
-      when(col("number_value").cast("int") % 2 === 0, 1).otherwise(0).as("is_even"),
-      coalesce(col("number_value").cast("int") % 10, lit(0)).cast("int").as("last_digit"),
-      col("last_appeared_date"))
-  }
-
-  /** dim_number for a load into an existing warehouse: the collected rows
-    * of a `dimNumber` recompute, where every number in `kept` (number_value
-    * → number_key, as stored) keeps its key, since the facts appended so
-    * far reference it; new numbers get the keys after the largest kept one,
-    * in numeric order. `dimNumber`'s row_number alone would shift every
-    * key above a new number and re-attribute the old facts (the reference's
-    * AUTO_INCREMENT keys never move either). With nothing kept this is
-    * `dimNumber`'s own keying. Plain driver code: both sides are ≤100 rows.
-    * Returns the rows ordered by key, in `fresh`'s schema. */
-  def keepNumberKeys(kept: Map[String, Int], fresh: Seq[Row]): Seq[Row] = {
-    def number(r: Row): String = r.getAs[String]("number_value")
-    def withKey(r: Row, key: Int): Row =
-      new GenericRowWithSchema(r.toSeq.updated(r.fieldIndex("number_key"), key).toArray, r.schema)
-    val (old, added) = fresh.partition(r => kept.contains(number(r)))
-    val next = kept.values.maxOption.getOrElse(0) + 1
-    (old.map(r => kept(number(r)) -> r) ++
-      added.sortBy(number(_).toInt).zipWithIndex
-        .map { case (r, i) => (next + i) -> r })
-      .sortBy(_._1).map { case (key, r) => withKey(r, key) }
+    * A number in `keptKeys` (number → its stored number_key, each one a
+    * number of `lastSeen`) keeps its key, since the facts appended so far
+    * reference it; the other numbers get the keys after the largest kept
+    * one, in numeric order. So with nothing kept the keys are 1..n in
+    * numeric order (SURVEY §7.2: deterministic, unlike the reference's
+    * insertion-order AUTO_INCREMENT), and a load never moves a stored key
+    * (the reference's keys never move either). Plain driver code: ≤100
+    * rows, one per two-digit number. */
+  def dimNumberRows(lastSeen: Map[Int, LocalDate], keptKeys: Map[Int, Int]): Seq[Row] = {
+    val next = keptKeys.values.maxOption.getOrElse(0) + 1
+    val added = lastSeen.keys.filterNot(keptKeys.contains).toSeq.sorted
+    (keptKeys.toSeq ++ added.zipWithIndex.map { case (n, i) => n -> (next + i) })
+      .sortBy(_._2).map { case (n, key) =>
+        new GenericRowWithSchema(Array(key, n.toString, if (n % 2 == 0) 1 else 0, n % 10,
+          java.sql.Date.valueOf(lastSeen(n))), dimNumberSchema)
+      }
   }
 
   /** fact_prize (ETLMain.java:342-416): grain (date_key, number_key);
@@ -192,7 +184,8 @@ object Lottery {
     * `transformDf` must hold each day's rows once: a day in two of
     * `Pipeline`'s batches (a re-crawled file) is loaded one batch at a
     * time, so the later batch's pairs meet the earlier one's stored facts.
-    * `dimNumberDf` must carry every number of `transformDf`. */
+    * `dimNumberDf` (dim_number's rows) must carry every number of
+    * `transformDf`. */
   def factPrize(transformDf: DataFrame, dimNumberDf: DataFrame,
                 history: Option[DataFrame] = None): DataFrame = {
     val perDay = transformDf.select(
@@ -264,14 +257,14 @@ object Lottery {
     * Plain driver arithmetic over rows the caller holds, in `martSchema`:
     * `totals` is number_key → total_occurrences (`occurrences`, or a
     * stored mart's totals plus a batch's rows per number), and a number
-    * gets a mart row when it has a total, in `dimNumberRows`' order. The
-    * two draw-day totals come from `dimDateRows`, dim_date's rows (one per
-    * draw day, ≤366 per year of history). */
-  def mart(totals: Map[Int, java.math.BigDecimal], dimNumberRows: Seq[Row],
-           dimDateRows: Seq[Row]): Seq[Row] = {
-    val totalDraws = dimDateRows.map(_.getAs[Int]("date_key")).distinct.size
-    val globalLast = dimDateRows.map(_.getAs[java.sql.Date]("full_date").toLocalDate).maxOption
-    dimNumberRows.flatMap { n =>
+    * gets a mart row when it has a total, in `numberRows`' order
+    * (dim_number's rows). The two draw-day totals come from `dateRows`,
+    * dim_date's rows (one per draw day, ≤366 per year of history). */
+  def mart(totals: Map[Int, java.math.BigDecimal], numberRows: Seq[Row],
+           dateRows: Seq[Row]): Seq[Row] = {
+    val totalDraws = dateRows.map(_.getAs[Int]("date_key")).distinct.size
+    val globalLast = dateRows.map(_.getAs[java.sql.Date]("full_date").toLocalDate).maxOption
+    numberRows.flatMap { n =>
       totals.get(n.getAs[Int]("number_key")).map { total =>
         val seen = Option(n.getAs[java.sql.Date]("last_appeared_date"))
         val recency = for (last <- globalLast; s <- seen)
@@ -337,26 +330,30 @@ object Lottery {
   /** Full P2→mart DAG from a crawler-CSV directory. */
   def run(spark: SparkSession, csvDir: String): LotteryWarehouse = {
     val stg = staging(spark, csvDir)
-    val tr = transform(stg)
-    val dd = dimDate(tr)
-    val dn = dimNumber(tr)
-    val fp = factPrize(tr, dn)
-    LotteryWarehouse(stg, tr, dd, dn, fp)
+    LotteryWarehouse(stg, transform(stg))
   }
 }
 
-/** The materialized-on-demand warehouse surface (all lazy DataFrames).
-  * `mart` collects the per-number totals, dim_number (≤100 rows each) and
-  * dim_date (one row per draw day), and `statistic` the mart, so each is
-  * computed on first use. */
-final case class LotteryWarehouse(
-    staging: DataFrame,
-    transform: DataFrame,
-    dimDate: DataFrame,
-    dimNumber: DataFrame,
-    factPrize: DataFrame) {
-  lazy val mart: DataFrame = factPrize.sparkSession.createDataFrame(
-    Lottery.mart(Lottery.occurrences(factPrize), dimNumber.collect().toSeq,
-      dimDate.collect().toSeq).asJava, Lottery.martSchema)
+/** The materialized-on-demand warehouse surface over lazy staging and
+  * transform DataFrames. The dims are built on the driver from one
+  * collect of the transform's distinct (number, day) pairs (≤100 per draw
+  * day), run on first use of a dim, the facts or the mart; `mart` reuses
+  * the dims' rows and collects the per-number totals, and `statistic`
+  * collects the mart. */
+final case class LotteryWarehouse(staging: DataFrame, transform: DataFrame) {
+  private lazy val draws: Seq[(Int, LocalDate)] =
+    transform.select("number_value", "full_date").distinct().collect()
+      .map(r => r.getInt(0) -> r.getDate(1).toLocalDate).toSeq
+  private lazy val dateRows = Lottery.dimDateRows(draws.map(_._2))
+  private lazy val numberRows = Lottery.dimNumberRows(
+    draws.groupMapReduce(_._1)(_._2)((a, b) => if (a.isAfter(b)) a else b), Map.empty)
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    transform.sparkSession.createDataFrame(rows.asJava, schema)
+
+  lazy val dimDate: DataFrame = local(dateRows, Lottery.dimDateSchema)
+  lazy val dimNumber: DataFrame = local(numberRows, Lottery.dimNumberSchema)
+  lazy val factPrize: DataFrame = Lottery.factPrize(transform, dimNumber)
+  lazy val mart: DataFrame =
+    local(Lottery.mart(Lottery.occurrences(factPrize), numberRows, dateRows), Lottery.martSchema)
   lazy val statistic: DataFrame = Lottery.statistic(mart)
 }

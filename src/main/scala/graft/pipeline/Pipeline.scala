@@ -46,7 +46,7 @@ import org.apache.spark.sql.types._
   * nothing.
   *
   * Spark executions per run with new files: one write each for P2 and P3,
-  * and in P4 one collect of both dims and the fact append. A batch in
+  * and in P4 the fact append; P4 builds both dims on the driver. A batch in
   * order (every day of it later than every day stored before it, as a
   * daily crawl's is) reads no stored fact: its per-number gap continues
   * from the held dim_number's last appearances. A late day takes the
@@ -59,10 +59,11 @@ import org.apache.spark.sql.types._
   * returns the stored mart.
   *
   * The dims and the mart are small by construction (dim_date one row per
-  * draw day, dim_number and mart ≤100 rows), so the driver holds them,
-  * writes them (`replaceTable`) and passes them on: the next load reads
-  * the stored dims on the driver, the fact append joins the held
-  * dim_number, the mart is computed on the driver from held rows
+  * draw day, dim_number and mart ≤100 rows), so the driver builds them
+  * (`Lottery.dimDateRows`, `Lottery.dimNumberRows`), writes them
+  * (`replaceTable`) and passes them on: the next load reads the stored
+  * dims on the driver, the fact append joins the held dim_number, the
+  * mart is computed on the driver from held rows
   * (`Lottery.mart`), and the returned mart is the held mart, which
   * `Serving` snapshots without a Spark job. Every re-read of a table is
   * given its declared schema (`Schemas`), so no read runs a
@@ -191,7 +192,8 @@ object Pipeline {
   /** The tables' schemas as a file source reads them back (every column
     * nullable), declared so that a re-read runs no schema inference and a
     * run analyses no plan to learn them. Each is its stage function's
-    * output schema (`PipelineOrchestrationSpec` checks it). */
+    * output schema (`PipelineOrchestrationSpec` checks it); the dims' are
+    * their driver builders' schemas. */
   private[graft] object Schemas {
     private def of(fields: (String, DataType)*) =
       StructType(fields.map { case (name, t) => StructField(name, t) })
@@ -202,11 +204,8 @@ object Pipeline {
     /** The transform columns P4 reads on the driver: each draw's number
       * and day. */
     val draws: StructType = of("number_value" -> IntegerType, "full_date" -> DateType)
-    val date: StructType = of("date_key" -> IntegerType, "full_date" -> DateType,
-      "day_of_month" -> IntegerType, "month_of_year" -> IntegerType, "year_value" -> IntegerType,
-      "year_month_value" -> StringType, "day_name" -> StringType, "is_weekend" -> IntegerType)
-    val number: StructType = of("number_key" -> IntegerType, "number_value" -> StringType,
-      "is_even" -> IntegerType, "last_digit" -> IntegerType, "last_appeared_date" -> DateType)
+    val date: StructType = Lottery.dimDateSchema
+    val number: StructType = StructType(Lottery.dimNumberSchema.map(_.copy(nullable = true)))
     val fact: StructType = of("date_key" -> IntegerType, "number_key" -> IntegerType,
       "occurrence_count" -> IntegerType, "total_draws" -> IntegerType,
       "probability_value" -> DecimalType(38, 10), "days_since_last" -> IntegerType)
@@ -384,12 +383,13 @@ object Pipeline {
     // order, so a day that a later batch stages again (a re-crawled file)
     // meets the earlier batch's stored facts, as it does when the two
     // batches load on separate runs. Both dims are small, so the stored
-    // ones are read on the driver and recomputed over the batch plus the
-    // stored rows, in one collect: dim_date's rows are its days,
-    // dim_number's (number_value, last_appeared_date) are each number's
-    // latest draw so far. The batch's own rows are read on the driver as
-    // well: their days decide whether the batch is in order and whether
-    // any of them was stored, and they are counted per number for the mart.
+    // ones and the batch's draws (each draw's number and day, 4 rows per
+    // draw day) are read on the driver, and the dims are rebuilt there:
+    // dim_date from the stored days and the batch's, dim_number from each
+    // number's latest draw, stored or in the batch, with the stored keys
+    // kept. The batch's days also decide whether it is in order and
+    // whether any of them was stored, and its draws are counted per number
+    // for the mart. The fact append is the load's one Spark execution.
     //
     // A load writes dim_date, then dim_number, then the facts, and keeps
     // that order: once any of a batch's state is stored, the stored
@@ -397,57 +397,45 @@ object Pipeline {
     // in order (it takes the fact history) and its days are not new (MART
     // recomputes).
     def load(b: Long): Load = {
-      // a batch's transform is its Giải Bảy rows (4 per draw day), and the
-      // stored dims are one row per day and per number: one partition
-      // each, so their aggregates and windows run with no shuffle
-      val tr = spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b").coalesce(1)
       val storedDates = storedRows(spark, lay.dimDate, Schemas.date)
       val storedNumbers = storedRows(spark, lay.dimNumber, Schemas.number)
-      val dates = Lottery.dimDate(tr.select("full_date", "is_weekend").unionByName(
-        local(spark, Schemas.date, storedDates).select("full_date", "is_weekend")).coalesce(1))
-      val numbers = Lottery.dimNumber(
-        tr.select(col("number_value").cast("string").as("number_value"), col("full_date"))
-          .unionByName(local(spark, Schemas.number, storedNumbers)
-            .select(col("number_value"), col("last_appeared_date").as("full_date"))).coalesce(1))
-      // one collect returns both dims: one struct column each
-      val both = dates.select(struct(dates.columns.map(col): _*).as("d"),
-          lit(null).cast(numbers.schema).as("n"))
-        .unionByName(numbers.select(lit(null).cast(dates.schema).as("d"),
-          struct(numbers.columns.map(col): _*).as("n")))
-        .collect()
-      val dateRows = both.flatMap(r => Option(r.getStruct(0))).toSeq
-      // in order: every batch day is later than every stored day (a batch
-      // day equal to a stored one would vanish in dim_date's union); new
-      // days: no batch day is a stored one, so no stored fact shares a
-      // pair with the batch. A third branch in the collect above would add
-      // generated classes to a daily run's ~80, at the edge of Spark's
-      // 100-entry codegen cache
       val batchRows = storedRows(spark, s"${lay.transform}/batch=$b", Schemas.draws)
-      def day(r: Row) = r.getAs[java.sql.Date]("full_date").toLocalDate
-      val storedDays = storedDates.map(day).toSet
-      val batchDays = batchRows.map(day)
+      def day(r: Row, c: String = "full_date") = r.getAs[java.sql.Date](c).toLocalDate
+      val storedDays = storedDates.map(day(_)).toSet
+      val batchDays = batchRows.map(day(_))
+      // in order: every batch day is later than every stored day; new
+      // days: no batch day is a stored one, so no stored fact shares a
+      // pair with the batch
       val inOrder = storedDays.maxOption.forall(last => batchDays.forall(_.isAfter(last)))
       val newDays = !batchDays.exists(storedDays)
 
-      replaceTable(spark, lay.dimDate, dates.schema, dateRows.sortBy(_.getAs[Int]("date_key")))
+      val dateRows = Lottery.dimDateRows(storedDays ++ batchDays)
+      replaceTable(spark, lay.dimDate, Lottery.dimDateSchema, dateRows)
       crashHook("dim_date")
-      // a number keeps the key the appended facts already carry
-      val keys = storedNumbers.map(r => r.getString(r.fieldIndex("number_value")) ->
-        r.getInt(r.fieldIndex("number_key"))).toMap
-      val numberRows = Lottery.keepNumberKeys(keys, both.flatMap(r => Option(r.getStruct(1))).toSeq)
-      val dn = replaceTable(spark, lay.dimNumber, numbers.schema, numberRows)
+      // each number's latest draw, stored or in the batch; a stored
+      // number keeps the key the appended facts already carry
+      def number(r: Row) = r.getAs[String]("number_value").toInt
+      val lastSeen = (storedNumbers.map(r => number(r) -> day(r, "last_appeared_date")) ++
+        batchRows.map(r => r.getAs[Int]("number_value") -> day(r)))
+        .groupMapReduce(_._1)(_._2)((x, y) => if (x.isAfter(y)) x else y)
+      val numberRows = Lottery.dimNumberRows(lastSeen,
+        storedNumbers.map(r => number(r) -> r.getAs[Int]("number_key")).toMap)
+      val dn = replaceTable(spark, lay.dimNumber, Lottery.dimNumberSchema, numberRows)
       crashHook("dim_number")
       // the history of the per-number gap: in order, each stored number's
       // last appearance; otherwise the stored facts, whose pairs already
       // stored (a crashed load's, a re-crawled day's) are not appended
-      // again. The fact count rides the write (no second job)
+      // again. The fact count rides the write (no second job). A batch's
+      // transform is 4 rows per draw day: one partition, so the fact
+      // build's windows run with no shuffle
       val history =
         if (inOrder) local(spark, Schemas.number, storedNumbers).select(
           date_format(col("last_appeared_date"), "yyyyMMdd").cast("int").as("date_key"),
           col("number_key"))
         else readTable(spark, lay.factPrize, Schemas.fact)
       val appended = Observation()
-      Lottery.factPrize(tr, dn, Some(history))
+      Lottery.factPrize(spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b")
+          .coalesce(1), dn, Some(history))
         .observe(appended, count(lit(1)).as("facts"))
         .write.mode("append").parquet(lay.factPrize)
       crashHook("fact_prize")

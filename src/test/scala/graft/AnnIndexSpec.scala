@@ -13,13 +13,23 @@ import org.apache.spark.sql.functions._
 class AnnIndexSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private def root = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
+  // every root lives in one directory of this JVM's own, so two test
+  // JVMs on one host never delete each other's roots
+  private val base = java.nio.file.Files.createTempDirectory("graft_annidx_spec").toFile
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteQuietly(base)
+    finally super.afterAll()
+
+  /** The persisted index of `dir`'s embeddings, in this JVM's own root. */
+  private def root = new java.io.File(base,
     "graft_annidx_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
+  private def ensure(): AnnIndex.IvfPq =
+    AnnIndex.ensureIvfPqFor(t(spark, dir, "embeddings"), root.getPath)
 
   test("persisted-index probe == inline-build probe, row for row") {
     val emb = t(spark, dir, "embeddings")
-    val idx = AnnIndex.ensureIvfPq(spark, dir)
+    val idx = ensure()
     val persisted = orderedRows(Similarity.ivfPqTopK(emb, 0L, 10,
       centroids = Some(idx.centroids), codebooks = Some(idx.codebooks),
       index = Some(idx.index)))
@@ -28,7 +38,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("index table is one fused row per vector; no corpus-sized join at probe time") {
-    val idx = AnnIndex.ensureIvfPq(spark, dir)
+    val idx = ensure()
     val emb = t(spark, dir, "embeddings")
     assert(idx.index.count() === emb.count())
     assert(idx.index.columns.toSet === Set("vec_id", "centroid_id", "codes"))
@@ -56,8 +66,7 @@ class AnnIndexSpec extends SparkSpec {
     // flat here — the layout trade is measured in ScaleBench annbuild
     // and documented at partitionThreshold).
     val emb = t(spark, dir, "embeddings")
-    val proot = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_partitioned")
+    val proot = new java.io.File(base, "graft_annidx_spec_partitioned")
     org.apache.commons.io.FileUtils.deleteQuietly(proot)
     try {
       val idx = AnnIndex.ensureIvfPqFor(emb, proot.getPath, partitioned = Some(true))
@@ -80,14 +89,14 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("a valid persisted layout is reused, not rebuilt") {
-    AnnIndex.ensureIvfPq(spark, dir) // ensure exists
+    ensure() // ensure exists
     def mtimes: Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(root).map(f => f.getPath -> f.lastModified).toMap
     }
     val before = mtimes
-    AnnIndex.ensureIvfPq(spark, dir)
+    ensure()
     assert(mtimes === before, "second ensure rewrote the persisted index")
   }
 
@@ -125,8 +134,7 @@ class AnnIndexSpec extends SparkSpec {
     // is_dup — proof the index actually accreted batch 1.
     import org.apache.spark.sql.Row
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_ingest")
+    val root = new java.io.File(base, "graft_annidx_spec_ingest")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       AnnIndex.initIngest(emb.filter(col("vec_id") % 10 =!= 3), root.getPath)
@@ -155,8 +163,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("epoch retrain: quantizers rebuild from the grown corpus, vectors survive, ingest continues") {
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_retrain")
+    val root = new java.io.File(base, "graft_annidx_spec_retrain")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       val standing = emb.filter(col("vec_id") % 10 =!= 3)
@@ -190,8 +197,7 @@ class AnnIndexSpec extends SparkSpec {
     // the content signature (hash-sum over (vec_id, embedding)) must
     // force the rebuild when the data changes under the same size
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_sig")
+    val root = new java.io.File(base, "graft_annidx_spec_sig")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       AnnIndex.ensureIvfPqFor(emb, root.getPath)
@@ -212,8 +218,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("ingest replay with the same batchId is a no-op returning the original verdicts") {
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_replay")
+    val root = new java.io.File(base, "graft_annidx_spec_replay")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       AnnIndex.initIngest(emb.filter(col("vec_id") % 10 =!= 3), root.getPath)
@@ -239,8 +244,7 @@ class AnnIndexSpec extends SparkSpec {
     // probe and finalize WITHOUT appending again — the nVec == nIdx
     // invariant and the row counts must hold through the window.
     val emb = t(spark, dir, "embeddings")
-    val iroot = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_crash_replay")
+    val iroot = new java.io.File(base, "graft_annidx_spec_crash_replay")
     org.apache.commons.io.FileUtils.deleteQuietly(iroot)
     try {
       AnnIndex.initIngest(emb.filter(col("vec_id") % 10 =!= 3), iroot.getPath)
@@ -274,9 +278,8 @@ class AnnIndexSpec extends SparkSpec {
     // fresh-JVM posture) must adopt the files untouched and probe
     // identically.
     val emb = t(spark, dir, "embeddings")
-    AnnIndex.ensureIvfPq(spark, dir) // ensure source root exists
-    val moved = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_relocated")
+    ensure() // ensure source root exists
+    val moved = new java.io.File(base, "graft_annidx_spec_relocated")
     org.apache.commons.io.FileUtils.deleteQuietly(moved)
     try {
       org.apache.commons.io.FileUtils.copyDirectory(root, moved)
@@ -309,8 +312,7 @@ class AnnIndexSpec extends SparkSpec {
     // the SelectedBucketsCount contract so the serving-fetch story is
     // plan-verified, not prose.
     val emb = t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val wh = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_bucketfetch")
+    val wh = new java.io.File(base, "graft_annidx_spec_bucketfetch")
     org.apache.commons.io.FileUtils.deleteQuietly(wh)
     spark.sql("DROP TABLE IF EXISTS graft_spec_vecstore")
     try {
@@ -353,8 +355,7 @@ class AnnIndexSpec extends SparkSpec {
     // the batch-sized delta sidecar — and must be row-identical to the
     // in-plan broadcast-fetch probe over the same corpus + artifacts.
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_spec_probetopk")
+    val root = new java.io.File(base, "graft_annidx_spec_probetopk")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       AnnIndex.initIngest(emb.filter(col("vec_id") % 10 =!= 3), root.getPath)
@@ -408,11 +409,11 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("a stale fingerprint triggers a rebuild") {
-    AnnIndex.ensureIvfPq(spark, dir)
+    ensure()
     val fp = new java.io.File(root, "meta/FINGERPRINT")
     java.nio.file.Files.writeString(fp.toPath, "v0 stale",
       java.nio.charset.StandardCharsets.UTF_8)
-    val idx = AnnIndex.ensureIvfPq(spark, dir)
+    val idx = ensure()
     val txt = java.nio.file.Files.readString(fp.toPath,
       java.nio.charset.StandardCharsets.UTF_8)
     assert(txt.startsWith("v6 "), s"fingerprint not refreshed: $txt")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.Lottery
+import graft.pipeline.{Lottery, LotteryWarehouse, Pipeline}
 import graft.sources.Upsert
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -34,10 +34,14 @@ class PropertySpec extends SparkSpec {
       .withColumn("load_timestamp", current_timestamp())
   }
 
+  private def warehouseOf(rows: List[(String, String, String, String)]) = {
+    val stg = stagingOf(rows)
+    LotteryWarehouse(stg, Lottery.transform(stg))
+  }
+
   test("per-day probability mass sums to 1 (X11 invariant)") {
     forAllSamples(Gen.nonEmptyListOf(genRow)) { rows =>
-      val tr = Lottery.transform(stagingOf(rows))
-      val fact = Lottery.factPrize(tr, Lottery.dimNumber(tr))
+      val fact = warehouseOf(rows).factPrize
       // each day's Σ occurrence_count/total_draws = 1 exactly
       val perDay = fact.groupBy(col("date_key"))
         .agg(sum(col("occurrence_count").cast("double") / col("total_draws")).as("mass"))
@@ -49,8 +53,7 @@ class PropertySpec extends SparkSpec {
 
   test("days_since_last is positive and consistent with sorted dates (W2)") {
     forAllSamples(Gen.nonEmptyListOf(genRow)) { rows =>
-      val tr = Lottery.transform(stagingOf(rows))
-      val fact = Lottery.factPrize(tr, Lottery.dimNumber(tr))
+      val fact = warehouseOf(rows).factPrize
       val bad = fact.filter(col("days_since_last").isNotNull &&
         col("days_since_last") <= 0).count()
       assert(bad === 0)
@@ -59,12 +62,108 @@ class PropertySpec extends SparkSpec {
 
   test("upsert idempotence: load(load(t,b),b) == load(t,b) (A1-A3)") {
     forAllSamples(Gen.nonEmptyListOf(genRow)) { rows =>
-      val tr = Lottery.transform(stagingOf(rows))
-      val dim = Lottery.dimDate(tr)
+      val dim = warehouseOf(rows).dimDate
       val once = Upsert.appendNew(dim, dim, Seq("date_key"))
       val twice = Upsert.appendNew(once, dim, Seq("date_key"))
       assert(twice.count() === dim.count())
     }
+  }
+
+  /** A batch of draws for the dim builders: random days (and in every
+    * sample one run of seven days, so every weekday, a Feb 29 and a year
+    * boundary), 1-4 numbers in -9..99 per day, a random subset of the
+    * drawn numbers stored before with their keys (increasing with gaps,
+    * in arrival order, so not numeric) and a last appearance, and no
+    * stored number at either end of the drawn ones, so new numbers fall
+    * below and above the kept ones. */
+  private val genDims: Gen[(Seq[(Int, java.time.LocalDate)], Map[Int, (Int, java.time.LocalDate)])] = {
+    import java.time.LocalDate
+    val genDate = Gen.chooseNum(LocalDate.of(1990, 1, 1).toEpochDay, LocalDate.of(2100, 12, 31).toEpochDay)
+      .map(LocalDate.ofEpochDay)
+    for {
+      days <- Gen.listOfN(12, genDate)
+      week <- genDate.map(d => (0 to 6).map(d.plusDays(_)))
+      leap <- Gen.oneOf(1992, 2000, 2024, 2096).map(LocalDate.of(_, 2, 29))
+      newYear <- Gen.chooseNum(1991, 2100).map(y => Seq(LocalDate.of(y - 1, 12, 31), LocalDate.of(y, 1, 1)))
+      all = (days ++ week ++ newYear :+ leap).distinct
+      draws <- Gen.sequence[List[List[(Int, LocalDate)]], List[(Int, LocalDate)]](all.map(d =>
+        Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, Gen.chooseNum(-9, 99))).map(_.map(_ -> d))))
+      numbers = draws.flatten.map(_._1).distinct.sorted
+      kept <- Gen.someOf(numbers.drop(1).dropRight(1)).map(_.toSeq)
+      arrival <- Gen.listOfN(kept.size, Gen.chooseNum(0, 1000))
+      gaps <- Gen.listOfN(kept.size, Gen.chooseNum(1, 5))
+      seen <- Gen.listOfN(kept.size, genDate)
+    } yield (draws.flatten, kept.zip(arrival).sortBy(_._2).map(_._1)
+      .zip(gaps.scanLeft(0)(_ + _).tail).zip(seen)
+      .map { case ((n, key), last) => n -> (key, last) }.toMap)
+  }
+
+  test("the driver dim builders equal the Spark dims plan and its keep-keys rule (random draws)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.expressions.Window
+    import scala.jdk.CollectionConverters._
+    // the reference form: the dims as Spark expressions over the union
+    // of a batch's transform read back from parquet and the stored dims,
+    // every input column nullable, as a load's inputs are
+    def sparkDimDate(in: DataFrame): DataFrame = {
+      val d = col("full_date")
+      val dayName = when(dayofweek(d) === 1, "Chủ nhật")
+        .otherwise(concat(lit("Thứ "), dayofweek(d).cast("string")))
+      in.select(d, col("is_weekend")).distinct().select(
+        date_format(d, "yyyyMMdd").cast("int").as("date_key"), d.as("full_date"),
+        dayofmonth(d).as("day_of_month"), month(d).as("month_of_year"), year(d).as("year_value"),
+        date_format(d, "yyyy-MM").as("year_month_value"), dayName.as("day_name"),
+        col("is_weekend"))
+    }
+    def sparkDimNumber(in: DataFrame): DataFrame = {
+      val byNum = in.groupBy(col("number_value").cast("string").as("number_value"))
+        .agg(max(col("full_date")).as("last_appeared_date"))
+      val n = col("number_value").cast("int")
+      byNum.select(row_number().over(Window.orderBy(n)).as("number_key"), col("number_value"),
+        when(n % 2 === 0, 1).otherwise(0).as("is_even"),
+        coalesce(n % 10, lit(0)).cast("int").as("last_digit"), col("last_appeared_date"))
+    }
+    // a kept number keeps its key; the others follow the largest kept
+    // key in numeric order
+    def keepKeys(kept: Map[String, Int], fresh: Seq[Row]): Seq[Row] = {
+      def number(r: Row) = r.getAs[String]("number_value")
+      val (old, added) = fresh.partition(r => kept.contains(number(r)))
+      val next = kept.values.maxOption.getOrElse(0) + 1
+      (old.map(r => kept(number(r)) -> r) ++
+        added.sortBy(number(_).toInt).zipWithIndex.map { case (r, i) => (next + i) -> r })
+        .sortBy(_._1).map { case (key, r) =>
+          new GenericRowWithSchema(r.toSeq.updated(0, key).toArray, r.schema): Row }
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_dims").toFile
+    try forAllSamples(genDims) { case (draws, stored) =>
+      import spark.implicits._
+      val fmt = java.time.format.DateTimeFormatter.ofPattern("dd-MM-yyyy")
+      // the batch's transform, read back from parquet as the load reads it
+      val path = s"$tmp/${java.util.UUID.randomUUID()}"
+      Lottery.transform(draws.map { case (n, d) =>
+          ("Giải Bảy", if (n < 0) n.toString else f"$n%02d", d.format(fmt), "2025-01-01T19:00:00.000Z")
+        }.toDF("prize", "number_value", "full_date", "created_at")
+        .withColumn("load_timestamp", current_timestamp()))
+        .write.parquet(path)
+      val tr = spark.read.schema(Pipeline.Schemas.transform).parquet(path)
+      val storedDims = spark.createDataFrame(stored.toSeq.map { case (n, (key, last)) =>
+        Row(key, n.toString, 0, 0, java.sql.Date.valueOf(last)) }.asJava, Pipeline.Schemas.number)
+      val wantDates = sparkDimDate(tr)
+      val wantNumbers = sparkDimNumber(tr.select(col("number_value").cast("string").as("number_value"),
+        col("full_date")).unionByName(storedDims.select(col("number_value"),
+          col("last_appeared_date").as("full_date"))))
+
+      val gotDates = Lottery.dimDateRows(draws.map(_._2))
+      assert(gotDates.head.schema === wantDates.schema)
+      assert(gotDates.map(_.toSeq) === wantDates.orderBy("date_key").collect().map(_.toSeq).toSeq)
+      val lastSeen = (draws ++ stored.map { case (n, (_, last)) => n -> last })
+        .groupMapReduce(_._1)(_._2)((a, b) => if (a.isAfter(b)) a else b)
+      val gotNumbers = Lottery.dimNumberRows(lastSeen, stored.map { case (n, (key, _)) => n -> key })
+      assert(gotNumbers.head.schema === wantNumbers.schema)
+      assert(gotNumbers.map(_.toSeq) === keepKeys(stored.map { case (n, (key, _)) => n.toString -> key },
+        wantNumbers.collect().toSeq).map(_.toSeq))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
   test("SCD2 merge: invariants hold and re-applying the same batch is a fixed point") {

@@ -18,14 +18,16 @@ class ServingHandleSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def emb = t(spark, dir, "embeddings")
 
-  private def freshRoot(name: String): java.io.File = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"), name)
-    org.apache.commons.io.FileUtils.deleteQuietly(f)
-    for (sfx <- Seq(".lock", ".retrain.tmp", ".old.rebuild"))
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(f.getParentFile, f.getName + sfx))
-    f
-  }
+  // every root and its `.lock`/`.retrain.tmp`/`.old.rebuild` siblings
+  // live in one directory of this JVM's own, so two test JVMs on one
+  // host never delete each other's roots
+  private val base = java.nio.file.Files.createTempDirectory("graft_handle").toFile
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteQuietly(base)
+    finally super.afterAll()
+
+  private def freshRoot(name: String): java.io.File = new java.io.File(base, name)
 
   test("handle probes match the per-call probe across ingest, retrain, and a changed bucket count") {
     val root = freshRoot("graft_servinghandle")

@@ -22,6 +22,14 @@ class StreamingSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  // the ANN root lives in a directory of this JVM's own, so two test
+  // JVMs on one host never delete each other's roots
+  private val tmpRoot = java.nio.file.Files.createTempDirectory("graft_stream").toFile
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot)
+    finally super.afterAll()
+
   test("windowed counts: streaming result == batch result") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -844,8 +852,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.AnnIndex
     implicit val sqlCtx = spark.sqlContext
     val emb = t(spark, dir, "embeddings")
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_annidx_stream_ingest")
+    val root = new java.io.File(tmpRoot, "graft_annidx_stream_ingest")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     try {
       AnnIndex.initIngest(emb.filter(col("vec_id") % 10 =!= 3), root.getPath)

@@ -41,12 +41,9 @@ class TransformEdgeSpec extends SparkSpec {
   }
 
   test("X6: all seven Vietnamese day names (ETLMain.java:275-285)") {
-    import spark.implicits._
     // 2025-10-06 is a Monday
-    val days = (6 to 12).map(d => f"2025-10-$d%02d").toDF("d")
-      .select(col("d").cast("date").as("d"))
-    val got = days.select(col("d"), Lottery.vietDayName(col("d")).as("n"))
-      .collect().map(r => r.getDate(0).toString -> r.getString(1)).toMap
+    val got = Lottery.dimDateRows((6 to 12).map(java.time.LocalDate.of(2025, 10, _)))
+      .map(r => r.getAs[Date]("full_date").toString -> r.getAs[String]("day_name")).toMap
     assert(got === Map(
       "2025-10-06" -> "Thứ 2", "2025-10-07" -> "Thứ 3", "2025-10-08" -> "Thứ 4",
       "2025-10-09" -> "Thứ 5", "2025-10-10" -> "Thứ 6", "2025-10-11" -> "Thứ 7",

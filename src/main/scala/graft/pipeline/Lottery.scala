@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,15 +20,15 @@ import org.apache.spark.sql.types._
   *  - argmax/argmin tie-break = lowest numeric value;
   *  - deterministic surrogate keys (numeric order, not AUTO_INCREMENT).
   *
-  * Scale posture: the whole chain is shuffle-minimal — transform is a pure
-  * map stage (no shuffle); the fact build shuffles once on date_key and
-  * once on number_key; dim joins are broadcast. The dims are small by
-  * construction (≤100 numbers, 1 row per draw day), so they are built on
-  * the driver (`dimDateRows`, `dimNumberRows`) from each draw's number
-  * and day, ≤100 distinct pairs per draw day. At 100 TB the fact write
-  * would be `partitionBy(year)` on date. `Pipeline` runs the same
-  * functions over each load's new files plus the stored rows they depend
-  * on (see `factPrize`'s `history` and `mart`'s `totals`).
+  * Scale posture: transform is a pure map stage (no shuffle), and the
+  * star schema is small by construction (≤100 numbers, 1 row per draw
+  * day, ≤100 facts per draw day), so the dims and the facts are built on
+  * the driver (`dimDateRows`, `dimNumberRows`, `factRows`) from each
+  * draw's number and day, ≤100 distinct pairs per draw day. At 100 TB
+  * the fact build would be a Spark plan written `partitionBy(year)` on
+  * date. `Pipeline` runs the same functions over each load's new files
+  * plus the stored rows they depend on (see `factRows`' `history` and
+  * `mart`'s `totals`).
   */
 object Lottery {
 
@@ -94,6 +93,9 @@ object Lottery {
       .filter(col("number_value").isNotNull && col("full_date").isNotNull)
   }
 
+  /** A day's date_key, the int yyyyMMdd (X4). */
+  def dateKey(d: LocalDate): Int = d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
+
   /** dim_date's columns, as `dimDateRows` fills them. */
   val dimDateSchema: StructType = StructType(Seq(
     StructField("date_key", IntegerType),
@@ -114,8 +116,7 @@ object Lottery {
     days.toSeq.distinct.sortBy(_.toEpochDay).map { d =>
       val dayOfWeek = d.getDayOfWeek.getValue % 7 + 1 // 1 = Sunday .. 7 = Saturday
       new GenericRowWithSchema(Array(
-        d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth,
-        java.sql.Date.valueOf(d), d.getDayOfMonth, d.getMonthValue, d.getYear,
+        dateKey(d), java.sql.Date.valueOf(d), d.getDayOfMonth, d.getMonthValue, d.getYear,
         f"${d.getYear}%04d-${d.getMonthValue}%02d",
         if (dayOfWeek == 1) "Chủ nhật" else s"Thứ $dayOfWeek",
         if (dayOfWeek == 1 || dayOfWeek == 7) 1 else 0), dimDateSchema)
@@ -154,6 +155,26 @@ object Lottery {
       }
   }
 
+  /** Each number of dim_number's rows → its number_key. */
+  def numberKeys(numberRows: Seq[Row]): Map[Int, Int] =
+    numberRows.map(r => r.getAs[String]("number_value").toInt -> r.getAs[Int]("number_key")).toMap
+
+  /** fact_prize's columns, as `factRows` fills them: the key and the two
+    * counts are never null. */
+  val factSchema: StructType = StructType(Seq(
+    StructField("date_key", IntegerType),
+    StructField("number_key", IntegerType, nullable = false),
+    StructField("occurrence_count", IntegerType, nullable = false),
+    StructField("total_draws", IntegerType, nullable = false),
+    StructField("probability_value", DecimalType(38, 10)),
+    StructField("days_since_last", IntegerType)))
+
+  /** A fact's probability_value, 1/total_draws as DECIMAL(38,10): Spark's
+    * `(1.0 / n) cast DECIMAL(38,10)`, which takes the double quotient's
+    * shortest decimal form (`Double.toString`) and rounds it half-up. */
+  private[graft] def drawProbability(totalDraws: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(1.0 / totalDraws).setScale(10, java.math.RoundingMode.HALF_UP)
+
   /** fact_prize (ETLMain.java:342-416): grain (date_key, number_key);
     * total_draws = transform rows that day (G1, the probability denominator
     * ETLMain.java:363-368); probability = 1/total_draws per draw (X11);
@@ -161,67 +182,48 @@ object Lottery {
     * occurrence_count = same-day multiplicity (A3 canonicalized: the
     * reference would double-insert; we dedupe and count).
     *
-    * `history` is (date_key, number_key) pairs for a load of new days into
-    * an existing warehouse: the facts already stored, or, when every day of
-    * `transformDf` is later than every stored day, one row per stored
-    * number at its last appearance (dim_number's `last_appeared_date`),
-    * which is all the gap needs then. The per-number gap runs over the
-    * history and `transformDf` together, and only `transformDf`'s pairs
-    * that the history lacks are emitted: the anti-join against the stored
-    * facts is a flag in the same window pass, so one read of the history
-    * serves both (over last appearances, which all precede the new days,
-    * the flag is never set). The fact grain is ≤100 rows per draw day (one
-    * per two-digit number), so the history and the new days are windowed
-    * in one partition, with no shuffle.
+    * `draws` is the transform's (number_value, day) pairs, each with its
+    * count of rows that day, and `numberKeys` maps each of its numbers to
+    * its number_key (dim_number's rows). `history` is (date_key,
+    * number_key) pairs for a load of new days into an existing warehouse:
+    * the facts already stored, or, when every day of `draws` is later than
+    * every stored day, one pair per stored number at its last appearance
+    * (dim_number's `last_appeared_date`), which is all the gap needs then.
+    * A pair's gap is the days since the latest earlier day of its number
+    * in the history or `draws`, and only the pairs the history lacks are
+    * emitted, ordered by (number_key, date_key), so that a number's facts
+    * sit together in the file and compress best. Plain driver code: ≤100
+    * facts per draw day, as the reference's row loop computes them.
     *
-    * `total_draws` counts `transformDf`'s rows of a day. So with days
-    * landed in date order, each day in one load, the facts equal those of
-    * one build over everything. A day split across two loads is the
-    * exception: the second load's total_draws counts only its own rows of
-    * that day, and its pairs already stored are not appended again. A day
-    * landed after later days gets its gap from the earlier history, while
-    * the stored fact of the number's next appearance keeps its gap.
-    * `transformDf` must hold each day's rows once: a day in two of
-    * `Pipeline`'s batches (a re-crawled file) is loaded one batch at a
-    * time, so the later batch's pairs meet the earlier one's stored facts.
-    * `dimNumberDf` (dim_number's rows) must carry every number of
-    * `transformDf`. */
-  def factPrize(transformDf: DataFrame, dimNumberDf: DataFrame,
-                history: Option[DataFrame] = None): DataFrame = {
-    val perDay = transformDf.select(
-      date_format(col("full_date"), "yyyyMMdd").cast("int").as("date_key"),
-      col("full_date"),
-      col("number_value").cast("string").as("number_value"))
-    // G1: draws per day — window keeps the row grain without a second scan.
-    val wDay = Window.partitionBy(col("date_key"))
-    val counted = perDay
-      .withColumn("total_draws", count(lit(1)).over(wDay).cast("int"))
-      .groupBy(col("date_key"), col("full_date"), col("number_value"),
-               col("total_draws"))
-      .agg(count(lit(1)).cast("int").as("occurrence_count"))
-    // J1: surrogate-key lookup — dim is ≤100 rows, always broadcast.
-    val keyed = counted
-      .join(broadcast(dimNumberDf.select(col("number_key"), col("number_value"))),
-            Seq("number_value"))
-    // W2: previous appearance of the same number, full history: the
-    // stored facts' days ride the same window, and a new pair is kept
-    // only when no stored fact has its (date_key, number_key)
-    val all = history.fold(keyed)(h => keyed.withColumn("stored", lit(false))
-      .unionByName(h.select(col("date_key"), col("number_key"),
-        to_date(col("date_key").cast("string"), "yyyyMMdd").as("full_date"),
-        lit(true).as("stored")), allowMissingColumns = true)
-      .coalesce(1))
-    val wNum = Window.partitionBy(col("number_key")).orderBy(col("full_date"))
-    val withGap = all.withColumn("days_since_last",
-      datediff(col("full_date"), lag(col("full_date"), 1).over(wNum)))
-    val wPair = Window.partitionBy(col("number_key"), col("date_key"))
-    history.fold(withGap)(_ => withGap
-        .withColumn("known", max(col("stored")).over(wPair))
-        .filter(!col("known")))
-      .select(col("date_key"), col("number_key"), col("occurrence_count"),
-        col("total_draws"),
-        (lit(1.0) / col("total_draws")).cast(DecimalType(38, 10)).as("probability_value"),
-        col("days_since_last"))
+    * `total_draws` counts `draws`' rows of a day. So with days landed in
+    * date order, each day in one load, the facts equal those of one build
+    * over everything. A day split across two loads is the exception: the
+    * second load's total_draws counts only its own rows of that day, and
+    * its pairs already stored are not appended again. A day landed after
+    * later days gets its gap from the earlier history, while the stored
+    * fact of the number's next appearance keeps its gap. `draws` must hold
+    * each day's rows once: a day in two of `Pipeline`'s batches (a
+    * re-crawled file) is loaded one batch at a time, so the later batch's
+    * pairs meet the earlier one's stored facts. */
+  def factRows(draws: Map[(Int, LocalDate), Int], numberKeys: Map[Int, Int],
+               history: Iterable[(Int, Int)]): Seq[Row] = {
+    val totals = draws.groupMapReduce(_._1._2)(_._2)(_ + _)
+    val known = history.toSet
+    // each number_key's days, history and draws together, ascending
+    val days = (history.map { case (k, n) =>
+        n -> LocalDate.of(k / 10000, k / 100 % 100, k % 100).toEpochDay } ++
+      draws.keys.map { case (v, d) => numberKeys(v) -> d.toEpochDay })
+      .groupMap(_._1)(_._2).map { case (n, ds) => n -> ds.toArray.distinct.sorted }
+    draws.toSeq.map { case ((v, d), count) => (dateKey(d), numberKeys(v), d, count) }
+      .filterNot { case (k, n, _, _) => known((k, n)) }
+      .sortBy { case (k, n, _, _) => (n, k) }
+      .map { case (k, n, d, count) =>
+        val ds = days(n)
+        val i = java.util.Arrays.binarySearch(ds, d.toEpochDay)
+        val gap = if (i > 0) Int.box((ds(i) - ds(i - 1)).toInt) else null
+        new GenericRowWithSchema(Array(k, n, count, totals(d), drawProbability(totals(d)), gap),
+          factSchema)
+      }
   }
 
   /** Each number's `total_occurrences` (number_key → the sum of its facts'
@@ -335,24 +337,25 @@ object Lottery {
 }
 
 /** The materialized-on-demand warehouse surface over lazy staging and
-  * transform DataFrames. The dims are built on the driver from one
-  * collect of the transform's distinct (number, day) pairs (≤100 per draw
-  * day), run on first use of a dim, the facts or the mart; `mart` reuses
-  * the dims' rows and collects the per-number totals, and `statistic`
-  * collects the mart. */
+  * transform DataFrames. The star schema is built on the driver from one
+  * collect of the transform's rows counted per (number, day) (≤100 per
+  * draw day), run on first use of a dim, the facts or the mart; `mart`
+  * reuses the dims' rows and collects the per-number totals, and
+  * `statistic` collects the mart. */
 final case class LotteryWarehouse(staging: DataFrame, transform: DataFrame) {
-  private lazy val draws: Seq[(Int, LocalDate)] =
-    transform.select("number_value", "full_date").distinct().collect()
-      .map(r => r.getInt(0) -> r.getDate(1).toLocalDate).toSeq
-  private lazy val dateRows = Lottery.dimDateRows(draws.map(_._2))
+  private lazy val draws: Map[(Int, LocalDate), Int] =
+    transform.groupBy("number_value", "full_date").count().collect()
+      .map(r => (r.getInt(0), r.getDate(1).toLocalDate) -> r.getLong(2).toInt).toMap
+  private lazy val dateRows = Lottery.dimDateRows(draws.keys.map(_._2))
   private lazy val numberRows = Lottery.dimNumberRows(
-    draws.groupMapReduce(_._1)(_._2)((a, b) => if (a.isAfter(b)) a else b), Map.empty)
+    draws.keys.groupMapReduce(_._1)(_._2)((a, b) => if (a.isAfter(b)) a else b), Map.empty)
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     transform.sparkSession.createDataFrame(rows.asJava, schema)
 
   lazy val dimDate: DataFrame = local(dateRows, Lottery.dimDateSchema)
   lazy val dimNumber: DataFrame = local(numberRows, Lottery.dimNumberSchema)
-  lazy val factPrize: DataFrame = Lottery.factPrize(transform, dimNumber)
+  lazy val factPrize: DataFrame =
+    local(Lottery.factRows(draws, Lottery.numberKeys(numberRows), Nil), Lottery.factSchema)
   lazy val mart: DataFrame =
     local(Lottery.mart(Lottery.occurrences(factPrize), numberRows, dateRows), Lottery.martSchema)
   lazy val statistic: DataFrame = Lottery.statistic(mart)

@@ -17,7 +17,7 @@ import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetReader, ParquetWri
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
@@ -45,25 +45,27 @@ import org.apache.spark.sql.types._
   * through its table's root, and a run that finds nothing new writes
   * nothing.
   *
-  * Spark executions per run with new files: one write each for P2 and P3,
-  * and in P4 the fact append; P4 builds both dims on the driver. A batch in
-  * order (every day of it later than every day stored before it, as a
+  * Spark executions per run with new files: one write each for P2 and P3.
+  * P4 runs none: it builds both dims and the facts on the driver. A batch
+  * in order (every day of it later than every day stored before it, as a
   * daily crawl's is) reads no stored fact: its per-number gap continues
   * from the held dim_number's last appearances. A late day takes the
-  * stored facts as its gap history. MART runs none when no day of any
-  * new batch was stored before: every row of such a batch is a new fact,
-  * so the mart's totals are the stored mart's plus the batch's rows per
-  * number. A re-crawled day makes MART recompute the totals from all the
-  * facts; so does any loaded batch the stored mart may not count
+  * stored facts' (date_key, number_key) pairs, read on the driver, as its
+  * gap history. MART runs none when no day of any new batch was stored
+  * before: every row of such a batch is a new fact, so the mart's totals
+  * are the stored mart's plus the batch's rows per number. A re-crawled
+  * day makes MART recompute the totals from all the facts, one Spark
+  * aggregate; so does any loaded batch the stored mart may not count
   * (`marted-` marks). A run with nothing new runs no Spark job: MART
   * returns the stored mart.
   *
-  * The dims and the mart are small by construction (dim_date one row per
-  * draw day, dim_number and mart ≤100 rows), so the driver builds them
-  * (`Lottery.dimDateRows`, `Lottery.dimNumberRows`), writes them
-  * (`replaceTable`) and passes them on: the next load reads the stored
-  * dims on the driver, the fact append joins the held dim_number, the
-  * mart is computed on the driver from held rows
+  * The dims, a batch's facts and the mart are small by construction
+  * (dim_date one row per draw day, ≤100 facts per draw day, dim_number and
+  * mart ≤100 rows), so the driver builds them (`Lottery.dimDateRows`,
+  * `Lottery.dimNumberRows`, `Lottery.factRows`), writes them
+  * (`replaceTable`, `writeFile`) and passes them on: the next load reads
+  * the stored dims on the driver, the facts take their keys from the held
+  * dim_number, the mart is computed on the driver from held rows
   * (`Lottery.mart`), and the returned mart is the held mart, which
   * `Serving` snapshots without a Spark job. Every re-read of a table is
   * given its declared schema (`Schemas`), so no read runs a
@@ -89,7 +91,8 @@ object Pipeline {
     * "staging"/"transform" (a batch written, not committed) and
     * "staging.committed"/"transform.committed"; "<table>.tmp" (temp file
     * written, not moved in) and "<table>.moved" (moved in, old files not
-    * yet deleted) for dim_date, dim_number and the mart; "dim_date" and
+    * yet deleted) for dim_date, dim_number and the mart; "fact_prize.tmp"
+    * (a batch's facts written, not moved in); "dim_date" and
     * "dim_number" (replaced); "fact_prize" (facts appended, batch not
     * marked loaded), "loaded" and "marted" (the mart replaced, its
     * batches not marked). Tests throw from it to crash a run there. */
@@ -163,8 +166,9 @@ object Pipeline {
     * Spark job) through java.nio in `schema`'s columns, which are ints,
     * strings, dates or decimals of more than 18 digits (which Spark writes
     * as fixed-length byte arrays). For the small tables `replaceTable`
-    * writes and a batch's transform (4 rows per draw day). Empty when
-    * there is none. */
+    * writes, a batch's transform (4 rows per draw day) and, for a late
+    * batch, the stored facts' keys (≤100 per draw day). Empty when there
+    * is none. */
   private[graft] def storedRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
     val conf = new HadoopParquetConfiguration(spark.sparkContext.hadoopConfiguration)
     def value(g: Group, f: StructField): Any =
@@ -193,7 +197,7 @@ object Pipeline {
     * nullable), declared so that a re-read runs no schema inference and a
     * run analyses no plan to learn them. Each is its stage function's
     * output schema (`PipelineOrchestrationSpec` checks it); the dims' are
-    * their driver builders' schemas. */
+    * their driver builders' schemas, and so is the facts'. */
   private[graft] object Schemas {
     private def of(fields: (String, DataType)*) =
       StructType(fields.map { case (name, t) => StructField(name, t) })
@@ -206,9 +210,10 @@ object Pipeline {
     val draws: StructType = of("number_value" -> IntegerType, "full_date" -> DateType)
     val date: StructType = Lottery.dimDateSchema
     val number: StructType = StructType(Lottery.dimNumberSchema.map(_.copy(nullable = true)))
-    val fact: StructType = of("date_key" -> IntegerType, "number_key" -> IntegerType,
-      "occurrence_count" -> IntegerType, "total_draws" -> IntegerType,
-      "probability_value" -> DecimalType(38, 10), "days_since_last" -> IntegerType)
+    val fact: StructType = StructType(Lottery.factSchema.map(_.copy(nullable = true)))
+    /** The fact columns a late batch reads on the driver as its gap
+      * history: each stored fact's (date_key, number_key). */
+    val factKeys: StructType = StructType(fact.take(2))
   }
 
   /** Spark's parquet write support for a file parquet opens itself. */
@@ -219,29 +224,28 @@ object Pipeline {
       new ParquetWriteSupport()
   }
 
-  /** Replace the table at `dir` with `rows` (small by construction), written
-    * on the driver as one parquet file through Spark's own write support:
-    * the confs `ParquetFileFormat.prepareWrite` sets and its
+  /** Write `rows` (small by construction) on the driver as the one
+    * parquet file `<stem><extension>` in `dir`, through Spark's own write
+    * support: the confs `ParquetFileFormat.prepareWrite` sets and its
     * `ParquetWriteSupport`, so types and footer are a Spark write's, and no
     * Spark job runs. The file goes through java.nio (parquet's
     * `LocalOutputFile`), not Hadoop's FileSystem, so it has no `.crc`.
-    * Returns the rows as a local relation.
+    * Returns the file's path.
     *
     * Crash-safe: the file is written under a hidden temp name in `dir` and
-    * renamed onto a fixed name, which replaces the old file atomically;
-    * only then are the table's other files deleted (old data files,
-    * checksums, `_SUCCESS`, temp files of a crashed run). So `dir` always
-    * holds a complete table. A checksum left by a Hadoop write of the same
-    * name goes before the rename: a stale one would fail the read. */
-  private def replaceTable(spark: SparkSession, dir: String, schema: StructType,
-                           rows: Seq[Row]): DataFrame = {
+    * renamed onto its name, which replaces a file of that name atomically,
+    * so the name never holds a partial file. A checksum left by a Hadoop
+    * write of the same name goes before the rename: a stale one would
+    * fail the read. */
+  private def writeFile(spark: SparkSession, dir: String, stem: String, schema: StructType,
+                        rows: Seq[Row]): java.nio.file.Path = {
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
     val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val conf = job.getConfiguration
     val table = Paths.get(dir)
     Files.createDirectories(table)
     val target = table.resolve(
-      s"part-00000${files.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID()))}")
+      s"$stem${files.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID()))}")
     val tmp = table.resolve(s".tmp-${java.util.UUID.randomUUID()}-${target.getFileName}")
 
     val writer = new RowWriter(new LocalOutputFile(tmp)).withConf(conf)
@@ -253,9 +257,18 @@ object Pipeline {
 
     Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    crashHook(s"${table.getFileName}.moved")
+    target
+  }
 
-    table.toFile.listFiles().filterNot(_.getName == target.getFileName.toString).foreach { f =>
+  /** Replace the table at `dir` with `rows`, written by `writeFile` onto a
+    * fixed name; only then are the table's other files deleted (old data
+    * files, checksums, `_SUCCESS`, temp files of a crashed run). So `dir`
+    * always holds a complete table. Returns the rows as a local relation. */
+  private def replaceTable(spark: SparkSession, dir: String, schema: StructType,
+                           rows: Seq[Row]): DataFrame = {
+    val target = writeFile(spark, dir, "part-00000", schema, rows)
+    crashHook(s"${target.getParent.getFileName}.moved")
+    target.getParent.toFile.listFiles().filterNot(_.getName == target.getFileName.toString).foreach { f =>
       require(FileUtil.fullyDelete(f), s"$dir: could not delete ${f.getName}")
     }
     spark.createDataFrame(rows.asJava, schema)
@@ -264,7 +277,7 @@ object Pipeline {
   /** One batch's load: dim_number's and dim_date's rows after it, the days
     * it added, the facts it appended and, when none of its days was stored
     * before, its transform rows per number_value. */
-  private final case class Load(numbers: Seq[Row], dates: Seq[Row], days: Int, facts: Long,
+  private final case class Load(numbers: Seq[Row], dates: Seq[Row], days: Int, facts: Int,
                                 newDayRows: Option[Map[String, Long]])
 
   /** Run the whole chain from a crawler-CSV directory into a parquet
@@ -275,7 +288,7 @@ object Pipeline {
     *
     * With files landed in date order, every table equals one build over
     * the whole drop (staging and transform up to `load_timestamp`, which
-    * records each row's first load); `Lottery.factPrize` documents the
+    * records each row's first load); `Lottery.factRows` documents the
     * cases that differ. */
   def runAll(spark: SparkSession, csvDir: String, warehouseRoot: String): DataFrame = {
     val lay = Layout(warehouseRoot)
@@ -348,8 +361,11 @@ object Pipeline {
         fresh.foreach { case (_, id) => mk.create(s"file-$pid-$id") }
         deleteTree(s"${lay.staging}/_temporary")
         // by name, also on a cold build: a file that lands after P1's
-        // listing has no marker, so it must wait for the next run
-        Lottery.staging(spark, csvDir, Some(fresh.map(_._1))).withColumn("batch", lit(pid))
+        // listing has no marker, so it must wait for the next run. The
+        // batch is a string literal, which generated code takes from its
+        // references array, so the write's classes do not change with
+        // the batch number (a long literal is inlined into the source)
+        Lottery.staging(spark, csvDir, Some(fresh.map(_._1))).withColumn("batch", lit(pid.toString))
           .write.partitionBy("batch").mode("append").parquet(lay.staging)
         crashHook("staging")
         mk = mk.mark("staged", pid)
@@ -368,7 +384,7 @@ object Pipeline {
         deleteTree(s"${lay.transform}/batch=$b")
         deleteTree(s"${lay.transform}/_temporary")
         Lottery.transform(spark.read.schema(Schemas.staging).parquet(s"${lay.staging}/batch=$b"))
-          .withColumn("batch", lit(b))
+          .withColumn("batch", lit(b.toString)) // as in P2
           .write.partitionBy("batch").mode("append").parquet(lay.transform)
         crashHook("transform")
         mk = mk.mark("transformed", b)
@@ -382,14 +398,15 @@ object Pipeline {
     // P4: the transformed batches not yet loaded, one at a time in batch
     // order, so a day that a later batch stages again (a re-crawled file)
     // meets the earlier batch's stored facts, as it does when the two
-    // batches load on separate runs. Both dims are small, so the stored
-    // ones and the batch's draws (each draw's number and day, 4 rows per
-    // draw day) are read on the driver, and the dims are rebuilt there:
-    // dim_date from the stored days and the batch's, dim_number from each
-    // number's latest draw, stored or in the batch, with the stored keys
-    // kept. The batch's days also decide whether it is in order and
+    // batches load on separate runs. The star schema is small, so the
+    // stored dims and the batch's draws (each draw's number and day, 4
+    // rows per draw day) are read on the driver, and the dims and the
+    // facts are built there: dim_date from the stored days and the
+    // batch's, dim_number from each number's latest draw, stored or in
+    // the batch, with the stored keys kept, and the facts from the batch's
+    // draws. The batch's days also decide whether it is in order and
     // whether any of them was stored, and its draws are counted per number
-    // for the mart. The fact append is the load's one Spark execution.
+    // for the mart. P4 runs no Spark job.
     //
     // A load writes dim_date, then dim_number, then the facts, and keeps
     // that order: once any of a batch's state is stored, the stored
@@ -418,31 +435,31 @@ object Pipeline {
       val lastSeen = (storedNumbers.map(r => number(r) -> day(r, "last_appeared_date")) ++
         batchRows.map(r => r.getAs[Int]("number_value") -> day(r)))
         .groupMapReduce(_._1)(_._2)((x, y) => if (x.isAfter(y)) x else y)
-      val numberRows = Lottery.dimNumberRows(lastSeen,
-        storedNumbers.map(r => number(r) -> r.getAs[Int]("number_key")).toMap)
-      val dn = replaceTable(spark, lay.dimNumber, Lottery.dimNumberSchema, numberRows)
+      val numberRows = Lottery.dimNumberRows(lastSeen, Lottery.numberKeys(storedNumbers))
+      replaceTable(spark, lay.dimNumber, Lottery.dimNumberSchema, numberRows)
       crashHook("dim_number")
       // the history of the per-number gap: in order, each stored number's
-      // last appearance; otherwise the stored facts, whose pairs already
-      // stored (a crashed load's, a re-crawled day's) are not appended
-      // again. The fact count rides the write (no second job). A batch's
-      // transform is 4 rows per draw day: one partition, so the fact
-      // build's windows run with no shuffle
+      // last appearance; otherwise the stored facts' keys, whose pairs
+      // already stored (a crashed load's, a re-crawled day's) are not
+      // appended again
       val history =
-        if (inOrder) local(spark, Schemas.number, storedNumbers).select(
-          date_format(col("last_appeared_date"), "yyyyMMdd").cast("int").as("date_key"),
-          col("number_key"))
-        else readTable(spark, lay.factPrize, Schemas.fact)
-      val appended = Observation()
-      Lottery.factPrize(spark.read.schema(Schemas.transform).parquet(s"${lay.transform}/batch=$b")
-          .coalesce(1), dn, Some(history))
-        .observe(appended, count(lit(1)).as("facts"))
-        .write.mode("append").parquet(lay.factPrize)
+        if (inOrder) storedNumbers.map(r =>
+          Lottery.dateKey(day(r, "last_appeared_date")) -> r.getAs[Int]("number_key"))
+        else storedRows(spark, lay.factPrize, Schemas.factKeys).map(r => r.getInt(0) -> r.getInt(1))
+      val facts = Lottery.factRows(
+        batchRows.groupMapReduce(r => (r.getAs[Int]("number_value"), day(r)))(_ => 1)(_ + _),
+        Lottery.numberKeys(numberRows), history)
+      // one file per batch, named after it, so writing a batch's facts
+      // twice would replace the file, not add a copy; a replay finds them
+      // in its history and writes none, as does any load with no new
+      // pair. A crashed write's temp file goes first
+      Option(new java.io.File(lay.factPrize).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(".tmp-")).foreach(f => Files.delete(f.toPath))
+      if (facts.nonEmpty) writeFile(spark, lay.factPrize, s"batch-$b", Lottery.factSchema, facts)
       crashHook("fact_prize")
       mk = mk.mark("loaded", b)
       crashHook("loaded")
-      Load(numberRows, dateRows, dateRows.size - storedDates.size,
-        appended.get("facts").asInstanceOf[Long],
+      Load(numberRows, dateRows, dateRows.size - storedDates.size, facts.size,
         Option.when(newDays)(batchRows.groupMapReduce(_.getInt(0).toString)(_ => 1L)(_ + _)))
     }
     val loads = gate("P4") { _ =>

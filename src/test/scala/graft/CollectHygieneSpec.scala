@@ -18,9 +18,10 @@ import scala.jdk.CollectionConverters._
   *   - Skew: hot-key set, `limit(maxHot)`-capped with an overflow check.
   *   - Control: config kv table (≤100 rows). The process_log is
   *     driver-written and its gates read a directory listing: no collect.
-  *   - Pipeline: none. It builds the dims on the driver from the stored
-  *     dims and the batch's draws, which it reads with parquet's own
-  *     reader (`storedRows`), and writes them and the mart there.
+  *   - Pipeline: none. It builds the dims and the facts on the driver
+  *     from the stored dims (or, for a late batch, the stored facts' keys)
+  *     and the batch's draws, which it reads with parquet's own reader
+  *     (`storedRows`), and writes them and the mart there.
   *   - Lottery: `occurrences` collects the per-number totals of the facts
   *     (one row per dim_number key the facts carry: ≤100, since
   *     dim_number has one row per distinct `number_value`, which
@@ -29,9 +30,10 @@ import scala.jdk.CollectionConverters._
   *     which `Pipeline` runs only when it recomputes the mart in full;
   *     `statistic` collects the mart (≤100 rows, one per such key) and
   *     computes the four dashboard scalars on the driver; the lazy
-  *     DataFrame warehouse of `Lottery.run` collects the transform's
-  *     distinct (number, day) pairs (≤100 per draw day) and builds both
-  *     dims from them on the driver, as `Pipeline` does.
+  *     DataFrame warehouse of `Lottery.run` collects the transform's rows
+  *     counted per (number, day), one row per pair (≤100 per draw day),
+  *     and builds both dims and the facts from them on the driver, as
+  *     `Pipeline` does.
   *   - Serving: ≤100-row serving snapshots (the API-response edge,
   *     where rows leave Spark by design): `snapshot`, and the one
   *     collect per DataFrame that feeds `start`'s routes and lookups.

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   * day (`lottery_next`: the new number 51 sorts below 78) on the 3-day
   * warehouse of the `lottery` fixture. This spec kills that load at every
   * boundary (via `Pipeline.crashHook`): on either side of the staging and
-  * transform batch commits, between a driver-written table's temp file
+  * transform batch commits, between a driver-written file's temp file
   * and its move, between the fact append and the batch's loaded mark, and
   * after it. It asserts per crash point:
   *
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.col
   *      warehouse: the same dim_number keys, dim_date, staging and
   *      transform rows (up to `load_timestamp` and the batch number), the
   *      same facts with no duplicate grain, the same mart, and one data
-  *      file per driver-written table.
+  *      file per driver-replaced table.
   *   3. NOTHING UNCOMMITTED IS LEFT: every batch on disk and every file
   *      marker belongs to a batch that passed all three stages, the mart
   *      counts every loaded batch, and no temp file or output committer
@@ -97,7 +97,7 @@ class PipelineCrashSpec extends SparkSpec {
 
   private val crashPoints = Seq("staging", "staging.committed",
     "transform", "transform.committed", "dim_date.tmp", "dim_date.moved",
-    "dim_date", "dim_number.tmp", "dim_number.moved", "dim_number", "fact_prize",
+    "dim_date", "dim_number.tmp", "dim_number.moved", "dim_number", "fact_prize.tmp", "fact_prize",
     "loaded", "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved", "marted")
 
   /** Everything on disk belongs to a committed batch: staging and
@@ -120,10 +120,12 @@ class PipelineCrashSpec extends SparkSpec {
       assert(entries.filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).toSet
         === staged, s"$dir: ${entries.sorted} after a crash at $cp")
     }
+    def listing(dir: String) = new File(dir).listFiles().map(_.getName).toSeq.sorted
     Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart).foreach { dir =>
-      val names = new File(dir).listFiles().map(_.getName).toSeq
-      assert(names.count(n => !n.startsWith(".")) === 1, s"$dir: ${names.sorted}")
-      assert(!names.exists(_.startsWith(".tmp-")), s"$dir: ${names.sorted}")
+      assert(listing(dir).count(n => !n.startsWith(".")) === 1, s"$dir: ${listing(dir)}")
+    }
+    Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart, lay(root).factPrize).foreach { dir =>
+      assert(!listing(dir).exists(_.startsWith(".tmp-")), s"$dir: ${listing(dir)}")
     }
   }
 
@@ -152,7 +154,7 @@ class PipelineCrashSpec extends SparkSpec {
     warehouse(root)
   }
 
-  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize",
+  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize.tmp", "fact_prize",
       "mart_two_digit_probability.moved"))
     test(s"crash at '$cp', then a re-crawl of the crashed batch's file: replay converges") {
       val ref = recrawledReference
@@ -163,6 +165,8 @@ class PipelineCrashSpec extends SparkSpec {
       } finally Pipeline.crashHook = _ => ()
       recrawl(dropDir)
       Pipeline.runAll(spark, dropDir.toString, root.toString)
+      assert(spark.read.parquet(lay(root).factPrize).groupBy("date_key", "number_key").count()
+        .filter(col("count") > 1).count() === 0, s"duplicate fact grain after a crash at $cp")
       val got = warehouse(root)
       assert(got.facts === ref.facts, s"facts diverged after a crash at $cp and a re-crawl")
       assert(got === ref, s"warehouse diverged after a crash at $cp and a re-crawl")

@@ -211,25 +211,29 @@ class PipelineOrchestrationSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("driver-written dim_number and mart are one parquet file each, as Spark would write it") {
+  private def dataFiles(dir: String) = new java.io.File(dir).listFiles()
+    .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+
+  /** The parquet schema and key-value metadata of the first data file in
+    * `dir`. */
+  private def footer(dir: String) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(dataFiles(dir).head.getPath), conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      (meta.getSchema, meta.getKeyValueMetaData)
+    } finally reader.close()
+  }
+
+  test("driver-written dim_number and mart are one parquet file each, as Spark would write it") {
     val csvDir = getClass.getResource("/lottery").getPath
     val base = Files.createTempDirectory("whfile")
     val lay = Pipeline.Layout(base.resolve("wh").toString)
     Pipeline.runAll(spark, csvDir, lay.root)
     val wh = Lottery.run(spark, csvDir)
-    def dataFiles(dir: String) = new java.io.File(dir).listFiles()
-      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
-    def footer(dir: String) = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(dataFiles(dir).head.getPath), conf))
-      try {
-        val meta = reader.getFooter.getFileMetaData
-        (meta.getSchema, meta.getKeyValueMetaData)
-      } finally reader.close()
-    }
     Seq((lay.dimNumber, wh.dimNumber), (lay.mart, wh.mart)).foreach { case (dir, df) =>
       val sparkWritten = base.resolve(new java.io.File(dir).getName).toString
       df.coalesce(1).write.parquet(sparkWritten)
@@ -238,6 +242,30 @@ class PipelineOrchestrationSpec extends SparkSpec {
       assert(spark.read.parquet(dir).schema === spark.read.parquet(sparkWritten).schema)
       assert(rows(spark.read.parquet(dir)) === rows(df), dir)
     }
+  }
+
+  test("a batch's facts are one driver-written file, as Spark would write them; a mixed table reads as one") {
+    val csvDir = getClass.getResource("/lottery").getPath
+    val base = Files.createTempDirectory("whfacts")
+    val lay = Pipeline.Layout(base.resolve("wh").toString)
+    Pipeline.runAll(spark, csvDir, lay.root)
+    val wh = Lottery.run(spark, csvDir)
+    val sparkWritten = base.resolve("fact_prize").toString
+    wh.factPrize.coalesce(1).write.parquet(sparkWritten)
+    // named after the batch, with no checksum or _SUCCESS beside it
+    assert(new java.io.File(lay.factPrize).list().toSeq
+      .forall(_.matches("""batch-\d+\.snappy\.parquet""")), lay.factPrize)
+    assert(dataFiles(lay.factPrize).length === 1)
+    assert(footer(lay.factPrize) === footer(sparkWritten))
+    assert(rows(spark.read.parquet(lay.factPrize)) === rows(wh.factPrize))
+    // a warehouse the Spark fact plan appended to holds files whose
+    // columns are all optional: read with no declared schema, the old
+    // file and the driver's are one table
+    spark.createDataFrame(wh.factPrize.collectAsList(), Pipeline.Schemas.fact)
+      .coalesce(1).write.mode("append").parquet(lay.factPrize)
+    assert(dataFiles(lay.factPrize).length === 2)
+    assert(orderedRows(spark.read.parquet(lay.factPrize).orderBy("date_key", "number_key")) ===
+      orderedRows(wh.factPrize.orderBy("date_key", "number_key")).flatMap(r => Seq(r, r)))
   }
 
   test("the declared read schemas are the stage functions' output schemas, read back nullable") {
@@ -254,8 +282,9 @@ class PipelineOrchestrationSpec extends SparkSpec {
     assert(numberRows.head.schema === Lottery.dimNumberSchema)
     assert(nullable(Lottery.dimDateSchema) === Pipeline.Schemas.date)
     assert(nullable(Lottery.dimNumberSchema) === Pipeline.Schemas.number)
-    val dn = spark.createDataFrame(numberRows.asJava, Lottery.dimNumberSchema)
-    assert(nullable(Lottery.factPrize(tr, dn).schema) === Pipeline.Schemas.fact)
+    val factRows = Lottery.factRows(Map((7, draws(7)) -> 1), Lottery.numberKeys(numberRows), Nil)
+    assert(factRows.head.schema === Lottery.factSchema)
+    assert(nullable(Lottery.factSchema) === Pipeline.Schemas.fact)
     assert(nullable(Lottery.staging(spark, getClass.getResource("/lottery").getPath).schema)
       === Pipeline.Schemas.staging)
   }
@@ -333,7 +362,7 @@ class PipelineOrchestrationSpec extends SparkSpec {
     assert(facts.filter(col("date_key") === 20251026).count() === 2)
   }
 
-  test("an in-order daily runAll runs 3 job-running executions and none reads fact_prize") {
+  test("an in-order daily runAll runs 2 job-running executions: none reads the transform or fact_prize") {
     val base = Files.createTempDirectory("whinorder")
     val drop = Files.createDirectories(base.resolve("drop"))
     val root = base.resolve("wh").toString
@@ -341,16 +370,16 @@ class PipelineOrchestrationSpec extends SparkSpec {
     Pipeline.runAll(spark, drop.toString, root)
     fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
     val execs = jobExecutionReads(Pipeline.runAll(spark, drop.toString, root))
-    // the P2 write (it reads the drop), the P3 write (the staging batch)
-    // and P4's fact append (the transform batch), P4's one execution:
-    // P4 builds the dims and MART the mart on the driver
+    // the P2 write (it reads the drop) and the P3 write (the staging
+    // batch): P4 builds the dims and the facts, and MART the mart, on the
+    // driver
     def reads(files: Seq[String]) = Seq("/drop/", "/staging/", "/transform/")
       .filter(dir => files.exists(_.contains(dir)))
-    assert(execs.map(reads) === Seq(Seq("/drop/"), Seq("/staging/"), Seq("/transform/")), execs)
+    assert(execs.map(reads) === Seq(Seq("/drop/"), Seq("/staging/")), execs)
     assert(!execs.exists(readsFacts), execs)
   }
 
-  test("a late day takes the fact history: only the fact append reads fact_prize; the mart is a cold build's") {
+  test("a late day takes the fact history on the driver: its facts and the mart are a cold build's") {
     val days = fixtureFiles("/lottery") ++ fixtureFiles("/lottery_next")
     val late = days.find(_.getName == "xsmb_25102025.csv").get
     val base = Files.createTempDirectory("whlatereads")
@@ -360,16 +389,19 @@ class PipelineOrchestrationSpec extends SparkSpec {
     Pipeline.runAll(spark, drop.toString, root)
     Files.copy(late.toPath, drop.resolve(late.getName))
     val execs = jobExecutionReads(Pipeline.runAll(spark, drop.toString, root))
-    // one fact_prize scan: the fact append's, beside the batch. The late
-    // day was not stored, so MART adds its rows to the stored totals
-    assert(execs.filter(readsFacts).map(_.exists(_.contains("/transform/"))) === Seq(true), execs)
+    // P4 reads the stored facts' keys on the driver. The late day was not
+    // stored, so MART adds its rows to the stored totals
+    assert(!execs.exists(f => readsFacts(f) || f.exists(_.contains("/transform/"))), execs)
     val cold = base.resolve("cold").toString
     Pipeline.runAll(spark, drop.toString, cold)
     assert(tables(root)("mart") === tables(cold)("mart"))
+    def ofDay(b: Map[Seq[Any], Int]) = b.filter(_._1.head == 20251025)
+    assert(ofDay(tables(root)("fact_prize")).nonEmpty)
+    assert(ofDay(tables(root)("fact_prize")) === ofDay(tables(cold)("fact_prize")))
   }
 
   test("an in-order day's P4 and MART read as many files on a 60-day warehouse as on a 3-day one") {
-    def landed(name: String, history: Seq[Seq[java.nio.file.Path => Unit]]): Int = {
+    def landed(name: String, history: Seq[Seq[java.nio.file.Path => Unit]]): (Int, Int) = {
       val base = Files.createTempDirectory(name)
       val drop = Files.createDirectories(base.resolve("drop"))
       val root = base.resolve("wh").toString
@@ -378,9 +410,10 @@ class PipelineOrchestrationSpec extends SparkSpec {
         Pipeline.runAll(spark, drop.toString, root)
       }
       fixtureFiles("/lottery_next").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
-      // P4 and MART are the executions that read the warehouse past staging
-      jobExecutionReads(Pipeline.runAll(spark, drop.toString, root)).flatten
-        .count(f => f.contains(s"$root/") && !f.contains("/staging/"))
+      // the job-running executions, and the files past staging they read:
+      // P4 and MART read the warehouse on the driver, so none
+      val execs = jobExecutionReads(Pipeline.runAll(spark, drop.toString, root))
+      (execs.size, execs.flatten.count(f => f.contains(s"$root/") && !f.contains("/staging/")))
     }
     val fixture = fixtureFiles("/lottery").map(f => (d: java.nio.file.Path) =>
       { Files.copy(f.toPath, d.resolve(f.getName)); () })
@@ -392,7 +425,7 @@ class PipelineOrchestrationSpec extends SparkSpec {
     })
     val small = landed("whsmall", Seq(fixture))
     val big = landed("whbig", Seq(generated.take(30), generated.drop(30), fixture))
-    assert(small > 0 && big === small)
+    assert(small === ((2, 0)) && big === small)
   }
 
   test("storedRows reads dim_date, dim_number and the mart as spark.read does, nulls included") {
@@ -447,6 +480,23 @@ class PipelineOrchestrationSpec extends SparkSpec {
     assert(jobStarts.isEmpty, s"${jobStarts.size} Spark jobs ran")
     Seq("P2", "P3", "P4", "MART").foreach(st => assert(messages(root)(st) === s"$st: nothing new", st))
     assert(rows(mart) === rows(spark.read.parquet(lay.mart)))
+  }
+
+  test("a warmed daily runAll runs at most 2 codegen compiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = Files.createTempDirectory("whcodegen")
+    val drop = Files.createDirectories(base.resolve("drop"))
+    val root = base.resolve("wh").toString
+    fixtureFiles("/lottery").foreach(f => Files.copy(f.toPath, drop.resolve(f.getName)))
+    Pipeline.runAll(spark, drop.toString, root)
+    // the first two days warm the codegen cache; the third is counted
+    val compiled = (1 to 3).map { i =>
+      writeDay(drop, java.time.LocalDate.of(2025, 10, 26).plusDays(i), Seq("09", f"${i * 17}%02d", "78", "51"))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Pipeline.runAll(spark, drop.toString, root)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiled.last <= 2, s"codegen compiles per daily runAll: $compiled")
   }
 
   test("each stage's SUCCESS row says what it did") {

@@ -166,6 +166,130 @@ class PropertySpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
+  /** The Spark fact plan the driver's `Lottery.factRows` replaced, kept as
+    * its reference: a window over date_key for total_draws, a broadcast
+    * join for the keys, a lag window for the gap over the history and the
+    * batch together, and a window flag dropping the pairs the history
+    * holds. */
+  private def sparkFactPrize(transformDf: org.apache.spark.sql.DataFrame,
+                             dimNumberDf: org.apache.spark.sql.DataFrame,
+                             history: Option[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.DecimalType
+    val perDay = transformDf.select(
+      date_format(col("full_date"), "yyyyMMdd").cast("int").as("date_key"),
+      col("full_date"),
+      col("number_value").cast("string").as("number_value"))
+    val wDay = Window.partitionBy(col("date_key"))
+    val counted = perDay
+      .withColumn("total_draws", count(lit(1)).over(wDay).cast("int"))
+      .groupBy(col("date_key"), col("full_date"), col("number_value"),
+               col("total_draws"))
+      .agg(count(lit(1)).cast("int").as("occurrence_count"))
+    val keyed = counted
+      .join(broadcast(dimNumberDf.select(col("number_key"), col("number_value"))),
+            Seq("number_value"))
+    val all = history.fold(keyed)(h => keyed.withColumn("stored", lit(false))
+      .unionByName(h.select(col("date_key"), col("number_key"),
+        to_date(col("date_key").cast("string"), "yyyyMMdd").as("full_date"),
+        lit(true).as("stored")), allowMissingColumns = true)
+      .coalesce(1))
+    val wNum = Window.partitionBy(col("number_key")).orderBy(col("full_date"))
+    val withGap = all.withColumn("days_since_last",
+      datediff(col("full_date"), lag(col("full_date"), 1).over(wNum)))
+    val wPair = Window.partitionBy(col("number_key"), col("date_key"))
+    history.fold(withGap)(_ => withGap
+        .withColumn("known", max(col("stored")).over(wPair))
+        .filter(!col("known")))
+      .select(col("date_key"), col("number_key"), col("occurrence_count"),
+        col("total_draws"),
+        (lit(1.0) / col("total_draws")).cast(DecimalType(38, 10)).as("probability_value"),
+        col("days_since_last"))
+  }
+
+  /** A load's inputs for the fact builder: 2-12 draw days in a 60-day
+    * span, most with 1-6 draws and one in six with 7-200, numbers in -3..16
+    * so that they repeat within and across days, each number's key (a
+    * shuffle of 1..20), and a history of stored (day, number) pairs of
+    * `kind` 0, 1 or 2: none (a cold build); one per number at a day before
+    * the first draw day (an in-order load's last appearances); or stored
+    * facts on days before, among and after the draw days plus some of the
+    * batch's own pairs (a late or replayed load). */
+  private def genFacts(kind: Int): Gen[(Seq[(Int, java.time.LocalDate)], Map[Int, Int],
+                                        Seq[(java.time.LocalDate, Int)])] = {
+    import java.time.LocalDate
+    val start = LocalDate.of(2025, 3, 1)
+    val numbers = -3 to 16
+    val genNumber = Gen.oneOf(numbers)
+    for {
+      offsets <- Gen.chooseNum(2, 12).flatMap(Gen.listOfN(_, Gen.chooseNum(0, 60)))
+      days = offsets.distinct.sorted.map(start.plusDays(_))
+      draws <- Gen.sequence[List[List[(Int, LocalDate)]], List[(Int, LocalDate)]](days.map(d =>
+        Gen.frequency(5 -> Gen.chooseNum(1, 6), 1 -> Gen.chooseNum(7, 200))
+          .flatMap(Gen.listOfN(_, genNumber)).map(_.map(_ -> d))))
+      order <- Gen.listOfN(numbers.size, Gen.chooseNum(0, 1000000))
+      lastSeen <- Gen.sequence[List[Option[(LocalDate, Int)]], Option[(LocalDate, Int)]](
+        numbers.toList.map(n => Gen.option(Gen.chooseNum(1, 30).map(k => days.head.minusDays(k) -> n))))
+      stored <- Gen.listOfN(15, Gen.zip(Gen.chooseNum(-20, 80).map(start.plusDays(_)), genNumber))
+      replayed <- Gen.someOf(draws.flatten.map(_.swap).distinct)
+    } yield {
+      val history = kind match {
+        case 0 => Nil
+        case 1 => lastSeen.flatten
+        case _ => stored ++ replayed
+      }
+      val keys = numbers.zip(order).sortBy(_._2).map(_._1).zipWithIndex.map { case (n, i) => n -> (i + 1) }
+      (draws.flatten, keys.toMap, history.distinct)
+    }
+  }
+
+  test("the driver fact builder equals the Spark fact plan (random draws, late days, replays)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types.{DecimalType, StructType}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("dd-MM-yyyy")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_facts").toFile
+    def nullable(s: StructType) = StructType(s.map(_.copy(nullable = true)))
+    var replayed = 0
+    try for (kind <- 0 to 2) forAllSamples(genFacts(kind), n = 3) { case (draws, keys, stored) =>
+      // the batch's transform, read back from parquet as P4 read it
+      val path = s"$tmp/${java.util.UUID.randomUUID()}"
+      Lottery.transform(draws.map { case (n, d) =>
+          ("Giải Bảy", if (n < 0) n.toString else f"$n%02d", d.format(fmt), "2025-01-01T19:00:00.000Z")
+        }.toDF("prize", "number_value", "full_date", "created_at")
+        .withColumn("load_timestamp", current_timestamp()))
+        .write.parquet(path)
+      val tr = spark.read.schema(Pipeline.Schemas.transform).parquet(path).coalesce(1)
+      val dn = spark.createDataFrame(Lottery.dimNumberRows(keys.map { case (n, _) =>
+          n -> java.time.LocalDate.of(2025, 1, 1) }, keys).asJava, Lottery.dimNumberSchema)
+      val history = stored.map { case (d, n) => Lottery.dateKey(d) -> keys(n) }
+      val historyDf: DataFrame = spark.createDataFrame(history.map { case (k, n) => Row(k, n) }.asJava,
+        Pipeline.Schemas.factKeys)
+      val want = sparkFactPrize(tr, dn, Some(historyDf))
+
+      val got = Lottery.factRows(draws.groupMapReduce(identity)(_ => 1)(_ + _), keys, history)
+      assert(got.map(_.toSeq) === want.orderBy("number_key", "date_key").collect().map(_.toSeq).toSeq)
+      assert(got.forall(_.schema == Lottery.factSchema))
+      // the schema a write of the plan stores: with no history it is the
+      // declared one; a history unioned in makes the plan mark every
+      // column nullable, though it never leaves the key or a count null
+      // (the rows above)
+      val written = want.queryExecution.optimizedPlan.schema
+      if (history.isEmpty) assert(written === Lottery.factSchema)
+      else assert(written === nullable(Lottery.factSchema))
+      replayed += draws.distinct.size - got.size
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+    assert(replayed > 0, "no sample's history held a pair of its batch")
+    // every total_draws a day can have in practice, and past the first
+    // exact ties at the tenth place (1/2048 = 0.00048828125): the driver's
+    // probability is Spark's double quotient cast, bit for bit
+    val sweep = (1 to 10000).toDF("n")
+      .select(col("n"), (lit(1.0) / col("n")).cast(DecimalType(38, 10)).as("p")).collect()
+    val wrong = sweep.filter(r => Lottery.drawProbability(r.getInt(0)) != r.getDecimal(1))
+    assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+  }
+
   test("SCD2 merge: invariants hold and re-applying the same batch is a fixed point") {
     import spark.implicits._
     val dim = Seq(

@@ -1,16 +1,28 @@
 package graft.pipeline
 
-import java.time.LocalDate
+import java.nio.file.Files
+import java.time.{DayOfWeek, LocalDate}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** The reference's complete warehouse pipeline (P2→P4 + mart + serving),
-  * re-expressed as one lazy DataFrame DAG (SURVEY.md §3.1 restatement).
+/** The reference's complete warehouse pipeline (P2→P4 + mart + serving):
+  * the stage functions `Pipeline` runs, each plain driver code over the
+  * rows a load holds, plus the Spark forms that stay for the oracled CSV
+  * scan, the streaming path and the tests (SURVEY.md §3.1 restatement).
   *
   * Stage semantics follow the reference exactly, except the four
   * canonicalizations documented in SURVEY §7.2:
@@ -20,15 +32,18 @@ import org.apache.spark.sql.types._
   *  - argmax/argmin tie-break = lowest numeric value;
   *  - deterministic surrogate keys (numeric order, not AUTO_INCREMENT).
   *
-  * Scale posture: transform is a pure map stage (no shuffle), and the
-  * star schema is small by construction (≤100 numbers, 1 row per draw
-  * day, ≤100 facts per draw day), so the dims and the facts are built on
-  * the driver (`dimDateRows`, `dimNumberRows`, `factRows`) from each
-  * draw's number and day, ≤100 distinct pairs per draw day. At 100 TB
-  * the fact build would be a Spark plan written `partitionBy(year)` on
-  * date. `Pipeline` runs the same functions over each load's new files
-  * plus the stored rows they depend on (see `factRows`' `history` and
-  * `mart`'s `totals`).
+  * Scale posture: a load is one crawl drop's new files (27 rows per draw
+  * day), transform is a pure map, and the star schema is small by
+  * construction (≤100 numbers, 1 row per draw day, ≤100 facts per draw
+  * day). So staging parses the new files with Spark's own CSV classes on
+  * the driver (`stagingRows`), transform maps those rows there
+  * (`transformRows`), and the dims and the facts are built there too
+  * (`dimDateRows`, `dimNumberRows`, `factRows`) from each draw's number
+  * and day. At 100 TB these would be Spark plans, the fact build written
+  * `partitionBy(year)` on date: `staging` and `transform` are the Spark
+  * forms of the first two. `Pipeline` runs the driver functions over each
+  * load's new files plus the stored rows they depend on (see `factRows`'
+  * `history` and `mart`'s `totals`).
   */
 object Lottery {
 
@@ -40,40 +55,68 @@ object Lottery {
     StructField("full_date", StringType),
     StructField("created_at", StringType)))
 
-  /** P2 staging load (StagingDW/.../CsvLoader.java:8-50): directory CSV scan,
-    * header skip, short-row drop (F3), ingest timestamp. Spark's CSV reader
-    * natively scans the directory and tolerates the crawler's UTF-8 BOM.
-    * Only `*.csv` files are parsed, the files P1's gate and the reference's
-    * S2 scan accept. A crawler file is ~1 KB, so the parser's read buffer
-    * is 4K chars, not univocity's default 1M per file (the buffer bounds
-    * one read, not a field: longer fields still parse).
-    *
-    * `only` restricts the scan to the files of those names. It is a
-    * `_metadata.file_name` filter over the directory, which prunes at
-    * file level, rather than a list of paths: Spark lists more than 32
-    * explicit paths with a Spark job of its own. The filter is left out
-    * when the directory's listing holds no other file (a first load), as
-    * it costs each row an evaluation. */
-  def staging(spark: SparkSession, csvDir: String,
-              only: Option[Seq[String]] = None): DataFrame = {
-    val drop = spark.read
-      .option("header", "true")
-      .option("encoding", "UTF-8")
-      .option("pathGlobFilter", "*.csv")
-      .option("inputBufferSize", "4096")
-      .schema(crawlSchema)
-      .csv(csvDir)
-    def listed = drop.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getName)
-    only.filterNot(names => listed.forall(names.toSet))
-      .fold(drop)(names => drop.filter(col("_metadata.file_name").isin(names: _*)))
+  /** The options of P2's CSV parse, the same for Spark's scan (`staging`)
+    * and the driver's (`stagingRows`): a header line, UTF-8, `*.csv`
+    * files only (the files P1's gate and the reference's S2 scan accept).
+    * A crawler file is ~1 KB, so the parser's read buffer is 4K chars, not
+    * univocity's default 1M per file (the buffer bounds one read, not a
+    * field: longer fields still parse). */
+  private val csvOptions = Map("header" -> "true", "encoding" -> "UTF-8",
+    "pathGlobFilter" -> "*.csv", "inputBufferSize" -> "4096")
+
+  /** staging's columns: the crawl's strings and the batch's load time,
+    * never null, as Spark's staging plan writes them. */
+  val stagingSchema: StructType =
+    crawlSchema.add(StructField("load_timestamp", TimestampType, nullable = false))
+
+  /** P2 staging load (StagingDW/.../CsvLoader.java:8-50) as a Spark plan:
+    * directory CSV scan, header skip, short-row drop (F3), ingest
+    * timestamp. Spark's CSV reader natively scans the directory and
+    * tolerates the crawler's UTF-8 BOM. `Pipeline` stages on the driver
+    * (`stagingRows`); this plan is the oracled `s2_csv_dir_scan` query's
+    * body and the tests' reference. */
+  def staging(spark: SparkSession, csvDir: String): DataFrame =
+    spark.read.options(csvOptions).schema(crawlSchema).csv(csvDir)
       .na.drop("any", Seq("prize", "number_value", "full_date"))
       .withColumn("load_timestamp", current_timestamp())
+
+  /** P2 on the driver: the rows of the crawler CSV `files`, each with
+    * `loadTimestamp`, in `stagingSchema`. Each file is parsed as Spark's
+    * CSV scan parses one (`TextInputCSVDataSource.readFile`): Hadoop's
+    * line reader (`\n`, `\r\n` or a lone `\r` ends a line, so a quoted
+    * newline splits its record; a UTF-8 BOM is skipped), the first
+    * non-blank line dropped as the header, blank lines skipped, and
+    * univocity under `staging`'s options, which null-pads a short row and
+    * truncates a long one. So the rows are `staging`'s over the same
+    * files. A row with no prize, number or date is dropped, as `staging`
+    * drops it. */
+  def stagingRows(conf: Configuration, files: Seq[java.nio.file.Path],
+                  loadTimestamp: java.sql.Timestamp): Seq[Row] = {
+    val options = new CSVOptions(csvOptions, true, SQLConf.get.sessionLocalTimeZone)
+    val parser = new UnivocityParser(crawlSchema, options)
+    files.flatMap { path =>
+      val file = PartitionedFile(InternalRow.empty, SparkPath.fromUri(path.toUri), 0, Files.size(path))
+      val lines = new HadoopFileLinesReader(file, options.lineSeparatorInRead, conf)
+      try Shims.parseCsvLines(
+          lines.map(line => new String(line.getBytes, 0, line.getLength, options.charset)), parser,
+          new CSVHeaderChecker(crawlSchema, options, s"CSV file: $path", true), crawlSchema)
+        .filterNot(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+        .map { r =>
+          val fields = (0 until 4).map(i => if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
+          new GenericRowWithSchema((fields :+ loadTimestamp).toArray[Any], stagingSchema): Row
+        }
+        .toList
+      finally lines.close()
+    }
   }
 
-  /** P3 transform (transform_staging/.../LotteryTransform.java:112-159):
-    * keep 7th-prize rows (F2), require ≥2 chars (F4), last-two-digits (X1),
-    * decile range_group (X2), dd-MM-yyyy parse (X3) with cast-null
-    * quarantine of unparseable rows (F6), weekend/parity flags (X7, X8). */
+  /** P3 transform (transform_staging/.../LotteryTransform.java:112-159)
+    * as a Spark plan: keep 7th-prize rows (F2), require ≥2 chars (F4),
+    * last-two-digits (X1), decile range_group (X2), dd-MM-yyyy parse (X3)
+    * with cast-null quarantine of unparseable rows (F6), weekend/parity
+    * flags (X7, X8). `Pipeline` transforms on the driver
+    * (`transformRows`); this plan serves the streaming HTML path and is
+    * the tests' reference. */
   def transform(stagingDf: DataFrame): DataFrame = {
     // try_-variants: ANSI mode (Spark 4 default) would otherwise throw on
     // the quarantine rows instead of null-ing them (F6 cast-null pattern).
@@ -91,6 +134,50 @@ object Lottery {
         when(n % 2 === 0, 1).otherwise(0).as("is_even"),
         col("load_timestamp"))
       .filter(col("number_value").isNotNull && col("full_date").isNotNull)
+  }
+
+  /** transform's columns, as Spark's transform plan writes them from a
+    * staging batch read back: the flags are never null. */
+  val transformSchema: StructType = StructType(Seq(
+    StructField("number_value", IntegerType),
+    StructField("full_date", DateType),
+    StructField("range_group", StringType),
+    StructField("is_weekend", IntegerType, nullable = false),
+    StructField("is_even", IntegerType, nullable = false),
+    StructField("load_timestamp", TimestampType)))
+
+  /** P3 on the driver: `transform`'s rules over staging rows, in
+    * `transformSchema`, each step the function Spark evaluates: the trim
+    * of spaces, the length in characters, the last two characters
+    * (`substring(…, -2, 2)`), the int parse of `try_cast` (null unless
+    * the whole trimmed string is an int), the date parse of
+    * `try_to_date(…, 'dd-MM-yyyy')` (Spark's timestamp formatter in the
+    * session time zone), the `lpad` of the decile bounds (which truncates
+    * "-10" to "-1") and the day of the week. Plain driver code: 4 rows per
+    * draw day. */
+  def transformRows(staging: Seq[Row]): Seq[Row] = {
+    val zone = DateTimeUtils.getZoneId(SQLConf.get.sessionLocalTimeZone)
+    val dates = TimestampFormatter("dd-MM-yyyy", zone, LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = true)
+    def trimmed(c: String, r: Row) = Option(r.getAs[String](c)).map(v => UTF8String.fromString(v).trim())
+    def orNull[T](parse: => T): Option[T] =
+      try Some(parse)
+      catch { case _: NumberFormatException | _: java.time.DateTimeException | _: java.text.ParseException => None }
+    def pad(v: Int) = UTF8String.fromString(v.toString).lpad(2, UTF8String.fromString("0")).toString
+    staging.flatMap { r =>
+      for {
+        prize <- Option(r.getAs[String]("prize")) if prize == "Giải Bảy"
+        number <- trimmed("number_value", r) if number.numChars >= 2
+        n <- orNull(number.substringSQL(-2, 2).toIntExact)
+        date <- trimmed("full_date", r)
+        day <- orNull(DateTimeUtils.microsToDays(dates.parse(date.toString), zone))
+      } yield {
+        val lo = Math.floorDiv(n, 10) * 10
+        val weekday = LocalDate.ofEpochDay(day).getDayOfWeek
+        new GenericRowWithSchema(Array(n, DateTimeUtils.toJavaDate(day), s"${pad(lo)}-${pad(lo + 9)}",
+          if (weekday == DayOfWeek.SATURDAY || weekday == DayOfWeek.SUNDAY) 1 else 0,
+          if (n % 2 == 0) 1 else 0, r.getAs[java.sql.Timestamp]("load_timestamp")), transformSchema): Row
+      }
+    }
   }
 
   /** A day's date_key, the int yyyyMMdd (X4). */

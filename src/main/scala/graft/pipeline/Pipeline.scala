@@ -20,19 +20,20 @@ import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Orchestration of the full P2→P4+mart chain (SURVEY §3.1 restatement):
-  * one SparkSession, one lazy DAG per stage, parquet between stages,
-  * process_log-style gating via Control.
+  * one SparkSession, the stages as driver functions over held rows,
+  * parquet between stages, process_log-style gating via Control.
   *
   * The reference runs four separate JVMs coordinated by polling a MySQL
   * `process_log`; here the stages are function calls, the gate survives as
   * an explicit precondition (so a failed run can be diagnosed and re-run),
-  * and every load is idempotent (anti-join upserts), so re-running after a
-  * crash is safe — the property the reference's gating exists to protect.
+  * and every load is idempotent (batch markers, and facts appended only
+  * for the pairs not stored), so re-running after a crash is safe — the
+  * property the reference's gating exists to protect.
   *
   * A run loads only what is new. The crawler files not yet staged become
   * one batch, numbered by P2's process_id: P2 stages them into
@@ -45,33 +46,38 @@ import org.apache.spark.sql.types._
   * through its table's root, and a run that finds nothing new writes
   * nothing.
   *
-  * Spark executions per run with new files: one write each for P2 and P3.
-  * P4 runs none: it builds both dims and the facts on the driver. A batch
-  * in order (every day of it later than every day stored before it, as a
-  * daily crawl's is) reads no stored fact: its per-number gap continues
-  * from the held dim_number's last appearances. A late day takes the
-  * stored facts' (date_key, number_key) pairs, read on the driver, as its
-  * gap history. MART runs none when no day of any new batch was stored
-  * before: every row of such a batch is a new fact, so the mart's totals
-  * are the stored mart's plus the batch's rows per number. A re-crawled
-  * day makes MART recompute the totals from all the facts, one Spark
-  * aggregate; so does any loaded batch the stored mart may not count
-  * (`marted-` marks). A run with nothing new runs no Spark job: MART
-  * returns the stored mart.
+  * A run with new files, in order, runs no Spark job. P2 parses the new
+  * files on the driver with Spark's own CSV classes (`Lottery.stagingRows`)
+  * and P3 maps the rows P2 holds (`Lottery.transformRows`); each writes
+  * its batch as one file. P4 builds both dims and the facts on the
+  * driver. A batch in order (every day of it later than every day stored
+  * before it, as a daily crawl's is) reads no stored fact: its per-number
+  * gap continues from the held dim_number's last appearances. A late day
+  * takes the stored facts' (date_key, number_key) pairs, read on the
+  * driver, as its gap history. MART runs none when no day of any new
+  * batch was stored before: every row of such a batch is a new fact, so
+  * the mart's totals are the stored mart's plus the batch's rows per
+  * number. A re-crawled day makes MART recompute the totals from all the
+  * facts, one Spark aggregate; so does any loaded batch the stored mart
+  * may not count (`marted-` marks). A run with nothing new returns the
+  * stored mart.
   *
-  * The dims, a batch's facts and the mart are small by construction
-  * (dim_date one row per draw day, ≤100 facts per draw day, dim_number and
-  * mart ≤100 rows), so the driver builds them (`Lottery.dimDateRows`,
-  * `Lottery.dimNumberRows`, `Lottery.factRows`), writes them
-  * (`replaceTable`, `writeFile`) and passes them on: the next load reads
-  * the stored dims on the driver, the facts take their keys from the held
+  * A load's batch (27 staging rows per draw day), the dims, a batch's
+  * facts and the mart are small by construction (dim_date one row per
+  * draw day, ≤100 facts per draw day, dim_number and mart ≤100 rows), so
+  * the driver builds them (`Lottery.stagingRows`, `Lottery.transformRows`,
+  * `Lottery.dimDateRows`, `Lottery.dimNumberRows`, `Lottery.factRows`),
+  * writes them (`writeFile`, `replaceTable`) and passes them on: P3 and
+  * P4 take the rows the stage before holds, the next load reads the
+  * stored dims on the driver, the facts take their keys from the held
   * dim_number, the mart is computed on the driver from held rows
   * (`Lottery.mart`), and the returned mart is the held mart, which
   * `Serving` snapshots without a Spark job. Every re-read of a table is
   * given its declared schema (`Schemas`), so no read runs a
-  * schema-inference job. The run log is written by the driver, one small parquet file per
-  * status row, and the gates read only the log's directory listing (see
-  * `Control.logStatus`), so bookkeeping runs no Spark job either.
+  * schema-inference job. The run log is written by the driver, one small
+  * parquet file per status row, and the gates read only the log's
+  * directory listing (see `Control.logStatus`), so bookkeeping runs no
+  * Spark job either.
   */
 object Pipeline {
 
@@ -87,15 +93,17 @@ object Pipeline {
     val batches = s"$root/_batches"
   }
 
-  /** Called at each stage's commit points and inside `replaceTable`:
-    * "staging"/"transform" (a batch written, not committed) and
-    * "staging.committed"/"transform.committed"; "<table>.tmp" (temp file
-    * written, not moved in) and "<table>.moved" (moved in, old files not
-    * yet deleted) for dim_date, dim_number and the mart; "fact_prize.tmp"
-    * (a batch's facts written, not moved in); "dim_date" and
-    * "dim_number" (replaced); "fact_prize" (facts appended, batch not
-    * marked loaded), "loaded" and "marted" (the mart replaced, its
-    * batches not marked). Tests throw from it to crash a run there. */
+  /** Called at each stage's commit points and inside `writeFile` and
+    * `replaceTable`: "staging.tmp"/"transform.tmp" (a batch's temp file
+    * written, not moved in), "staging"/"transform" (a batch written, not
+    * committed) and "staging.committed"/"transform.committed";
+    * "<table>.tmp" (temp file written, not moved in) and "<table>.moved"
+    * (moved in, old files not yet deleted) for dim_date, dim_number and
+    * the mart; "fact_prize.tmp" (a batch's facts written, not moved in);
+    * "dim_date" and "dim_number" (replaced); "fact_prize" (facts
+    * appended, batch not marked loaded), "loaded" and "marted" (the mart
+    * replaced, its batches not marked). Tests throw from it to crash a
+    * run there. */
   private[graft] var crashHook: String => Unit = _ => ()
 
   private def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
@@ -162,13 +170,14 @@ object Pipeline {
   private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** The rows of the driver-written table at `dir`, read on the driver (no
-    * Spark job) through java.nio in `schema`'s columns, which are ints,
-    * strings, dates or decimals of more than 18 digits (which Spark writes
-    * as fixed-length byte arrays). For the small tables `replaceTable`
-    * writes, a batch's transform (4 rows per draw day) and, for a late
-    * batch, the stored facts' keys (≤100 per draw day). Empty when there
-    * is none. */
+  /** The rows of the table at `dir`, read on the driver (no Spark job)
+    * through java.nio in `schema`'s columns, which are ints, strings,
+    * dates, timestamps (which Spark writes as INT96) or decimals of more
+    * than 18 digits (which Spark writes as fixed-length byte arrays). For
+    * the small tables `replaceTable` writes, a batch's staging (27 rows
+    * per draw day) or transform (4 rows per draw day) and, for a late
+    * batch, the stored facts' keys (≤100 per draw day), whether the
+    * driver or Spark wrote them. Empty when there is none. */
   private[graft] def storedRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
     val conf = new HadoopParquetConfiguration(spark.sparkContext.hadoopConfiguration)
     def value(g: Group, f: StructField): Any =
@@ -177,6 +186,11 @@ object Pipeline {
         case IntegerType => g.getInteger(f.name, 0)
         case StringType => g.getString(f.name, 0)
         case DateType => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(g.getInteger(f.name, 0)))
+        case TimestampType =>
+          // INT96: the nanoseconds of the day, then the Julian day, little-endian
+          val int96 = g.getInt96(f.name, 0).toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          val nanos = int96.getLong
+          DateTimeUtils.toJavaTimestamp(DateTimeUtils.fromJulianDay(int96.getInt, nanos))
         case t: DecimalType if t.precision > Decimal.MAX_LONG_DIGITS =>
           new java.math.BigDecimal(new java.math.BigInteger(g.getBinary(f.name, 0).getBytes), t.scale)
         case t => throw new IllegalArgumentException(s"$dir: no driver read of ${f.name}: $t")
@@ -195,22 +209,18 @@ object Pipeline {
 
   /** The tables' schemas as a file source reads them back (every column
     * nullable), declared so that a re-read runs no schema inference and a
-    * run analyses no plan to learn them. Each is its stage function's
-    * output schema (`PipelineOrchestrationSpec` checks it); the dims' are
-    * their driver builders' schemas, and so is the facts'. */
+    * run analyses no plan to learn them. Each is its driver builder's
+    * schema, read back (`PipelineOrchestrationSpec` checks it). */
   private[graft] object Schemas {
-    private def of(fields: (String, DataType)*) =
-      StructType(fields.map { case (name, t) => StructField(name, t) })
-    val staging: StructType = Lottery.crawlSchema.add("load_timestamp", TimestampType)
-    val transform: StructType = of("number_value" -> IntegerType, "full_date" -> DateType,
-      "range_group" -> StringType, "is_weekend" -> IntegerType, "is_even" -> IntegerType,
-      "load_timestamp" -> TimestampType)
+    private def nullable(s: StructType) = StructType(s.map(_.copy(nullable = true)))
+    val staging: StructType = nullable(Lottery.stagingSchema)
+    val transform: StructType = nullable(Lottery.transformSchema)
     /** The transform columns P4 reads on the driver: each draw's number
       * and day. */
-    val draws: StructType = of("number_value" -> IntegerType, "full_date" -> DateType)
+    val draws: StructType = StructType(transform.take(2))
     val date: StructType = Lottery.dimDateSchema
-    val number: StructType = StructType(Lottery.dimNumberSchema.map(_.copy(nullable = true)))
-    val fact: StructType = StructType(Lottery.factSchema.map(_.copy(nullable = true)))
+    val number: StructType = nullable(Lottery.dimNumberSchema)
+    val fact: StructType = nullable(Lottery.factSchema)
     /** The fact columns a late batch reads on the driver as its gap
       * history: each stored fact's (date_key, number_key). */
     val factKeys: StructType = StructType(fact.take(2))
@@ -253,7 +263,9 @@ object Pipeline {
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
     finally writer.close()
-    crashHook(s"${table.getFileName}.tmp")
+    // the crash point names the table, also for a batch directory
+    val name = table.getFileName.toString
+    crashHook(s"${if (name.startsWith("batch=")) table.getParent.getFileName else name}.tmp")
 
     Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
@@ -344,9 +356,11 @@ object Pipeline {
     var mk = marks(lay.batches)
 
     // P2: the drop's files whose identity no staged batch holds become one
-    // batch. A batch that never committed (a crash between its file
-    // markers and its staged marker) is deleted first, markers included.
-    gate("P2") { pid =>
+    // batch, parsed on the driver and written as one file with one
+    // load_timestamp. A batch that never committed (a crash between its
+    // file markers and its staged marker) is deleted first, markers
+    // included. The staged rows are held for P3.
+    val stagedRows = gate("P2") { pid =>
       val staged = mk.passed("staged")
       mk.files.collect { case (b, _) if !staged(b) => b }.distinct.foreach { b =>
         deleteTree(s"${lay.staging}/batch=$b")
@@ -356,41 +370,41 @@ object Pipeline {
       mk = mk.copy(files = mk.files.filter { case (b, _) => staged(b) })
       val known = mk.files.map(_._2).toSet
       val fresh = drop.filterNot { case (_, id) => known(id) }
-      if (fresh.isEmpty) ((), "nothing new")
+      if (fresh.isEmpty) (Map.empty[Long, Seq[Row]], "nothing new")
       else {
         fresh.foreach { case (_, id) => mk.create(s"file-$pid-$id") }
-        deleteTree(s"${lay.staging}/_temporary")
         // by name, also on a cold build: a file that lands after P1's
-        // listing has no marker, so it must wait for the next run. The
-        // batch is a string literal, which generated code takes from its
-        // references array, so the write's classes do not change with
-        // the batch number (a long literal is inlined into the source)
-        Lottery.staging(spark, csvDir, Some(fresh.map(_._1))).withColumn("batch", lit(pid.toString))
-          .write.partitionBy("batch").mode("append").parquet(lay.staging)
+        // listing has no marker, so it must wait for the next run
+        val rows = Lottery.stagingRows(spark.sparkContext.hadoopConfiguration,
+          fresh.map { case (name, _) => Paths.get(csvDir, name) }.sortBy(_.toString),
+          DateTimeUtils.toJavaTimestamp(DateTimeUtils.instantToMicros(java.time.Instant.now())))
+        writeFile(spark, s"${lay.staging}/batch=$pid", "part-00000", Lottery.stagingSchema, rows)
         crashHook("staging")
         mk = mk.mark("staged", pid)
         crashHook("staging.committed")
-        ((), s"batch $pid: staged ${fresh.size} files")
+        (Map(pid -> rows), s"batch $pid: staged ${fresh.size} files")
       }
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P2"),
       "P2 gate failed (StagingController.java:41-67 semantics)")
 
-    // P3: each staged batch not yet transformed, normally just P2's; a
-    // crashed transform of it is deleted first
-    gate("P3") { _ =>
+    // P3: each staged batch not yet transformed, normally just P2's, whose
+    // rows P2 holds; a batch a crashed run left is read back. Each is
+    // transformed on the driver and written as one file, replacing a
+    // crashed transform of it. The transformed rows are held for P4.
+    val transformedRows = gate("P3") { _ =>
       val pending = mk.pending("staged", "transformed")
-      pending.foreach { b =>
+      val out = pending.map { b =>
         deleteTree(s"${lay.transform}/batch=$b")
-        deleteTree(s"${lay.transform}/_temporary")
-        Lottery.transform(spark.read.schema(Schemas.staging).parquet(s"${lay.staging}/batch=$b"))
-          .withColumn("batch", lit(b.toString)) // as in P2
-          .write.partitionBy("batch").mode("append").parquet(lay.transform)
+        val rows = Lottery.transformRows(stagedRows.getOrElse(b,
+          storedRows(spark, s"${lay.staging}/batch=$b", Schemas.staging)))
+        writeFile(spark, s"${lay.transform}/batch=$b", "part-00000", Lottery.transformSchema, rows)
         crashHook("transform")
         mk = mk.mark("transformed", b)
         crashHook("transform.committed")
-      }
-      ((), if (pending.isEmpty) "nothing new" else s"transformed batches ${pending.mkString(",")}")
+        b -> rows
+      }.toMap
+      (out, if (pending.isEmpty) "nothing new" else s"transformed batches ${pending.mkString(",")}")
     }
     require(Control.lastStatusIsSuccess(spark, lay.processLog, "P3"),
       "P3 gate failed (LotteryTransform.java:26-40 semantics)")
@@ -399,14 +413,14 @@ object Pipeline {
     // order, so a day that a later batch stages again (a re-crawled file)
     // meets the earlier batch's stored facts, as it does when the two
     // batches load on separate runs. The star schema is small, so the
-    // stored dims and the batch's draws (each draw's number and day, 4
-    // rows per draw day) are read on the driver, and the dims and the
-    // facts are built there: dim_date from the stored days and the
-    // batch's, dim_number from each number's latest draw, stored or in
-    // the batch, with the stored keys kept, and the facts from the batch's
-    // draws. The batch's days also decide whether it is in order and
-    // whether any of them was stored, and its draws are counted per number
-    // for the mart. P4 runs no Spark job.
+    // stored dims are read on the driver, and so are the batch's draws
+    // (each draw's number and day, 4 rows per draw day) unless P3 holds
+    // them, and the dims and the facts are built there: dim_date from
+    // the stored days and the batch's, dim_number from each number's
+    // latest draw, stored or in the batch, with the stored keys kept, and
+    // the facts from the batch's draws. The batch's days also decide
+    // whether it is in order and whether any of them was stored, and its
+    // draws are counted per number for the mart. P4 runs no Spark job.
     //
     // A load writes dim_date, then dim_number, then the facts, and keeps
     // that order: once any of a batch's state is stored, the stored
@@ -416,7 +430,8 @@ object Pipeline {
     def load(b: Long): Load = {
       val storedDates = storedRows(spark, lay.dimDate, Schemas.date)
       val storedNumbers = storedRows(spark, lay.dimNumber, Schemas.number)
-      val batchRows = storedRows(spark, s"${lay.transform}/batch=$b", Schemas.draws)
+      val batchRows =
+        transformedRows.getOrElse(b, storedRows(spark, s"${lay.transform}/batch=$b", Schemas.draws))
       def day(r: Row, c: String = "full_date") = r.getAs[java.sql.Date](c).toLocalDate
       val storedDays = storedDates.map(day(_)).toSet
       val batchDays = batchRows.map(day(_))

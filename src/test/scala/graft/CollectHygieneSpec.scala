@@ -18,10 +18,11 @@ import scala.jdk.CollectionConverters._
   *   - Skew: hot-key set, `limit(maxHot)`-capped with an overflow check.
   *   - Control: config kv table (≤100 rows). The process_log is
   *     driver-written and its gates read a directory listing: no collect.
-  *   - Pipeline: none. It builds the dims and the facts on the driver
-  *     from the stored dims (or, for a late batch, the stored facts' keys)
-  *     and the batch's draws, which it reads with parquet's own reader
-  *     (`storedRows`), and writes them and the mart there.
+  *   - Pipeline: none. It stages and transforms a batch on the driver
+  *     (Spark's CSV classes over the new files), builds the dims and the
+  *     facts there from the stored dims (or, for a late batch, the stored
+  *     facts' keys) and the batch's draws, reading stored rows with
+  *     parquet's own reader (`storedRows`), and writes every table there.
   *   - Lottery: `occurrences` collects the per-number totals of the facts
   *     (one row per dim_number key the facts carry: ≤100, since
   *     dim_number has one row per distinct `number_value`, which

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.col
   * warehouse of the `lottery` fixture. This spec kills that load at every
   * boundary (via `Pipeline.crashHook`): on either side of the staging and
   * transform batch commits, between a driver-written file's temp file
-  * and its move, between the fact append and the batch's loaded mark, and
-  * after it. It asserts per crash point:
+  * and its move (a batch's staging and transform files included),
+  * between the fact append and the batch's loaded mark, and after it. It
+  * asserts per crash point:
   *
   *   1. THE KEYS SURVIVE: the crashed warehouse's dim_number is complete
   *      and every stored number keeps its number_key, since the facts
@@ -39,7 +40,9 @@ import org.apache.spark.sql.functions.col
   * the replay stages it again and finds two batches pending. The replay
   * must equal the never-crashed run that loads the day and then stages
   * the re-crawled file: the day's facts are appended once, not counted
-  * twice.
+  * twice. A crash before the commit (the batch's temp file written)
+  * leaves no batch, so there the replay must equal the never-crashed
+  * run of the day alone.
   */
 class PipelineCrashSpec extends SparkSpec {
 
@@ -95,8 +98,8 @@ class PipelineCrashSpec extends SparkSpec {
     warehouse(root)
   }
 
-  private val crashPoints = Seq("staging", "staging.committed",
-    "transform", "transform.committed", "dim_date.tmp", "dim_date.moved",
+  private val crashPoints = Seq("staging.tmp", "staging", "staging.committed",
+    "transform.tmp", "transform", "transform.committed", "dim_date.tmp", "dim_date.moved",
     "dim_date", "dim_number.tmp", "dim_number.moved", "dim_number", "fact_prize.tmp", "fact_prize",
     "loaded", "mart_two_digit_probability.tmp", "mart_two_digit_probability.moved", "marted")
 
@@ -124,7 +127,9 @@ class PipelineCrashSpec extends SparkSpec {
     Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart).foreach { dir =>
       assert(listing(dir).count(n => !n.startsWith(".")) === 1, s"$dir: ${listing(dir)}")
     }
-    Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart, lay(root).factPrize).foreach { dir =>
+    val batchDirs = Seq(lay(root).staging, lay(root).transform).flatMap(dir =>
+      listing(dir).filter(_.startsWith("batch=")).map(b => s"$dir/$b"))
+    (Seq(lay(root).dimDate, lay(root).dimNumber, lay(root).mart, lay(root).factPrize) ++ batchDirs).foreach { dir =>
       assert(!listing(dir).exists(_.startsWith(".tmp-")), s"$dir: ${listing(dir)}")
     }
   }
@@ -154,10 +159,12 @@ class PipelineCrashSpec extends SparkSpec {
     warehouse(root)
   }
 
-  for (cp <- Seq("staging.committed", "transform", "dim_date", "fact_prize.tmp", "fact_prize",
-      "mart_two_digit_probability.moved"))
+  for (cp <- Seq("staging.tmp", "staging.committed", "transform.tmp", "transform", "dim_date",
+      "fact_prize.tmp", "fact_prize", "mart_two_digit_probability.moved"))
     test(s"crash at '$cp', then a re-crawl of the crashed batch's file: replay converges") {
-      val ref = recrawledReference
+      // a crash before the staging commit leaves no batch: the replay
+      // stages the re-crawled file once, as a run that never crashed
+      val ref = if (cp == "staging.tmp") reference else recrawledReference
       val (root, dropDir) = (copyOfBase(s"recrawl_$cp"), copyOfDrop(s"recrawl_$cp"))
       try {
         Pipeline.crashHook = step => if (step == cp) throw new RuntimeException(s"injected@$cp")

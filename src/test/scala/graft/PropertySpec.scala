@@ -290,6 +290,113 @@ class PropertySpec extends SparkSpec {
     assert(wrong.isEmpty, wrong.take(5).mkString(", "))
   }
 
+  /** A hostile crawl drop: 1-3 `*.csv` files plus a `notes.txt` and a
+    * hidden `.x.csv` of well-formed rows, which no scan may read. A csv
+    * file is a header (with or without the crawler's BOM, after an
+    * optional blank line), then one line of each hostile kind and 0-8
+    * random lines, shuffled, each ended by `\n`, `\r\n` or a lone `\r`
+    * (the last one maybe unended). The kinds: a short row, a long row, a
+    * blank line, a quoted field holding a comma, a quoted field holding a
+    * newline (which splits the record), a 3+-digit number, a
+    * space-padded number and date, and a one-digit date. Random rows mix
+    * G7 and other prizes (one space-padded), numbers of two, one or more
+    * digits, negative, signed, tab-led, decimal, quoted or not numeric,
+    * and dates valid, one-digit, impossible or in another pattern. */
+  private val genDrop: Gen[Seq[(String, String)]] = {
+    val eol = Gen.frequency(3 -> "\n", 2 -> "\r\n", 1 -> "\r")
+    val day = for (d <- Gen.chooseNum(1, 28); m <- Gen.chooseNum(1, 12); y <- Gen.chooseNum(2024, 2026))
+      yield (d, m, y)
+    val goodDate = day.map { case (d, m, y) => f"$d%02d-$m%02d-$y" }
+    val date = Gen.frequency(6 -> goodDate, 1 -> day.map { case (d, m, y) => s"$d-$m-$y" },
+      1 -> Gen.const("31-02-2025"), 1 -> day.map { case (d, m, y) => f"$y-$m%02d-$d%02d" },
+      1 -> goodDate.map(d => s"  $d "), 1 -> goodDate.map(d => "\"" + d + "\""), 1 -> Gen.const("99-99-2025"))
+    val number = Gen.frequency(6 -> Gen.chooseNum(0, 99).map(n => f"$n%02d"),
+      1 -> Gen.chooseNum(0, 9).map(_.toString), 1 -> Gen.chooseNum(-9, -1).map(_.toString),
+      1 -> Gen.chooseNum(100, 99999).map(_.toString), 1 -> Gen.chooseNum(0, 99).map(n => f" $n%02d "),
+      1 -> Gen.oneOf("\t7", "+5", "1.5", "ab", "\"4,2\"", "\"07\""))
+    val prize = Gen.frequency(6 -> "Giải Bảy", 1 -> "Giải Sáu", 1 -> "Giải Đặc Biệt", 1 -> " Giải Bảy")
+    val created = "2025-03-01T19:05:00.000Z"
+    val row = for (p <- prize; n <- number; d <- date) yield s"$p,$n,$d,$created"
+    val kinds = Seq(
+      Gen.zip(prize, number).map { case (p, n) => s"$p,$n" },
+      row.map(_ + ",x,\"y\""),
+      Gen.const(""),
+      goodDate.map(d => s"Giải Bảy,\"4,2\",$d,$created"),
+      goodDate.map(d => s"Giải Bảy,\"4\n2\",$d,$created"),
+      Gen.zip(Gen.chooseNum(100, 99999), goodDate).map { case (n, d) => s"Giải Bảy,$n,$d,$created" },
+      Gen.zip(Gen.chooseNum(0, 99), goodDate).map { case (n, d) => f"Giải Bảy, $n%02d , $d ,$created" },
+      Gen.zip(number, day).map { case (n, (d, m, y)) => s"Giải Bảy,$n,$d-$m-$y,$created" })
+    val file = for {
+      bom <- Gen.oneOf("", "\uFEFF")
+      lead <- Gen.oneOf(Gen.const(""), eol)
+      fixed <- Gen.sequence[List[String], String](kinds)
+      extra <- Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, row))
+      order <- Gen.listOfN(fixed.size + extra.size, Gen.chooseNum(0, 1000000))
+      lines = (fixed ++ extra).zip(order).sortBy(_._2).map(_._1)
+      ends <- Gen.listOfN(lines.size + 1, eol)
+      unended <- Gen.oneOf(true, false)
+    } yield bom + lead + ("prize,number_value,full_date,created_at" +: lines).zip(ends)
+      .map { case (l, e) => l + e }.mkString.stripSuffix(if (unended) ends.last else "")
+    val wellFormed = Gen.listOfN(3, for (n <- Gen.chooseNum(0, 99); d <- goodDate)
+      yield f"Giải Bảy,$n%02d,$d,$created").map(rs => ("prize,number_value,full_date,created_at" +: rs).mkString("\n"))
+    for {
+      csvs <- Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, file))
+      notes <- wellFormed
+      hidden <- wellFormed
+    } yield csvs.zipWithIndex.map { case (f, i) => s"day$i.csv" -> f } ++
+      Seq("notes.txt" -> notes, ".x.csv" -> hidden)
+  }
+
+  test("driver staging and transform equal Spark's Lottery.staging → Lottery.transform (hostile drops)") {
+    import org.apache.spark.sql.DataFrame
+    import scala.jdk.CollectionConverters._
+    def bag(df: DataFrame) = df.drop("load_timestamp", "batch").collect().map(_.toSeq)
+      .groupBy(identity).map { case (r, rs) => r -> rs.length }
+    /** The parquet schema and key-value metadata of the one data file
+      * under `dir`. */
+    def footer(dir: String) = {
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val files = org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), Array("parquet"), true)
+        .asScala.filterNot(_.getName.startsWith(".")).toSeq
+      assert(files.size === 1, dir)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.getPath), spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData)
+      } finally reader.close()
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_hostile")
+    var (staged, transformed) = (0L, 0L)
+    try forAllSamples(genDrop, n = 6) { files =>
+      val base = java.nio.file.Files.createTempDirectory(tmp, "drop")
+      val drop = java.nio.file.Files.createDirectories(base.resolve("drop"))
+      files.foreach { case (name, text) =>
+        java.nio.file.Files.write(drop.resolve(name), text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) }
+      // Spark's P2 and P3 as the pipeline ran them: the staging scan
+      // written, read back and transformed, one file each
+      val (sparkStaging, sparkTransform) = (base.resolve("staging").toString, base.resolve("transform").toString)
+      Lottery.staging(spark, drop.toString).coalesce(1).write.parquet(sparkStaging)
+      Lottery.transform(spark.read.schema(Pipeline.Schemas.staging).parquet(sparkStaging))
+        .coalesce(1).write.parquet(sparkTransform)
+      // the driver's, in one cold runAll
+      val lay = Pipeline.Layout(base.resolve("wh").toString)
+      Pipeline.runAll(spark, drop.toString, lay.root)
+      val (stg, tr) = (spark.read.parquet(lay.staging), spark.read.parquet(lay.transform))
+      assert(bag(stg) === bag(spark.read.parquet(sparkStaging)), files)
+      assert(bag(tr) === bag(spark.read.parquet(sparkTransform)), files)
+      assert(footer(lay.staging) === footer(sparkStaging))
+      assert(footer(lay.transform) === footer(sparkTransform))
+      // one load time per batch, carried to the transform
+      assert(rows(stg.select("load_timestamp")).size === 1)
+      assert(rows(tr.select("load_timestamp")).subsetOf(rows(stg.select("load_timestamp"))))
+      staged += stg.count()
+      transformed += tr.count()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+    assert(transformed > 0 && staged > transformed, s"$staged staged, $transformed transformed")
+  }
+
   test("SCD2 merge: invariants hold and re-applying the same batch is a fixed point") {
     import spark.implicits._
     val dim = Seq(
